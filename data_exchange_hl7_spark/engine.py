@@ -1229,13 +1229,17 @@ class Engine:
                 os.path.join(self.warehouse, "_rejects", table_name(table), f"epoch={epoch}")
             )
 
-        # schema events: rare, metadata-sized -> driver applies DDL in order
-        schema_rows = [
-            r.asDict()
-            for r in accepted.filter(F.col("op").isin(*SCHEMA_OPS))
-            .select("lsn", "op", "schema_field")
-            .collect()
-        ]
+        # schema events: rare, metadata-sized -> driver applies DDL in order.
+        # The reject write has already filled the Observation, so an epoch it
+        # counts no schema event in skips the collect job.
+        schema_rows = []
+        if obs is None or obs.get["schema_changes"]:
+            schema_rows = [
+                r.asDict()
+                for r in accepted.filter(F.col("op").isin(*SCHEMA_OPS))
+                .select("lsn", "op", "schema_field")
+                .collect()
+            ]
         self._apply_schema_events(table, schema_rows)
 
         data = accepted.filter(~F.col("op").isin(*SCHEMA_OPS))

@@ -970,15 +970,25 @@ class LakeTable:
         return self.spark.createDataFrame([], st)
 
     def _read_files(
-        self, files: list[str], file_sv: int, snap: dict, extra_cols: list[str] = ()
+        self, files: list[str], file_sv: int, snap: dict, with_op: bool = False
     ) -> DataFrame:
         """Read data files written at schema version ``file_sv``, projected to
         the current schema: align columns by field ID (rename-safe), cast
-        widened types, null-fill added columns. ``extra_cols`` (e.g. __op in
-        delta files) pass through unmapped."""
+        widened types, fill added columns with their initial default.
+        ``with_op`` also passes through the ``__op`` column of delta files.
+
+        The read schema comes from the manifest, as Delta takes it from its
+        log: ``file_sv``'s fields plus ``__op string``. Planning therefore
+        opens no file and runs no schema-inference job; the physical types
+        match because ``_bucketed_writer`` casts to the manifest types."""
         cur = self.schema_fields(snap)
         old = {f["id"]: f for f in snap["schemas"][str(file_sv)]}
-        df = self.spark.read.parquet(*[os.path.join(self.data_dir, p) for p in files])
+        read = [T.StructField(o["name"], _spark_type(o["type"])) for o in old.values()]
+        if with_op:
+            read.append(T.StructField("__op", T.StringType()))
+        df = self.spark.read.schema(T.StructType(read)).parquet(
+            *[os.path.join(self.data_dir, p) for p in files]
+        )
         cols = []
         for f in cur:
             o = old.get(f["id"])
@@ -992,7 +1002,8 @@ class LakeTable:
                 )
             else:
                 cols.append(F.col(o["name"]).cast(_spark_type(f["type"])).alias(f["name"]))
-        cols += [F.col(c) for c in extra_cols]
+        if with_op:
+            cols.append(F.col("__op"))
         return df.select(*cols)
 
     @staticmethod
@@ -1239,7 +1250,9 @@ class LakeTable:
                 raise ValueError(
                     f"keys_in shares no columns with key_cols {keys}"
                 )
-            return df.join(keys_in.select(*kcols).distinct(), kcols, "left_semi")
+            # a LEFT SEMI join emits each left row at most once, so
+            # duplicate keys need no distinct (which would cost a job)
+            return df.join(keys_in.select(*kcols), kcols, "left_semi")
 
         if not deltas:
             # additive base is already folded by compact (one row per key)
@@ -1295,7 +1308,7 @@ class LakeTable:
             if not files:
                 continue
             parts.append(
-                self._read_files(files, d["schema_version"], snap, extra_cols=["__op"])
+                self._read_files(files, d["schema_version"], snap, with_op=True)
                 .withColumn("__seq", F.lit(seq))
             )
         if not parts:
@@ -1345,6 +1358,11 @@ class LakeTable:
         box-surviving base files) + the delta layers since the last
         compaction — bounded by the compaction cadence, not by table size.
 
+        Job budget: building the frame runs no Spark job (the read schema
+        comes from the manifest, so there is no inference job, and the key
+        frame is local, so no Python worker starts); collecting it runs only
+        the scan and the resolve.
+
         Returns the resolved rows (latest per key, tombstones dropped); with
         ``with_stats=True`` returns ``(df, stats)`` where stats reports the
         manifest-level file pruning so tests and operators can SEE the skip.
@@ -1357,10 +1375,16 @@ class LakeTable:
         kschema = T.StructType(
             [T.StructField(c, _spark_type(types[c])) for c in key_cols]
         )
-        kdf = self.spark.createDataFrame(keys, kschema)
-        # bucket ids for the requested keys: one metadata-sized local job
-        # (evaluates xxhash64 over len(keys) rows, no table scan)
-        brows = kdf.withColumn("__b", self._bucket_expr(snap)).collect()
+        import pyarrow as pa
+
+        # an Arrow table gives a LocalRelation: the bucket-id collect folds
+        # into it and runs on the driver, and no Python worker starts (a
+        # list of tuples would give a LogicalRDD and two jobs)
+        kdf = self.spark.createDataFrame(
+            pa.table({c: [k[i] for k in keys] for i, c in enumerate(key_cols)}),
+            kschema,
+        )
+        brows = kdf.select(self._bucket_expr(snap).alias("__b")).collect()
         buckets = sorted({r["__b"] for r in brows})
         where = [
             (c, "in", sorted({k[i] for k in keys}))
@@ -1425,7 +1449,7 @@ class LakeTable:
                 if not files:
                     continue
                 parts.append(
-                    self._read_files(files, d["schema_version"], to_snap, extra_cols=["__op"])
+                    self._read_files(files, d["schema_version"], to_snap, with_op=True)
                     .withColumnRenamed("__op", "_change_type")
                     .withColumn("_commit_snapshot", F.lit(s["snapshot_id"]))
                 )
@@ -1555,7 +1579,15 @@ class LakeTable:
         """partitionBy(__bucket) parquet writer with key-column bloom filters
         enabled — every data/delta file carries per-row-group blooms so the
         ``lookup`` point-read path can prune row groups that min/max stats
-        cannot (hash-bucketed files span the whole key range)."""
+        cannot (hash-bucketed files span the whole key range).
+
+        Columns of the current schema are cast to their manifest types:
+        ``_read_files`` reads every file with its schema version's manifest
+        schema, so a file's physical types must be the declared ones."""
+        types = {f["name"]: _spark_type(f["type"]) for f in self.schema_fields(snap)}
+        df = df.select(
+            *[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in df.columns]
+        )
         w = df.write
         for c in snap["key_cols"]:
             w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
@@ -2434,7 +2466,7 @@ class LakeTable:
             ]
             if files:
                 parts.append(
-                    self._read_files(files, d["schema_version"], snap, extra_cols=["__op"])
+                    self._read_files(files, d["schema_version"], snap, with_op=True)
                     .withColumn("__seq", F.lit(seq))
                 )
         allp = parts[0]
@@ -2821,9 +2853,9 @@ class LakeTable:
         Iceberg's ``remove_orphan_files``): every parquet file under the
         data dir referenced by NO retained snapshot manifest — a crashed
         writer's pre-commit leftovers, a discarded staged attempt — with
-        its size. Report only; deletion stays with ``expire_snapshots``
-        (which carries the CAS + in-flight-writer guards). Metadata-bounded:
-        one manifest walk + one directory listing, no data pages read."""
+        its size. Report only; ``remove_orphans`` is the deletion half
+        (age, in-flight-writer and CAS guards). Metadata-bounded: one
+        manifest walk + one directory listing, no data pages read."""
         import re as _re
 
         referenced: set[str] = set()
@@ -2876,6 +2908,12 @@ class LakeTable:
           - the ``current`` pointer is re-read immediately before deleting;
             if another committer moved it during the scan the call raises
             ``ConcurrentCommitError`` and deletes nothing.
+
+        The age guard is the protection that matters. The CAS re-read is
+        best effort: it runs once, before the delete loop, so a commit that
+        lands mid-sweep goes unseen (Iceberg's model too). Safety on a live
+        table therefore rests on the age guard plus the staging convention
+        that new writers use snapshot ids above the entry id.
 
         Metadata-bounded (one manifest walk + one directory listing — no
         data pages read). Returns ``{"removed_files": n, "removed_bytes":

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from data_exchange_hl7_spark.engine import Engine
 from data_exchange_hl7_spark.engine import table_name as _tname
 from data_exchange_hl7_spark.lake.table import LakeTable
+from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 
 MAX_SCAN_TASKS = 20_000  # upper bound on splits for one WAL scan
@@ -120,8 +121,16 @@ class MicroBatchRunner:
         self.expire_keep_last = expire_keep_last
         # forwarded to LakeTable.compact (e.g. max_delta_depth for
         # incremental maintenance, sort_cols/files_per_bucket for the
-        # sort-ordered layout that tightens stats-based file skipping)
+        # sort-ordered layout that tightens stats-based file skipping).
+        # Under txn_boundaries maintenance is consolidate_deltas, which
+        # takes max_delta_depth only: refuse the rest rather than drop it.
         self.compact_opts = compact_opts or {}
+        dropped = sorted(set(self.compact_opts) - {"max_delta_depth"})
+        if txn_boundaries and dropped:
+            raise ValueError(
+                "txn_boundaries=True maintains with consolidate_deltas, which "
+                f"takes only max_delta_depth; got compact_opts {dropped}"
+            )
 
     def run(
         self,
@@ -143,18 +152,8 @@ class MicroBatchRunner:
         # later run on the same runner (gated or not) would read the
         # previous run's count
         self.held_txns = None
-        if self.txn_boundaries and table.current_snapshot().get("mode") != "mor":
-            # CoW's _merge_cow resolves cross-epoch conflicts by arrival
-            # order, not order_col; gated epochs are sliced by apply_lsn,
-            # so a later epoch legitimately carries OLDER-lsn events (held
-            # transactions) — under CoW those would overwrite newer state.
-            # MoR resolves per-key by order_col at read time, which is
-            # arrival-order-independent, so the gate is MoR-only.
-            raise ValueError(
-                "txn_boundaries=True requires a mode='mor' table: gated "
-                "epochs can apply older-lsn events after newer ones, and "
-                "CoW merges resolve cross-epoch conflicts by arrival order"
-            )
+        if self.txn_boundaries:
+            require_mor(table)
         # unpersist on EVERY exit: the max_txn_span verification inside
         # gate_transactions raises AFTER the dim is materialized, so the
         # persist must already be under this try or each failed run pins a

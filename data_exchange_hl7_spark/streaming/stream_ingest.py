@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_exchange_hl7_spark.engine import Engine
 from data_exchange_hl7_spark.lake.table import LakeTable
+from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 
 def stream_apply(
@@ -70,6 +71,8 @@ def stream_apply(
     collide with the parent's committed epochs 0..k and no-op silently — the
     WAL window would be lost on the audit branch. A pre-existing checkpoint
     without a recorded base keeps base 0 (upgrade compatibility)."""
+    if txn_boundaries:
+        require_mor(table)
     reader = spark.readStream
     if schema:
         reader = reader.schema(schema)

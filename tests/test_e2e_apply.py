@@ -95,6 +95,48 @@ def test_metrics_and_lineage(spark, events, tmp_path):
     assert rej.filter(F.col("status") != "STRUCTURE_ERRORS").count() == 0
 
 
+def test_schema_collect_runs_only_for_ddl_epochs(spark, tmp_path, monkeypatch):
+    """The reject write's Observation counts each epoch's schema events, so
+    an epoch with none runs one job fewer: no schema-event collect. An
+    epoch carrying a SCHEMA_ADD still collects it and adds the column."""
+    sc = spark.sparkContext
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame
+    real_collect = frame_cls.collect
+
+    def spy(df):
+        # the schema-event collect is the one frame of this shape
+        if df.columns != ["lsn", "op", "schema_field"]:
+            return real_collect(df)
+        sc.setJobGroup("schema_collect", "schema-event collect")
+        try:
+            return real_collect(df)
+        finally:
+            sc.setJobGroup("", "")
+
+    def schema_collect_jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return len(sc.statusTracker().getJobIdsForGroup("schema_collect"))
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    ddl = F.col("lsn") == 300
+    ev = (
+        change_events(spark, 400)
+        .withColumn("op", F.when(ddl, F.lit("SCHEMA_ADD")).otherwise(F.col("op")))
+        .withColumn("schema_field", F.when(ddl, F.lit("attr_t")).otherwise(F.col("schema_field")))
+        .withColumn("commit", F.when(ddl, F.lit("c" * 40)).otherwise(F.col("commit")))
+    )
+    assert ev.filter(F.col("op").startswith("SCHEMA")).count() == 1
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
+    t = eng.snapshot_table("repo_files")
+    eng.apply_epoch(ev.filter(F.col("lsn") < 200), t, epoch=0)
+    assert schema_collect_jobs() == 0
+    assert "attr_t" not in t.snapshot().columns
+    eng.apply_epoch(ev.filter(F.col("lsn") >= 200), t, epoch=1)
+    assert schema_collect_jobs() >= 1
+    assert "attr_t" in t.snapshot().columns
+    assert [r["schema_changes"] for r in eng.metrics().orderBy("epoch").collect()] == [0, 1]
+
+
 def test_determinism_across_parallelism(spark, events):
     """The generator itself must be partitioning-independent (hash-derived,
     no rand()/uuid()): same rows at any repartitioning."""

@@ -60,6 +60,61 @@ def test_schema_evolution_add_rename_widen(spark, tmp_path):
     assert rows["a"]["v2"] == "1"
 
 
+def test_reads_span_schema_versions(spark, tmp_path):
+    """A resolved scan and a lookup over MoR layers written at 3+ schema
+    versions (add with an initial default, rename, widen int->bigint, drop)
+    return the same rows, before and after compaction. Each layer is read
+    with its own version's manifest schema, so an old INT32 file reads as
+    int and then widens."""
+    t = _mk(spark, tmp_path, mode="mor")
+    t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U"),
+                             ("c", "3", 3, 3, "U")]), epoch=0)
+    t.add_column("tier", "string", default="bronze")
+    t.add_column("note", "string")
+    t.merge(spark.createDataFrame(
+        [("b", "2x", 22, 4, "gold", "y", "U"), ("d", "4", 4, 5, None, "x", "U")],
+        "k string, v string, n int, lsn long, tier string, note string, __op string",
+    ), epoch=1)
+    t.rename_column("v", "v2")
+    t.widen_column("n", "bigint")
+    t.drop_column("note")
+    t.merge(spark.createDataFrame(
+        [("e", "5", 2**40, 6, "silver", "U"), ("c", None, None, 7, None, "D")],
+        "k string, v2 string, n long, lsn long, tier string, __op string",
+    ), epoch=2)
+    snap = t.current_snapshot()
+    assert len({d["schema_version"] for d in snap["deltas"]}) >= 3
+
+    want = {
+        "a": ("1", 1, "bronze"), "b": ("2x", 22, "gold"),
+        "d": ("4", 4, None), "e": ("5", 2**40, "silver"),
+    }
+
+    def rows(df):
+        assert df.columns == ["k", "v2", "n", "lsn", "tier"]
+        return {r["k"]: (r["v2"], r["n"], r["tier"]) for r in df.collect()}
+
+    for _ in ("layers", "compacted"):
+        assert rows(t.snapshot()) == want
+        assert rows(t.lookup([("a",), ("b",), ("c",), ("e",)])) == {
+            k: want[k] for k in ("a", "b", "e")
+        }
+        t.compact()
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_writes_manifest_types(spark, tmp_path, mode):
+    """A change frame whose column types differ from the manifest (n as
+    long for an int column) is cast on write, so the files read back with
+    the manifest schema."""
+    t = _mk(spark, tmp_path, mode=mode)
+    t.merge(spark.createDataFrame(
+        [("a", "1", 7, 1, "U")], "k string, v string, n long, lsn int, __op string"
+    ), epoch=0)
+    assert [tuple(r) for r in t.snapshot().collect()] == [("a", "1", 7, 1)]
+    assert [r["n"] for r in t.lookup([("a",)]).collect()] == [7]
+
+
 def test_illegal_widen_rejected(spark, tmp_path):
     t = _mk(spark, tmp_path, "t2")
     with pytest.raises(ValueError, match="illegal widen"):

@@ -224,6 +224,55 @@ def test_kmv_default_plan_builds_without_jobs(spark):
     assert n_exact > n_default  # the opt-in really is the expensive path
 
 
+def _jobs_in_group(sc, group: str, fn):
+    """Run ``fn`` under a job group; return (result, jobs it launched).
+    The listener bus is drained first, since job ids reach the status
+    tracker asynchronously."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_reads_plan_without_jobs(spark, tmp_path):
+    """Table reads take their schema from the manifest, so building a MoR
+    snapshot or lookup frame (base + one delta layer) launches no job. The
+    lookup's key frame is a LocalRelation (no Python worker), and an 8-key
+    lookup collects in at most 3 jobs: no inference, no distinct."""
+    from data_exchange_hl7_spark.lake.table import LakeTable
+    from data_exchange_hl7_spark.plans import explain_str
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("k", "string"), ("v", "string"), ("lsn", "bigint")],
+        ["k"], n_buckets=4, mode="mor", order_col="lsn",
+    )
+    cols = "k string, v string, lsn long, __op string"
+    t.merge(spark.createDataFrame([(f"k{i}", "a", i, "U") for i in range(40)], cols), epoch=0)
+    t.compact()
+    t.merge(
+        spark.createDataFrame([(f"k{i}", "b", 100 + i, "U") for i in range(0, 40, 2)], cols),
+        epoch=1,
+    )
+    snap = t.current_snapshot()
+    assert snap["buckets"] and len(snap["deltas"]) == 1
+
+    sc = spark.sparkContext
+    keys = [(f"k{i}",) for i in range(0, 16, 2)]
+    _, n_scan = _jobs_in_group(sc, "read_snapshot_build", t.snapshot)
+    df, n_lookup = _jobs_in_group(sc, "read_lookup_build", lambda: t.lookup(keys))
+    assert (n_scan, n_lookup) == (0, 0)
+
+    plan = explain_str(df, "extended")
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+    rows, n_collect = _jobs_in_group(sc, "read_lookup_collect", df.collect)
+    assert {r["k"]: r["v"] for r in rows} == {k: "b" for (k,) in keys}
+    assert n_collect <= 3, f"8-key lookup ran {n_collect} jobs"
+
+
 def test_kmeans_assignment_broadcasts_centroids(spark):
     """Lloyd's assignment must broadcast the k centroids (never shuffle the
     corpus against them) and keep the whole loop JVM-side. The trained

@@ -264,6 +264,38 @@ def test_runner_txn_boundaries_rejects_cow(spark, tmp_path):
         runner.run(visible, t)
 
 
+def test_stream_apply_txn_boundaries_rejects_cow(spark, tmp_path):
+    """stream_apply carries the runner's guard: a gated stream into a CoW
+    table is refused before the stream starts."""
+    from data_exchange_hl7_spark.streaming.stream_ingest import stream_apply
+
+    eng = Engine(spark, str(tmp_path / "cow"), n_buckets=4, mode="cow")
+    t = eng.snapshot_table("repo_files")
+    with pytest.raises(ValueError, match="mor"):
+        stream_apply(
+            spark, eng, str(tmp_path / "wal"), t, str(tmp_path / "ckpt"),
+            txn_boundaries=True,
+        )
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_runner_txn_boundaries_refuses_dropped_compact_opts(spark, tmp_path):
+    """Gated maintenance is consolidate_deltas, which takes max_delta_depth
+    only; any other compact_opts key is refused, not silently dropped."""
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    with pytest.raises(ValueError, match="sort_cols"):
+        MicroBatchRunner(
+            eng, epoch_size=50, compact_every=1, txn_boundaries=True,
+            compact_opts={"max_delta_depth": 2, "sort_cols": ["repo", "path"]},
+        )
+    MicroBatchRunner(
+        eng, epoch_size=50, compact_every=1, txn_boundaries=True,
+        compact_opts={"max_delta_depth": 2},
+    )
+    # ungated runs still forward layout options to compact()
+    MicroBatchRunner(eng, epoch_size=50, compact_opts={"sort_cols": ["repo", "path"]})
+
+
 def test_gated_maintenance_preserves_tombstones(spark, tmp_path):
     """compact_every under txn_boundaries must use tombstone-preserving
     consolidation: a held transaction's OLDER-lsn upsert that applies after
