@@ -35,7 +35,7 @@ import shutil
 import threading
 import time
 import uuid
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -227,34 +227,39 @@ class LakeTable:
         with open(path) as f:
             return json.load(f)
 
+    def _ancestors(self, snap: dict) -> Iterator[dict[str, Any]]:
+        """Yield ``snap`` and then its ancestors, newest first, following
+        parent pointers until the root or the first expired parent."""
+        s = snap
+        while True:
+            yield s
+            if s["parent"] is None:
+                return
+            parent_path = os.path.join(self.meta_dir, f"v{s['parent']:08d}.json")
+            if not os.path.exists(parent_path):
+                return
+            with open(parent_path) as f:
+                s = json.load(f)
+
     def history(self) -> list[dict[str, Any]]:
         """Snapshot lineage, newest first — the Iceberg ``table.history()``
         analogue. Walks parent pointers until the chain hits an expired
         snapshot. Each entry is metadata-only (no data read)."""
-        out = []
-        s = self.current_snapshot()
-        while True:
-            out.append(
-                {
-                    "snapshot_id": s["snapshot_id"],
-                    "parent": s["parent"],
-                    "operation": s.get("operation", "unknown"),
-                    "committed_at": s["committed_at"],
-                    "schema_version": s["schema_version"],
-                    "n_delta_layers": len(s.get("deltas", [])),
-                    # epoch keys are stringified ints: sort numerically, or
-                    # '10' orders before '2' once a table passes 9 epochs
-                    "epochs": sorted(s["properties"]["epochs"], key=int),
-                    "summary": s.get("summary"),
-                }
-            )
-            if s["parent"] is None:
-                return out
-            parent_path = os.path.join(self.meta_dir, f"v{s['parent']:08d}.json")
-            if not os.path.exists(parent_path):
-                return out
-            with open(parent_path) as f:
-                s = json.load(f)
+        return [
+            {
+                "snapshot_id": s["snapshot_id"],
+                "parent": s["parent"],
+                "operation": s.get("operation", "unknown"),
+                "committed_at": s["committed_at"],
+                "schema_version": s["schema_version"],
+                "n_delta_layers": len(s.get("deltas", [])),
+                # epoch keys are stringified ints: sort numerically, or
+                # '10' orders before '2' once a table passes 9 epochs
+                "epochs": sorted(s["properties"]["epochs"], key=int),
+                "summary": s.get("summary"),
+            }
+            for s in self._ancestors(self.current_snapshot())
+        ]
 
     # ----------------------------------------------- metadata tables
     # Iceberg exposes table metadata AS tables (`db.t.files`, `.snapshots`,
@@ -351,11 +356,11 @@ class LakeTable:
           blocks the next commit; recovery is deleting that file — the
           pointer never moved, so no committed state references it.)
         """
-        # every commit path builds its snapshot as dict(parent) + updates, so
-        # operation-specific fields would otherwise leak onto every
-        # descendant (e.g. a merge after a rollback inheriting a stale
-        # rollback_of; inert — consumers also check operation — but a lie
-        # in the manifest)
+        # _commit, the one place a child snapshot is derived, builds it as
+        # dict(parent) + updates, so operation-specific fields would
+        # otherwise leak onto every descendant (e.g. a merge after a rollback
+        # inheriting a stale rollback_of; inert — consumers also check
+        # operation — but a lie in the manifest)
         if snap.get("operation") != "rollback":
             snap.pop("rollback_of", None)
         if snap.get("operation") != "fast_forward":
@@ -400,6 +405,53 @@ class LakeTable:
             with open(tmp, "w") as f:
                 f.write(str(sid))
             os.replace(tmp, cur_path)  # atomic on POSIX
+
+    def _commit(
+        self,
+        snap: dict,
+        operation: str,
+        epoch: int | None = None,
+        epoch_info: dict | None = None,
+        publish: bool = True,
+        **updates,
+    ) -> dict:
+        """Derive the child of ``snap`` and commit it (move ``current``) or
+        stage it for audit — the one place a snapshot is built from its
+        parent. The child is ``snap`` with sid = parent + 1, ``operation``
+        and ``committed_at`` set, the ``epoch`` ledger entry (when given)
+        written into a private copy of ``properties``, then ``updates``
+        applied on top.
+
+        ``committed_at`` is set once, here, and doubles as the transaction
+        fingerprint (``lake/txn.py`` reads it from the staged file and
+        compares it after publish), so a staged child must reach
+        ``publish_staged`` byte for byte. Staged snapshots live at
+        ``_meta/staged-<token>.json`` — OUTSIDE the vN namespace, so a
+        concurrent real commit can never overwrite one.
+
+        Returns ``{"snapshot_id": sid}``, plus ``"staged": token`` when
+        ``publish=False``.
+        """
+        sid = snap["snapshot_id"] + 1
+        child = dict(snap)
+        child.update(
+            snapshot_id=sid,
+            parent=snap["snapshot_id"],
+            operation=operation,
+            committed_at=time.time(),
+        )
+        if epoch is not None:
+            props = json.loads(json.dumps(snap["properties"]))
+            props["epochs"][str(epoch)] = epoch_info or {}
+            child["properties"] = props
+        child.update(updates)
+        if publish:
+            self._write_snapshot(child, expected_parent=snap["snapshot_id"])
+            return {"snapshot_id": sid}
+        token = uuid.uuid4().hex[:12]
+        with open(os.path.join(self.meta_dir, f"staged-{token}.json"), "w") as f:
+            json.dump(child, f)
+        return {"snapshot_id": sid, "staged": token}
 
     @staticmethod
     def _referenced_files(s: dict) -> set[str]:
@@ -531,24 +583,20 @@ class LakeTable:
         target = self._load_snapshot(self._resolve_ref(ref))
         if target["snapshot_id"] == cur["snapshot_id"]:
             return {"rolled_back": False, "snapshot_id": cur["snapshot_id"]}
-        snap = dict(cur)
         props = json.loads(json.dumps(cur["properties"]))
         props["epochs"] = json.loads(json.dumps(target["properties"]["epochs"]))
-        snap.update(
-            snapshot_id=cur["snapshot_id"] + 1,
-            parent=cur["snapshot_id"],
-            operation="rollback",
+        committed = self._commit(
+            cur,
+            "rollback",
             rollback_of=target["snapshot_id"],
             buckets=json.loads(json.dumps(target["buckets"])),
             deltas=json.loads(json.dumps(target.get("deltas", []))),
             n_buckets=target["n_buckets"],
             properties=props,
-            committed_at=time.time(),
         )
-        self._write_snapshot(snap, expected_parent=cur["snapshot_id"])
         return {
             "rolled_back": True,
-            "snapshot_id": snap["snapshot_id"],
+            "snapshot_id": committed["snapshot_id"],
             "restored_snapshot": target["snapshot_id"],
         }
 
@@ -879,21 +927,6 @@ class LakeTable:
         }
 
     # ------------------------------------------------ write-audit-publish
-    def _commit_or_stage(self, snap: dict, publish: bool) -> str | None:
-        """Commit the snapshot (move ``current``) or stage it for audit.
-
-        Staged snapshots live at ``_meta/staged-<token>.json`` — OUTSIDE the
-        vN namespace, so a concurrent real commit can never overwrite one.
-        Returns the stage token when staging, None when committing.
-        """
-        if publish:
-            self._write_snapshot(snap, expected_parent=snap["parent"])
-            return None
-        token = uuid.uuid4().hex[:12]
-        with open(os.path.join(self.meta_dir, f"staged-{token}.json"), "w") as f:
-            json.dump(snap, f)
-        return token
-
     def _load_staged(self, token: str) -> dict[str, Any]:
         path = os.path.join(self.meta_dir, f"staged-{token}.json")
         if not os.path.exists(path):
@@ -923,13 +956,7 @@ class LakeTable:
         snap = self._load_staged(token)
 
         def roots(s: dict) -> set[str]:
-            out: set[str] = set()
-            for entry in s["buckets"].values():
-                out.update(f.split("/", 1)[0] for f in entry["files"])
-            for d in s.get("deltas", []):
-                for fs in d["files"].values():
-                    out.update(f.split("/", 1)[0] for f in fs)
-            return out
+            return {f.split("/", 1)[0] for f in self._referenced_files(s)}
 
         mine = roots(snap)
         live: set[str] = set()
@@ -1596,6 +1623,73 @@ class LakeTable:
             )
         return w.partitionBy("__bucket").mode("overwrite")
 
+    def _written_files(self, out_rel: str) -> dict[str, list[str]]:
+        """Index a bucketed write under ``out_rel``: {bucket: [parquet paths
+        relative to the data dir]}, one entry per ``__bucket=N`` directory.
+        A bucket whose rows all vanished has no directory, hence no entry."""
+        out_abs = os.path.join(self.data_dir, out_rel)
+        files: dict[str, list[str]] = {}
+        for d in os.listdir(out_abs):
+            if not d.startswith("__bucket="):
+                continue
+            files[d.split("=")[1]] = [
+                os.path.join(out_rel, d, f)
+                for f in os.listdir(os.path.join(out_abs, d))
+                if f.endswith(".parquet")
+            ]
+        return files
+
+    def _base_entries(self, files: dict[str, list[str]], snap: dict) -> dict[str, dict]:
+        """Base-bucket manifest entries for freshly written files, stamped
+        with the snapshot's schema version and per-file footer stats."""
+        return {
+            b: {
+                "files": fs,
+                "schema_version": snap["schema_version"],
+                "stats": self._collect_stats(fs, snap),
+            }
+            for b, fs in files.items()
+        }
+
+    def _delta_layer(self, files: dict[str, list[str]], snap: dict) -> dict:
+        """One delta-layer manifest entry for freshly written files."""
+        return {
+            "files": files,
+            "schema_version": snap["schema_version"],
+            "stats": self._collect_stats([p for fs in files.values() for p in fs], snap),
+        }
+
+    @staticmethod
+    def _dirty_buckets(deltas: list[dict], max_delta_depth: int) -> list[int]:
+        """Buckets stacked in more than ``max_delta_depth`` delta layers —
+        the rewrite set of ``compact`` and ``consolidate_deltas``."""
+        depth: dict[int, int] = {}
+        for d in deltas:
+            for b in d["files"]:
+                depth[int(b)] = depth.get(int(b), 0) + 1
+        return sorted(b for b, n in depth.items() if n > max_delta_depth)
+
+    @staticmethod
+    def _without_buckets(deltas: list[dict], dropped: set[int]) -> list[dict]:
+        """Delta layers with the ``dropped`` buckets removed; layers left
+        empty disappear. Clean buckets' delta entries survive untouched —
+        INCLUDING their per-file stats (losing them would silently disable
+        min/max pruning on every surviving delta file until that layer is
+        itself rewritten)."""
+        out = []
+        for d in deltas:
+            kept = {b: fs for b, fs in d["files"].items() if int(b) not in dropped}
+            if kept:
+                entry = {"files": kept, "schema_version": d["schema_version"]}
+                kept_paths = {p for fs in kept.values() for p in fs}
+                stats = {
+                    p: s for p, s in (d.get("stats") or {}).items() if p in kept_paths
+                }
+                if stats:
+                    entry["stats"] = stats
+                out.append(entry)
+        return out
+
     def bucket_expr(self):
         """Public storage-bucket expression — upstream stages can pre-partition
         on it so the MERGE write needs no extra shuffle."""
@@ -1609,8 +1703,10 @@ class LakeTable:
         publish: bool = True,
         enforce_constraints: bool = True,
     ) -> dict:
-        """Keyed copy-on-write MERGE (upsert + delete) — the Iceberg
-        ``MERGE INTO`` analogue, and the engine's exactly-once apply step.
+        """Keyed MERGE (upsert + delete) — the Iceberg ``MERGE INTO``
+        analogue, and the engine's exactly-once apply step. The table's
+        ``mode`` picks the write: "cow" rewrites the touched buckets, "mor"
+        appends one bucketed delta layer (see ``create``).
 
         ``enforce_constraints=False`` is for callers that already ran
         ``_enforce_check_constraints`` on this frame (``Engine.apply_epoch``
@@ -1658,7 +1754,6 @@ class LakeTable:
             if snap.get("mode") == "mor":
                 result = self._merge_mor(changes, snap, epoch, epoch_info, publish)
             else:
-                new_sid = snap["snapshot_id"] + 1
                 # persist: changes feed the bucket-list collect, the anti-join
                 # key broadcast, and the upsert union — compute the window once.
                 # When the constraint gate ran, its tagged frame is already
@@ -1674,7 +1769,7 @@ class LakeTable:
                 # not leave the cached frame pinned across retries
                 try:
                     result = self._merge_cow(
-                        changes, snap, new_sid, epoch, epoch_info, publish
+                        changes, snap, epoch, epoch_info, publish
                     )
                 finally:
                     if own_persist:
@@ -1955,7 +2050,7 @@ class LakeTable:
         return good, n_bad, tagged
 
     def _merge_cow(
-        self, changes: DataFrame, snap: dict, new_sid: int, epoch, epoch_info, publish: bool
+        self, changes: DataFrame, snap: dict, epoch, epoch_info, publish: bool
     ) -> dict:
         cur_fields = self.schema_fields(snap)
         cur_names = [f["name"] for f in cur_fields]
@@ -1967,7 +2062,11 @@ class LakeTable:
         )
         if not changed_buckets:
             # still record the epoch (empty micro-batch must advance manifest)
-            return self._commit_manifest_only(snap, new_sid, epoch, epoch_info, publish)
+            return {
+                "applied": publish,
+                "buckets_rewritten": 0,
+                **self._commit(snap, "merge", epoch, epoch_info, publish),
+            }
 
         # old rows of the touched buckets, minus keys present in the changes
         existing = {int(b): e for b, e in snap["buckets"].items()}
@@ -1998,54 +2097,25 @@ class LakeTable:
         )
 
         # write the rewritten buckets under a per-snapshot directory
-        out_rel = self._staging_rel("s", new_sid)
-        out_abs = os.path.join(self.data_dir, out_rel)
+        out_rel = self._staging_rel("s", snap["snapshot_id"] + 1)
         self._bucketed_writer(
             new_data.repartition(max(len(changed_buckets), 1), "__bucket"), snap
-        ).parquet(out_abs)
+        ).parquet(os.path.join(self.data_dir, out_rel))
 
-        # index the files that were just written, per bucket
+        written = self._written_files(out_rel)
         new_buckets = dict(snap["buckets"])
-        written = set()
-        for d in os.listdir(out_abs):
-            if not d.startswith("__bucket="):
-                continue
-            b = int(d.split("=")[1])
-            files = [
-                os.path.join(out_rel, d, f)
-                for f in os.listdir(os.path.join(out_abs, d))
-                if f.endswith(".parquet")
-            ]
-            new_buckets[str(b)] = {
-                "files": files,
-                "schema_version": snap["schema_version"],
-                "stats": self._collect_stats(files, snap),
-            }
-            written.add(b)
+        new_buckets.update(self._base_entries(written, snap))
         # changed buckets that ended up empty (all rows deleted) lose their entry
         for b in changed_buckets:
-            if b not in written:
+            if str(b) not in written:
                 new_buckets.pop(str(b), None)
-
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = new_sid
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "merge"
-        new_snap["buckets"] = new_buckets
-        props = json.loads(json.dumps(snap["properties"]))
-        if epoch is not None:
-            props["epochs"][str(epoch)] = epoch_info or {}
-        new_snap["properties"] = props
-        new_snap["committed_at"] = time.time()
-        token = self._commit_or_stage(new_snap, publish)
-        out = {
+        return {
             "applied": publish,
-            "snapshot_id": new_sid,
             "buckets_rewritten": len(changed_buckets),
+            **self._commit(
+                snap, "merge", epoch, epoch_info, publish, buckets=new_buckets
+            ),
         }
-        if token:
-            out["staged"] = token
-        return out
 
     def _merge_mor(
         self, changes: DataFrame, snap: dict, epoch, epoch_info, publish: bool = True
@@ -2055,9 +2125,7 @@ class LakeTable:
         Read-side resolution happens in ``snapshot()``; ``compact()`` folds
         deltas back into base buckets."""
         cur_names = [f["name"] for f in self.schema_fields(snap)]
-        new_sid = snap["snapshot_id"] + 1
-        out_rel = self._staging_rel("d", new_sid)
-        out_abs = os.path.join(self.data_dir, out_rel)
+        out_rel = self._staging_rel("d", snap["snapshot_id"] + 1)
         # repartition on the bucket key first: without it every upstream task
         # writes a sliver into every bucket dir (tasks x buckets tiny files);
         # with it each bucket lands in exactly one task -> one file per
@@ -2071,47 +2139,20 @@ class LakeTable:
                 .select(*cur_names, "__op", "__bucket")
                 .repartition(snap["n_buckets"], "__bucket")
             )
-        self._bucketed_writer(to_write, snap).parquet(out_abs)
-        files: dict[str, list[str]] = {}
-        n_rows = 0
-        for d in os.listdir(out_abs):
-            if not d.startswith("__bucket="):
-                continue
-            b = d.split("=")[1]
-            files[b] = [
-                os.path.join(out_rel, d, f)
-                for f in os.listdir(os.path.join(out_abs, d))
-                if f.endswith(".parquet")
-            ]
+        self._bucketed_writer(to_write, snap).parquet(
+            os.path.join(self.data_dir, out_rel)
+        )
+        files = self._written_files(out_rel)
+        out = {"applied": publish, "buckets_rewritten": 0}
         if not files:
-            return self._commit_manifest_only(snap, new_sid, epoch, epoch_info, publish)
-        all_files = [p for fs in files.values() for p in fs]
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = new_sid
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "merge"
-        new_snap["deltas"] = list(snap.get("deltas", [])) + [
-            {
-                "files": files,
-                "schema_version": snap["schema_version"],
-                "stats": self._collect_stats(all_files, snap),
-            }
-        ]
-        props = json.loads(json.dumps(snap["properties"]))
-        if epoch is not None:
-            props["epochs"][str(epoch)] = epoch_info or {}
-        new_snap["properties"] = props
-        new_snap["committed_at"] = time.time()
-        token = self._commit_or_stage(new_snap, publish)
-        out = {
-            "applied": publish,
-            "snapshot_id": new_sid,
-            "buckets_rewritten": 0,
+            # still record the epoch (empty micro-batch must advance manifest)
+            return {**out, **self._commit(snap, "merge", epoch, epoch_info, publish)}
+        deltas = list(snap.get("deltas", [])) + [self._delta_layer(files, snap)]
+        return {
+            **out,
             "delta_files": sum(len(v) for v in files.values()),
+            **self._commit(snap, "merge", epoch, epoch_info, publish, deltas=deltas),
         }
-        if token:
-            out["staged"] = token
-        return out
 
     def delete_where(
         self,
@@ -2308,14 +2349,10 @@ class LakeTable:
         if not deltas:
             return {"compacted": False, "snapshot_id": snap["snapshot_id"]}
 
-        depth: dict[int, int] = {}
-        for d in deltas:
-            for b in d["files"]:
-                depth[int(b)] = depth.get(int(b), 0) + 1
-        if max_delta_depth is None:
-            dirty = sorted(depth)  # every bucket with any delta
-        else:
-            dirty = sorted(b for b, n in depth.items() if n > max_delta_depth)
+        # None: every bucket with any delta
+        dirty = self._dirty_buckets(
+            deltas, 0 if max_delta_depth is None else max_delta_depth
+        )
         if not dirty:
             return {
                 "compacted": False,
@@ -2324,9 +2361,7 @@ class LakeTable:
             }
 
         resolved = self.snapshot(buckets=dirty)
-        new_sid = snap["snapshot_id"] + 1
-        out_rel = self._staging_rel("s", new_sid)
-        out_abs = os.path.join(self.data_dir, out_rel)
+        out_rel = self._staging_rel("s", snap["snapshot_id"] + 1)
         # z-order pays several driver-triggered jobs over `resolved` (a
         # distinct count + boundary collects PER clustered column) before the
         # final write — persist so the base+delta MoR resolution runs once,
@@ -2352,7 +2387,9 @@ class LakeTable:
                 )
             else:
                 staged = staged.repartition(max(len(dirty), 1), "__bucket")
-            self._bucketed_writer(staged, snap).parquet(out_abs)
+            self._bucketed_writer(staged, snap).parquet(
+                os.path.join(self.data_dir, out_rel)
+            )
         finally:
             if zorder_cols:
                 resolved.unpersist()
@@ -2360,48 +2397,12 @@ class LakeTable:
         buckets = {
             b: e for b, e in snap["buckets"].items() if int(b) not in dirty_set
         }
-        for d in os.listdir(out_abs):
-            if not d.startswith("__bucket="):
-                continue
-            b = d.split("=")[1]
-            cfiles = [
-                os.path.join(out_rel, d, f)
-                for f in os.listdir(os.path.join(out_abs, d))
-                if f.endswith(".parquet")
-            ]
-            buckets[b] = {
-                "files": cfiles,
-                "schema_version": snap["schema_version"],
-                "stats": self._collect_stats(cfiles, snap),
-            }
-        # drop the compacted buckets from every delta layer; clean buckets'
-        # delta entries survive untouched — INCLUDING their per-file stats
-        # (losing them would silently disable min/max pruning on every
-        # surviving delta file until that layer is itself rewritten)
-        new_deltas = []
-        for d in deltas:
-            kept_files = {
-                b: fs for b, fs in d["files"].items() if int(b) not in dirty_set
-            }
-            if kept_files:
-                entry = {"files": kept_files, "schema_version": d["schema_version"]}
-                old_stats = d.get("stats") or {}
-                kept_set = {p for fs in kept_files.values() for p in fs}
-                stats = {p: s for p, s in old_stats.items() if p in kept_set}
-                if stats:
-                    entry["stats"] = stats
-                new_deltas.append(entry)
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = new_sid
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "compact"
-        new_snap["buckets"] = buckets
-        new_snap["deltas"] = new_deltas
-        new_snap["committed_at"] = time.time()
-        self._write_snapshot(new_snap, expected_parent=snap["snapshot_id"])
+        buckets.update(self._base_entries(self._written_files(out_rel), snap))
+        new_deltas = self._without_buckets(deltas, dirty_set)
+        committed = self._commit(snap, "compact", buckets=buckets, deltas=new_deltas)
         return {
             "compacted": True,
-            "snapshot_id": new_sid,
+            "snapshot_id": committed["snapshot_id"],
             "n_buckets": len(buckets),
             "dirty_buckets": len(dirty),
             "remaining_delta_layers": len(new_deltas),
@@ -2440,12 +2441,9 @@ class LakeTable:
         deltas = snap.get("deltas", [])
         if not deltas:
             return {"consolidated": False, "snapshot_id": snap["snapshot_id"]}
-        depth: dict[int, int] = {}
-        for d in deltas:
-            for b in d["files"]:
-                depth[int(b)] = depth.get(int(b), 0) + 1
-        thr = 1 if max_delta_depth is None else max_delta_depth
-        dirty = sorted(b for b, n in depth.items() if n > thr)
+        dirty = self._dirty_buckets(
+            deltas, 1 if max_delta_depth is None else max_delta_depth
+        )
         if not dirty:
             return {
                 "consolidated": False,
@@ -2494,54 +2492,24 @@ class LakeTable:
                 .filter(F.col("__rn") == 1)  # keep D rows: the tombstones
                 .select(*names, "__op")
             )
-        new_sid = snap["snapshot_id"] + 1
-        out_rel = self._staging_rel("d", new_sid)
-        out_abs = os.path.join(self.data_dir, out_rel)
+        out_rel = self._staging_rel("d", snap["snapshot_id"] + 1)
         to_write = resolved.withColumn("__bucket", self._bucket_expr(snap)).repartition(
             max(len(dirty), 1), "__bucket"
         )
-        self._bucketed_writer(to_write, snap).parquet(out_abs)
-        files: dict[str, list[str]] = {}
-        for d in os.listdir(out_abs):
-            if not d.startswith("__bucket="):
-                continue
-            b = d.split("=")[1]
-            files[b] = [
-                os.path.join(out_rel, d, f)
-                for f in os.listdir(os.path.join(out_abs, d))
-                if f.endswith(".parquet")
-            ]
-        all_files = [p for fs in files.values() for p in fs]
+        self._bucketed_writer(to_write, snap).parquet(
+            os.path.join(self.data_dir, out_rel)
+        )
         # the consolidated layer sits at index 0: its buckets exist in NO
-        # other layer (their entries are dropped below), so relative layer
-        # order between it and the survivors can never decide a tie
+        # other layer (their entries are dropped from the survivors), so
+        # relative layer order between it and the survivors can never decide
+        # a tie
         new_deltas = [
-            {
-                "files": files,
-                "schema_version": snap["schema_version"],
-                "stats": self._collect_stats(all_files, snap),
-            }
-        ]
-        for d in deltas:
-            kept = {b: fs for b, fs in d["files"].items() if int(b) not in dirty_set}
-            if kept:
-                nd = {"files": kept, "schema_version": d["schema_version"]}
-                if "stats" in d:
-                    kept_paths = {p for fs in kept.values() for p in fs}
-                    nd["stats"] = {
-                        p: s for p, s in d["stats"].items() if p in kept_paths
-                    }
-                new_deltas.append(nd)
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = new_sid
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "consolidate"
-        new_snap["deltas"] = new_deltas
-        new_snap["committed_at"] = time.time()
-        self._write_snapshot(new_snap, expected_parent=snap["snapshot_id"])
+            self._delta_layer(self._written_files(out_rel), snap)
+        ] + self._without_buckets(deltas, dirty_set)
+        committed = self._commit(snap, "consolidate", deltas=new_deltas)
         return {
             "consolidated": True,
-            "snapshot_id": new_sid,
+            "snapshot_id": committed["snapshot_id"],
             "dirty_buckets": len(dirty),
             "remaining_delta_layers": len(new_deltas),
         }
@@ -2567,9 +2535,7 @@ class LakeTable:
             raise ValueError("new_n_buckets must be >= 1")
         snap = self.current_snapshot()
         resolved = self.snapshot()
-        new_sid = snap["snapshot_id"] + 1
-        out_rel = self._staging_rel("s", new_sid)
-        out_abs = os.path.join(self.data_dir, out_rel)
+        out_rel = self._staging_rel("s", snap["snapshot_id"] + 1)
         tmp_snap = dict(snap)
         tmp_snap["n_buckets"] = new_n_buckets
         staged = resolved.withColumn("__bucket", self._bucket_expr(tmp_snap))
@@ -2581,66 +2547,28 @@ class LakeTable:
             ).sortWithinPartitions("__bucket", *sort_cols)
         else:
             staged = staged.repartition(new_n_buckets, "__bucket")
-        self._bucketed_writer(staged, snap).parquet(out_abs)
-
-        buckets: dict[str, dict] = {}
-        for d in os.listdir(out_abs):
-            if not d.startswith("__bucket="):
-                continue
-            b = d.split("=")[1]
-            files = [
-                os.path.join(out_rel, d, f)
-                for f in os.listdir(os.path.join(out_abs, d))
-                if f.endswith(".parquet")
-            ]
-            buckets[b] = {
-                "files": files,
-                "schema_version": snap["schema_version"],
-                "stats": self._collect_stats(files, snap),
-            }
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = new_sid
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "rebucket"
-        new_snap["n_buckets"] = new_n_buckets
-        new_snap["buckets"] = buckets
-        new_snap["deltas"] = []
-        new_snap["committed_at"] = time.time()
-        self._write_snapshot(new_snap, expected_parent=snap["snapshot_id"])
+        self._bucketed_writer(staged, snap).parquet(
+            os.path.join(self.data_dir, out_rel)
+        )
+        committed = self._commit(
+            snap,
+            "rebucket",
+            n_buckets=new_n_buckets,
+            buckets=self._base_entries(self._written_files(out_rel), snap),
+            deltas=[],
+        )
         return {
             "rebucketed": True,
-            "snapshot_id": new_sid,
+            "snapshot_id": committed["snapshot_id"],
             "n_buckets": new_n_buckets,
         }
-
-    def _commit_manifest_only(self, snap, new_sid, epoch, epoch_info, publish=True) -> dict:
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = new_sid
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "merge"
-        props = json.loads(json.dumps(snap["properties"]))
-        if epoch is not None:
-            props["epochs"][str(epoch)] = epoch_info or {}
-        new_snap["properties"] = props
-        new_snap["committed_at"] = time.time()
-        token = self._commit_or_stage(new_snap, publish)
-        out = {"applied": publish, "snapshot_id": new_sid, "buckets_rewritten": 0}
-        if token:
-            out["staged"] = token
-        return out
 
     def set_properties(self, updates: dict) -> None:
         """Merge key/values into snapshot properties (new metadata snapshot)."""
         snap = self.current_snapshot()
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = snap["snapshot_id"] + 1
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "properties"
         props = json.loads(json.dumps(snap["properties"]))
         props.update(updates)
-        new_snap["properties"] = props
-        new_snap["committed_at"] = time.time()
-        self._write_snapshot(new_snap, expected_parent=snap["snapshot_id"])
+        self._commit(snap, "properties", properties=props)
 
     # ------------------------------------------------ CHECK constraints
     def check_constraints(self) -> dict[str, str]:
@@ -2721,17 +2649,13 @@ class LakeTable:
         if fields == before and next_id == snap["next_field_id"]:
             return  # idempotent re-run: don't churn a no-op snapshot
         new_sv = snap["schema_version"] + 1
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = snap["snapshot_id"] + 1
-        new_snap["parent"] = snap["snapshot_id"]
-        new_snap["operation"] = "evolve"
-        new_snap["schema_version"] = new_sv
-        schemas = dict(snap["schemas"])
-        schemas[str(new_sv)] = fields
-        new_snap["schemas"] = schemas
-        new_snap["next_field_id"] = next_id
-        new_snap["committed_at"] = time.time()
-        self._write_snapshot(new_snap, expected_parent=snap["snapshot_id"])
+        self._commit(
+            snap,
+            "evolve",
+            schema_version=new_sv,
+            schemas={**snap["schemas"], str(new_sv): fields},
+            next_field_id=next_id,
+        )
 
     def add_column(
         self, name: str, type_str: str = "string", default=None
@@ -2870,11 +2794,7 @@ class LakeTable:
                     ks = json.load(fh)
             except (json.JSONDecodeError, OSError):
                 continue  # crashed mid-stage write; roots are uuid-private
-            for entry in ks["buckets"].values():
-                referenced.update(entry["files"])
-            for d in ks.get("deltas", []):
-                for fs in d["files"].values():
-                    referenced.update(fs)
+            referenced |= self._referenced_files(ks)
         rows = []
         for root, _dirs, files in os.walk(self.data_dir):
             for fname in files:
@@ -2957,19 +2877,8 @@ class LakeTable:
                 continue
             removed_files += 1
             removed_bytes += size
-            d = os.path.dirname(abs_p)
             try:
-                if not any(
-                    f.endswith(".parquet") for f in os.listdir(d)
-                ):
-                    for fname in os.listdir(d):
-                        p = os.path.join(d, fname)
-                        if os.path.isfile(p) and (
-                            fname == "_SUCCESS" or fname.endswith(".crc")
-                        ):
-                            os.remove(p)
-                    if not os.listdir(d):
-                        os.rmdir(d)
+                self._remove_if_no_data(os.path.dirname(abs_p))
             except OSError:
                 pass  # directory raced away; harmless
         return {
@@ -3019,23 +2928,15 @@ class LakeTable:
         entry_sid = snap["snapshot_id"]
         cutoff = time.time() - older_than_s if older_than_s is not None else None
         kept_ids = []
-        s = snap
-        while True:
-            kept_ids.append(s["snapshot_id"])
-            if s["parent"] is None:
-                break
-            parent_path = os.path.join(self.meta_dir, f"v{s['parent']:08d}.json")
-            if not os.path.exists(parent_path):
-                break
-            with open(parent_path) as f:
-                parent = json.load(f)
+        for s in self._ancestors(snap):
             # ancestors are newest -> oldest, so the first one outside BOTH
-            # the count window and the age window ends the walk
+            # the count window and the age window ends the walk (the current
+            # snapshot is always kept: the count window holds at least one)
             if len(kept_ids) >= max(keep_last, 1) and not (
-                cutoff is not None and parent.get("committed_at", 0) >= cutoff
+                cutoff is not None and s.get("committed_at", 0) >= cutoff
             ):
                 break
-            s = parent
+            kept_ids.append(s["snapshot_id"])
 
         # tags pin their snapshots: metadata and files survive until dropped
         for sid in self.tags().values():
@@ -3062,11 +2963,7 @@ class LakeTable:
                 except (json.JSONDecodeError, OSError):
                     continue  # crashed mid-stage write; roots are uuid-private
         for ks in manifests:
-            for entry in ks["buckets"].values():
-                referenced.update(entry["files"])
-            for d in ks.get("deltas", []):
-                for fs in d["files"].values():
-                    referenced.update(fs)
+            referenced |= self._referenced_files(ks)
 
         # plan deletions first, then CAS-check the pointer, then delete
         expired_roots = []
@@ -3084,29 +2981,13 @@ class LakeTable:
         removed_files = 0
         for top in expired_roots:
             for root, _dirs, files in os.walk(top, topdown=False):
-                keeps_parquet = False
                 for fname in files:
                     abs_p = os.path.join(root, fname)
                     rel = os.path.relpath(abs_p, self.data_dir)
-                    if fname.endswith(".parquet"):
-                        if rel in referenced:
-                            keeps_parquet = True
-                        else:
-                            os.remove(abs_p)
-                            removed_files += 1
-                if keeps_parquet:
-                    continue
-                # no live data left at this level: sidecars (_SUCCESS, .crc)
-                # would otherwise keep the directory — and its inode — alive
-                # forever on a long-running stream
-                for fname in os.listdir(root):
-                    p = os.path.join(root, fname)
-                    if os.path.isfile(p) and (
-                        fname == "_SUCCESS" or fname.endswith(".crc")
-                    ):
-                        os.remove(p)
-                if not os.listdir(root):
-                    os.rmdir(root)
+                    if fname.endswith(".parquet") and rel not in referenced:
+                        os.remove(abs_p)
+                        removed_files += 1
+                self._remove_if_no_data(root)
 
         removed_snaps = 0
         kept = set(kept_ids)
@@ -3121,6 +3002,21 @@ class LakeTable:
             "removed_snapshots": removed_snaps,
             "removed_files": removed_files,
         }
+
+    @staticmethod
+    def _remove_if_no_data(d: str) -> None:
+        """Remove directory ``d`` once no parquet file is left in it. Its
+        sidecars (_SUCCESS, .crc) go first: they would otherwise keep the
+        directory — and its inode — alive forever on a long-running
+        stream. A directory still holding anything else is kept."""
+        if any(f.endswith(".parquet") for f in os.listdir(d)):
+            return
+        for fname in os.listdir(d):
+            p = os.path.join(d, fname)
+            if os.path.isfile(p) and (fname == "_SUCCESS" or fname.endswith(".crc")):
+                os.remove(p)
+        if not os.listdir(d):
+            os.rmdir(d)
 
     # ------------------------------------------------------------ misc
     def drop(self) -> None:

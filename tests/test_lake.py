@@ -505,14 +505,53 @@ def test_time_travel_reads_past_snapshot(spark, tmp_path):
 
 
 def test_history_lineage(spark, tmp_path):
+    """Every commit path derives its child the same way: dense snapshot ids,
+    the right operation name, one manifest key set, no operation-specific
+    field leaking onto a descendant, and a staged commit that publishes
+    with its fingerprint intact."""
     t = _mk(spark, tmp_path, "th", mode="mor")
-    t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
-    t.compact()
-    t.add_column("x")
+
+    def ch(rows):  # after add_column("x"), upserts carry every column
+        return _changes(spark, rows).withColumn("x", F.lit(None).cast("string"))
+
+    t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)  # 1
+    t.compact()  # 2
+    t.add_column("x")  # 3
+    t.merge(ch([]), epoch=1)  # 4: empty epoch still commits
+    t.merge(ch([("a", "2", 2, 2, "U")]), epoch=2)  # 5
+    t.merge(ch([("a", "3", 3, 3, "U"), ("b", "4", 4, 4, "U")]), epoch=3)  # 6
+    assert t.consolidate_deltas()["consolidated"]  # 7
+    t.rebucket(2)  # 8
+    t.set_properties({"owner": "ingest"})  # 9
+    t.rollback_to(6)  # 10
+    staged = t.merge(ch([("c", "5", 5, 5, "U")]), epoch=4, publish=False)
+    staged_at = t._load_staged(staged["staged"])["committed_at"]
+    t.publish_staged(staged["staged"])  # 11
+
     h = t.history()
-    assert [e["operation"] for e in h] == ["evolve", "compact", "merge", "create"]
-    assert [e["snapshot_id"] for e in h] == [3, 2, 1, 0]
-    assert h[0]["parent"] == 2 and h[-1]["parent"] is None
+    assert [e["operation"] for e in h] == [
+        "merge", "rollback", "properties", "rebucket", "consolidate",
+        "merge", "merge", "merge", "evolve", "compact", "merge", "create",
+    ]
+    assert [e["snapshot_id"] for e in h] == list(range(11, -1, -1))
+    assert [e["parent"] for e in h] == list(range(10, -1, -1)) + [None]
+    assert [e["epochs"] for e in h][:3] == [
+        ["0", "1", "2", "3", "4"], ["0", "1", "2", "3"], ["0", "1", "2", "3"],
+    ]
+
+    snaps = [t._load_snapshot(sid) for sid in range(12)]
+    base_keys = set(snaps[0])
+    for s in snaps:
+        extra = {"rollback_of"} if s["operation"] == "rollback" else set()
+        assert set(s) == base_keys | extra, s["operation"]
+    assert snaps[10]["rollback_of"] == 6
+    # the merge after the rollback does not inherit rollback_of, and its
+    # committed_at (the transaction fingerprint) survived stage -> publish
+    assert "rollback_of" not in snaps[11]
+    assert snaps[11]["committed_at"] == staged_at
+    assert {r["k"]: r["v"] for r in t.snapshot().collect()} == {
+        "a": "3", "b": "4", "c": "5",
+    }
 
 
 def test_changes_between_is_exact_change_feed(spark, tmp_path):
@@ -1678,17 +1717,17 @@ def test_merge_unpersists_on_failed_commit(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     # force the CAS to lose: move current forward behind merge's back
-    orig = t._commit_or_stage
+    orig = t._write_snapshot
 
-    def sabotage(snap, publish):
+    def sabotage(snap, expected_parent):
         raise ConcurrentCommitError("synthetic race")
 
-    t._commit_or_stage = sabotage
+    t._write_snapshot = sabotage
     try:
         with pytest.raises(ConcurrentCommitError):
             t.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
     finally:
-        t._commit_or_stage = orig
+        t._write_snapshot = orig
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 

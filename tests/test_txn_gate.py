@@ -110,11 +110,10 @@ def _state(table):
 
 def test_runner_txn_boundaries_applies_committed_subset(spark, tmp_path):
     events = change_events(spark, 3000).persist()
+    visible, committed_only = _with_txn_metadata(events)
+    visible = visible.persist()
+    committed_only = committed_only.persist()
     try:
-        visible, committed_only = _with_txn_metadata(events)
-        visible = visible.persist()
-        committed_only = committed_only.persist()
-
         eng = Engine(spark, str(tmp_path / "gated"), n_buckets=8, mode="mor")
         t = eng.snapshot_table("repo_files")
         runner = MicroBatchRunner(
@@ -136,7 +135,10 @@ def test_runner_txn_boundaries_applies_committed_subset(spark, tmp_path):
         ).run(visible, t)
         assert all(s.get("resumed_skip") for s in stats2)
     finally:
-        events.unpersist()
+        # release every persisted frame: a leaked cache here shows up as a
+        # persisted-RDD count in whichever test runs next
+        for df in (events, visible, committed_only):
+            df.unpersist()
 
 
 def test_runner_txn_boundaries_kill_and_resume(spark, tmp_path):
@@ -167,10 +169,10 @@ def test_stream_apply_txn_boundaries_cross_poll(spark, tmp_path):
     from data_exchange_hl7_spark.streaming.stream_ingest import stream_apply
 
     events = change_events(spark, 2000).persist()
+    visible, committed_only = _with_txn_metadata(events)
+    visible = visible.persist()
+    committed_only = committed_only.persist()
     try:
-        visible, committed_only = _with_txn_metadata(events)
-        visible = visible.persist()
-        committed_only = committed_only.persist()
         src = str(tmp_path / "wal")
         ckpt = str(tmp_path / "ckpt")
         cut = 1000
@@ -209,7 +211,8 @@ def test_stream_apply_txn_boundaries_cross_poll(spark, tmp_path):
         MicroBatchRunner(eng2, epoch_size=500).run(committed_only, t2)
         assert _state(t) == _state(t2)
     finally:
-        events.unpersist()
+        for df in (events, visible, committed_only):
+            df.unpersist()
 
 
 def test_missing_declared_count_withheld_consistently(spark):
