@@ -277,7 +277,7 @@ def scd2_history_rows(changes: DataFrame, old_rows: DataFrame) -> DataFrame:
 
 
 # registration kinds whose derive fn takes (changes, pre-epoch old_rows)
-# instead of (changes,) — shared by apply/purge/publish/rebuild maintenance
+# instead of (changes,) — dispatched in Engine._fan_out
 _PRE_STATE_KINDS = ("aggregate", "history")
 
 # a dim epoch's changed-key set becomes an in-list file-skipping predicate on
@@ -395,15 +395,16 @@ class Engine:
         table's columns, preserving key columns and ``__op`` — one derived
         row per main key (deletes pass through as ``D`` tombstones).
 
-        Exactly-once ACROSS tables: each table carries its own epoch
-        manifest. If the process dies between the main commit and a derived
-        commit, re-running the epoch recomputes the (deterministic) change
-        frame, the main merge no-ops on its manifest, and only the missing
-        derived merges apply — both tables converge to the same replayed
-        state (tested: test_derived_table_resumes_after_partial_commit).
-        The derive runs against the epoch's persisted change frame, so the
-        marginal cost is one projection + one O(changes) merge per derived
-        table, never a second pass over the WAL.
+        Every writer of ``main`` (apply_epoch, apply_dim_epoch, merge_into,
+        purge/redact, publish, rebuild_derived) maintains it through the one
+        ``_fan_out`` path. Exactly-once ACROSS tables: each table carries its
+        own epoch manifest. If the process dies between the main commit and
+        a derived commit, re-running the epoch recomputes the
+        (deterministic) change frame, the main merge no-ops on its manifest,
+        and only the missing derived merges apply (tested:
+        test_derived_table_resumes_after_partial_commit). The derive runs
+        against the epoch's persisted change frame: one projection + one
+        O(changes) merge per derived table, never a second WAL pass.
         """
         loc = self.table_path(name)
         if LakeTable.exists(loc):
@@ -771,38 +772,27 @@ class Engine:
         epoch_info: dict | None = None,
     ) -> dict:
         """Apply one epoch of keyed changes to a DIMENSION table, exactly
-        once, and maintain every join view registered on it in the same
-        epoch — the dim-side counterpart of ``apply_epoch``'s derived loop.
+        once, and maintain every table registered on it (join views and any
+        derived table) in the same epoch — the dim-side counterpart of
+        ``apply_epoch``, through the same gate and ``_apply_lineage`` path:
+        a row the dim's CHECK constraints quarantine never reaches a view.
 
         ``changes`` follows the ``LakeTable.merge`` contract (at most one
         row per key, ``__op`` in U/D, every current-schema column for
         upserts) and must be a deterministic function of the dim's WAL
         slice so a crash between the dim commit and a view commit re-lands
         identical rows on resume."""
-        dname = table_name(dim)
-        pending = [
-            (t, fn, kind)
-            for t, fn, kind in self._derived.get(dname, [])
-            if kind == "join_dim"
-            and str(self._epoch_key(dname, kind, epoch)) not in t.committed_epochs()
-        ]
+        pending = self._pending(dim, epoch)
         if str(epoch) in dim.committed_epochs() and not pending:
             return {"epoch": epoch, "applied": False}
-        changes = changes.persist()  # feeds the dim merge + every view fn
+        snap = dim.current_snapshot()
+        changes, handle, n_quarantined = self._gate(dim, changes, snap, epoch)
         try:
-            result = dim.merge(changes, epoch=epoch, epoch_info=epoch_info)
-            stats = {"epoch": epoch, **result}
-            for vt, fn, kind in pending:
-                vt.merge(
-                    fn(changes),
-                    epoch=self._epoch_key(dname, kind, epoch),
-                    epoch_info=epoch_info,
-                )
-            if pending:
-                stats["derived_applied"] = [table_name(t) for t, *_ in pending]
+            return self._apply_lineage(
+                dim, changes, epoch, epoch_info, pending, False, snap, n_quarantined
+            )
         finally:
-            changes.unpersist()
-        return stats
+            handle.unpersist()
 
     def refresh_join(self, name: str) -> dict:
         """Reset-and-rebuild one join view to exactly ``main ⋈ dim`` at the
@@ -1001,24 +991,17 @@ class Engine:
                 .withColumnRenamed("_change_type", "__op")
                 .drop("_commit_snapshot")
             )
-            if kind in _PRE_STATE_KINDS:
-                old_all = src_t.snapshot(
+            self._fan_out(
+                main,
+                [(tgt, fn, kind)],
+                changes,
+                e,
+                {"replay": meta},
+                lambda: src_t.snapshot(
                     as_of=c_parent,
                     keys_in=changes.select(*key_cols),
                     with_tombstones=True,
-                )
-                if kind == "history":
-                    dchanges = fn(changes, old_all)
-                else:
-                    dchanges = fn(
-                        changes, old_all.filter(F.col("__op") == "U").drop("__op")
-                    )
-            else:
-                dchanges = fn(changes)
-            tgt.merge(
-                dchanges,
-                epoch=self._epoch_key(main, kind, e),
-                epoch_info={"replay": meta},
+                ),
             )
         return tgt
 
@@ -1139,6 +1122,154 @@ class Engine:
                 out[table_name(dt)] = dt.rollback_to(cand)
         return out
 
+    # ------------------------------------------------- lineage fan-out
+    def _pending(self, parent, epoch) -> list[tuple[LakeTable, Any, str]]:
+        """Registrations on ``parent`` (table or name) whose manifest does
+        not hold ``epoch`` yet — on a resume after a partial multi-table
+        commit, exactly the derived merges the crashed run still owed."""
+        name = parent if isinstance(parent, str) else table_name(parent)
+        return [
+            (t, fn, kind)
+            for t, fn, kind in self._derived.get(name, [])
+            if str(self._epoch_key(name, kind, epoch)) not in t.committed_epochs()
+        ]
+
+    def _require_registered(self, name: str, verb: str) -> None:
+        """The durable registry knows every derived table EVER registered
+        for ``name``; if some aren't re-registered in this process, the
+        cascade cannot reach them (their derive fns are code) — fail loud
+        rather than ship a write that misses signature rows."""
+        live = {table_name(t) for t, _, _ in self._derived.get(name, [])}
+        missing = sorted(set(self.registered_derived(name)) - live)
+        if missing:
+            raise RuntimeError(
+                f"{verb} on '{name}' would MISS derived tables "
+                f"registered in this warehouse but not in this process: "
+                f"{missing}. Re-register them (derived_table / "
+                f"aggregate_table / scd2_table / join_table) first, or pass "
+                f"main_only=True to write the main table alone on purpose."
+            )
+
+    def _gate(
+        self, table: LakeTable, changes: DataFrame, snap: dict, epoch
+    ) -> tuple[DataFrame, DataFrame, int | None]:
+        """CHECK constraints gate HERE, before the fan-out: the main merge,
+        every derived table, and every aggregate view must see the SAME
+        gated change rows (gating inside merge alone would leak quarantined
+        rows into deriveds — the purge-cascade consistency class).
+
+        Returns (changes, persisted handle, n_quarantined — None when the
+        table has no constraints); the caller unpersists the handle."""
+        cons = snap["properties"].get("check_constraints") or {}
+        if not cons:
+            changes = changes.persist()  # feeds merge write, lineage, deriveds
+            return changes, changes, None
+        # the gate's tagged frame IS the epoch cache (full slice,
+        # content-heavy); persisting the filtered view again would
+        # materialize a duplicate copy — the filter re-reads the cache
+        changes, n_quarantined, handle = table._enforce_check_constraints(
+            changes, cons, snap, epoch
+        )
+        return changes, handle, n_quarantined
+
+    def _fan_out(
+        self, parent, pending, changes, epoch, info, pre_state, txn=None
+    ) -> list[str]:
+        """Maintain every ``pending`` registration of ``parent`` from one
+        epoch's change frame — the one place derive fns run and derived
+        merges land (or stage into ``txn``), each keyed by ``_epoch_key``.
+        Returns the maintained tables' names.
+
+        ``pre_state()`` returns the pre-epoch state of the changed keys,
+        tombstone-visible: the history kind must distinguish deleted from
+        never-seen; aggregates get the live-rows view of the SAME read. It
+        is called only when a pending kind reads it, and not persisted, so
+        each scan column-prunes (an aggregate's delta never reads content)."""
+        changes = changes.drop("__bucket")
+        old_all = old_live = None
+        if any(kind in _PRE_STATE_KINDS for _, _, kind in pending):
+            old_all = pre_state()
+            old_live = old_all.filter(F.col("__op") == "U").drop("__op")
+        for dt, fn, kind in pending:
+            if kind == "history":
+                dchanges = fn(changes, old_all)
+            elif kind in _PRE_STATE_KINDS:
+                dchanges = fn(changes, old_live)
+            else:
+                dchanges = fn(changes)
+            key = self._epoch_key(parent, kind, epoch)
+            if txn is not None:
+                txn.stage(dt, dchanges, epoch=key, epoch_info=info)
+            else:
+                dt.merge(dchanges, epoch=key, epoch_info=info)
+        return [table_name(dt) for dt, *_ in pending]
+
+    def _apply_lineage(
+        self, table, changes, epoch, info, pending, atomic, snap, n_quarantined
+    ) -> dict:
+        """Main merge (or txn stage), then the fan-out, then the txn commit,
+        for a frame ``_gate`` already gated. Derived tables use the same
+        epoch id, own manifest per table: on a resume after a partial
+        multi-table commit the main merge no-ops and only the still-missing
+        derived merges run — the change frame is a deterministic function
+        of the epoch's input, so the late merges land the identical rows."""
+        # the frame is pre-gated: merge() must not enforce the constraints again
+        if atomic:
+            from data_exchange_hl7_spark.lake.txn import MultiTableTransaction
+
+            txn_dir = os.path.join(self.warehouse, "_txn")
+            MultiTableTransaction.recover(self.spark, txn_dir)
+            txn = MultiTableTransaction(self.spark, txn_dir)
+            result = txn.stage(
+                table, changes, epoch=epoch, epoch_info=info, enforce_constraints=False
+            )
+        else:
+            txn = None
+            result = table.merge(
+                changes, epoch=epoch, epoch_info=info, enforce_constraints=False
+            )
+        stats = {"epoch": epoch, **result}
+
+        def pre_state() -> DataFrame:
+            # pre-epoch state of the changed keys only: bucket-pruned
+            # time-travel read + semi join — O(changes) work, not O(table).
+            # atomic fresh stage: the main merge is staged, not committed,
+            # so the walk-based resolver cannot see it — the pre-epoch state
+            # is simply the pre-stage current snapshot
+            if txn is not None and result.get("staged"):
+                pre_sid = result["snapshot_id"] - 1
+            else:
+                pre_sid = self._pre_epoch_sid(table, epoch, result)
+            col = "__bucket" if "__bucket" in changes.columns else table.bucket_expr()
+            # bounded by n_buckets — metadata-sized
+            chg_buckets = [r[0] for r in changes.select(col).distinct().collect()]
+            # bucket pruning is a hard file filter: only sound while the
+            # pre-epoch snapshot shares the current bucket count (a
+            # rebucket between commit and resume would misalign it)
+            if table._load_snapshot(pre_sid)["n_buckets"] != snap["n_buckets"]:
+                chg_buckets = None
+            # keys_in pushes the changed-key semi join BELOW the MoR
+            # resolve window, so the pre-state read does O(changed keys)
+            # window work, not O(keys in touched buckets)
+            return table.snapshot(
+                as_of=pre_sid,
+                buckets=chg_buckets,
+                keys_in=changes.select(*snap["key_cols"]),
+                with_tombstones=True,
+            )
+
+        applied = self._fan_out(table, pending, changes, epoch, info, pre_state, txn)
+        if txn is not None:
+            txn_out = txn.commit()
+            if stats.pop("staged", None):
+                stats["applied"] = True  # published by the txn commit
+            stats["txn_id"] = txn_out["txn_id"]
+        if self._derived.get(table_name(table)):
+            stats["derived_applied"] = applied
+        if n_quarantined is not None:
+            stats["quarantined"] = n_quarantined
+        return stats
+
     # ------------------------------------------------------------- apply
     def apply_epoch(
         self,
@@ -1166,12 +1297,7 @@ class Engine:
         warehouse (single-writer deployment contract) — without that, a
         re-staged epoch and the pending transaction would collide at the
         same snapshot id."""
-        derived = self._derived.get(table_name(table), [])
-        derived_pending = [
-            (t, fn, kind)
-            for t, fn, kind in derived
-            if str(self._epoch_key(table, kind, epoch)) not in t.committed_epochs()
-        ]
+        derived_pending = self._pending(table, epoch)
         if str(epoch) in table.committed_epochs() and not derived_pending:
             return {"epoch": epoch, "applied": False}
 
@@ -1275,10 +1401,13 @@ class Engine:
         # aligned with the storage layout
         snap = table.current_snapshot()
         if self.salt_keys:
+            # no __bucket column here: the salted window leaves the frame
+            # partitioned by key, not by bucket, and the MoR merge takes a
+            # __bucket column to mean the frame is already bucket-partitioned
+            # (every task would then write into every bucket dir)
             latest = dedup_ops.latest_by_key_salted(
                 flat, KEY_COLS, order_cols, n_salts=self.salt_keys
             )
-            latest = latest.withColumn("__bucket", table.bucket_expr())
         else:
             flat = flat.withColumn("__bucket", table.bucket_expr())
             latest = dedup_ops.latest_by_key_bucketed(
@@ -1298,7 +1427,7 @@ class Engine:
 
         cleaned = F.coalesce(F.col("content"), F.lit(""))
         changes = latest.select(
-            F.col("__bucket"),
+            *([] if self.salt_keys else [F.col("__bucket")]),
             F.col("repo"),
             F.col("path"),
             F.col("commit"),
@@ -1317,113 +1446,11 @@ class Engine:
         )
 
         info = {"start_lsn": start_lsn, "end_lsn": end_lsn}
-        # CHECK constraints gate HERE, before the derived fan-out: the main
-        # merge, every derived table, and every aggregate view must see the
-        # SAME gated change rows (gating inside merge alone would leak
-        # quarantined rows into deriveds — the purge-cascade consistency
-        # class). merge() re-enforcement is disabled for this pre-gated
-        # frame.
-        cons = snap["properties"].get("check_constraints") or {}
-        gate_handle = None
-        n_quarantined = None
-        if cons:
-            changes, n_quarantined, gate_handle = table._enforce_check_constraints(
-                changes, cons, snap, epoch
-            )
-            # the gate's tagged frame IS the epoch cache (full slice,
-            # content-heavy); persisting the filtered view again would
-            # materialize a duplicate copy — the filter re-reads the cache
-            changes_handle = gate_handle
-        else:
-            changes = changes.persist()  # feeds merge write, lineage, deriveds
-            changes_handle = changes
-        txn = None
-        if atomic:
-            from data_exchange_hl7_spark.lake.txn import MultiTableTransaction
-
-            txn_dir = os.path.join(self.warehouse, "_txn")
-            MultiTableTransaction.recover(self.spark, txn_dir)
-            txn = MultiTableTransaction(self.spark, txn_dir)
+        changes, changes_handle, n_quarantined = self._gate(table, changes, snap, epoch)
         try:
-            if txn is not None:
-                result = txn.stage(
-                    table, changes, epoch=epoch, epoch_info=info,
-                    enforce_constraints=not cons,
-                )
-            else:
-                result = table.merge(
-                    changes, epoch=epoch, epoch_info=info,
-                    enforce_constraints=not cons,
-                )
-            stats = {"epoch": epoch, **result}
-            # derived tables: same epoch id, own manifest per table. On a
-            # resume after a partial multi-table commit, the main merge above
-            # no-ops and only the still-missing derived merges run — the
-            # change frame is a deterministic function of the WAL slice, so
-            # the late merges land the identical rows (multi-table
-            # exactly-once via per-table idempotence).
-            old_live = old_all = None
-            if any(kind in _PRE_STATE_KINDS for _, _, kind in derived_pending):
-                # pre-epoch state of the changed keys only: bucket-pruned
-                # time-travel read + semi join — O(changes) work, not
-                # O(table). Computed once, shared by every aggregate view.
-                # atomic fresh stage: the main merge is staged, not
-                # committed, so the walk-based resolver cannot see it — the
-                # pre-epoch state is simply the pre-stage current snapshot
-                if txn is not None and result.get("staged"):
-                    pre_sid = result["snapshot_id"] - 1
-                else:
-                    pre_sid = self._pre_epoch_sid(table, epoch, result)
-                chg_buckets = [
-                    r[0] for r in changes.select("__bucket").distinct().collect()
-                ]  # bounded by n_buckets — metadata-sized
-                # bucket pruning is a hard file filter: only sound while the
-                # pre-epoch snapshot shares the current bucket count (a
-                # rebucket between commit and resume would misalign it)
-                if table._load_snapshot(pre_sid)["n_buckets"] != snap["n_buckets"]:
-                    chg_buckets = None
-                # keys_in pushes the changed-key semi join BELOW the MoR
-                # resolve window, so the pre-state read does O(changed keys)
-                # window work, not O(keys in touched buckets)
-                # tombstone-visible winner per key: the history kind must
-                # distinguish deleted from never-seen; aggregates get the
-                # live-rows view of the SAME read
-                old_all = table.snapshot(
-                    as_of=pre_sid,
-                    buckets=chg_buckets,
-                    keys_in=changes.select(*KEY_COLS),
-                    with_tombstones=True,
-                )
-                old_live = old_all.filter(F.col("__op") == "U").drop("__op")
-            for dt, fn, kind in derived_pending:
-                if kind == "history":
-                    dchanges = fn(changes.drop("__bucket"), old_all)
-                elif kind in _PRE_STATE_KINDS:
-                    dchanges = fn(changes.drop("__bucket"), old_live)
-                else:
-                    dchanges = fn(changes.drop("__bucket"))
-                if txn is not None:
-                    txn.stage(
-                        dt,
-                        dchanges,
-                        epoch=self._epoch_key(table, kind, epoch),
-                        epoch_info=info,
-                    )
-                else:
-                    dt.merge(
-                        dchanges,
-                        epoch=self._epoch_key(table, kind, epoch),
-                        epoch_info=info,
-                    )
-            if txn is not None:
-                txn_out = txn.commit()
-                if stats.pop("staged", None):
-                    stats["applied"] = True  # published by the txn commit
-                stats["txn_id"] = txn_out["txn_id"]
-            if derived:
-                stats["derived_applied"] = [table_name(t) for t, *_ in derived_pending]
-            if n_quarantined is not None:
-                stats["quarantined"] = n_quarantined
+            stats = self._apply_lineage(
+                table, changes, epoch, info, derived_pending, atomic, snap, n_quarantined
+            )
             if collect_metrics:
                 stats.update(self._write_metrics(table, obs, changes, epoch))
         finally:
@@ -1446,9 +1473,7 @@ class Engine:
             "schema_changes": got["schema_changes"] or 0,
         }
         bucket = (
-            F.col("__bucket")
-            if "__bucket" in changes.columns
-            else F.pmod(F.xxhash64("repo", "path"), F.lit(self.n_buckets)).cast("int")
+            F.col("__bucket") if "__bucket" in changes.columns else table.bucket_expr()
         )
         # the per-bucket lineage agg scans the changes cache (one Spark job);
         # its RESULT is metadata-sized (<= n_buckets rows), so both report
@@ -1559,7 +1584,11 @@ class Engine:
         and every registered derived table re-derives from the REDACTED rows
         in the same epoch — e.g. the MinHash index re-signs the scrubbed
         text, so the old content stops matching near-dup probes. Same
-        unregistered-derived refusal contract as ``purge_where``."""
+        unregistered-derived refusal contract as ``purge_where``.
+
+        Raises ``ValueError`` naming the violated CHECK constraints, before
+        any write, when a rewritten row breaks one (Delta's ``UPDATE``
+        rule): quarantining it would keep the unredacted row live."""
         return self._purge_or_redact(
             table, predicate, epoch, set_exprs, epoch_info, main_only=main_only
         )
@@ -1596,27 +1625,13 @@ class Engine:
         contract as ``purge_where`` (``main_only=True`` overrides).
 
         ``atomic=True`` publishes the main merge and every derived merge
-        from ONE multi-table transaction (the ``apply_epoch`` atomic
-        semantics): readers can never observe the clause effects on the
-        main table ahead of its deriveds.
+        from ONE multi-table transaction through ``_apply_lineage``, the
+        path ``apply_epoch`` uses: readers can never observe the clause
+        effects on the main table ahead of its deriveds.
         """
-        name = table_name(table)
-        derived = self._derived.get(name, [])
         if not main_only:
-            live = {table_name(t) for t, _, _ in derived}
-            missing = sorted(set(self.registered_derived(name)) - live)
-            if missing:
-                raise RuntimeError(
-                    f"merge_into on '{name}' would MISS derived tables "
-                    f"registered in this warehouse but not in this process: "
-                    f"{missing}. Re-register them before the merge, or pass "
-                    f"main_only=True to merge the main table alone on purpose."
-                )
-        pending = [
-            (t, fn, kind)
-            for t, fn, kind in derived
-            if str(self._epoch_key(table, kind, epoch)) not in t.committed_epochs()
-        ]
+            self._require_registered(table_name(table), "merge_into")
+        pending = self._pending(table, epoch)
         main_done = str(epoch) in table.committed_epochs()
         if main_done and not pending:
             return {"epoch": epoch, "applied": False}
@@ -1638,89 +1653,14 @@ class Engine:
         snap = table.current_snapshot()
         changes = table.merge_into(
             source, **clauses, compile_only=True, target_as_of=target_as_of
-        ).withColumn("__bucket", table.bucket_expr())
+        )
         info = dict(epoch_info or {})
         info.setdefault("op", "merge_into")
-        # constraints gate BEFORE the fan-out (apply_epoch parity): main,
-        # deriveds, and aggregates must see the same gated rows
-        cons = snap["properties"].get("check_constraints") or {}
-        n_quarantined = None
-        if cons:
-            changes, n_quarantined, changes_handle = (
-                table._enforce_check_constraints(changes, cons, snap, epoch)
-            )
-        else:
-            changes = changes.persist()
-            changes_handle = changes
-        txn = None
-        if atomic:
-            from data_exchange_hl7_spark.lake.txn import MultiTableTransaction
-
-            txn_dir = os.path.join(self.warehouse, "_txn")
-            MultiTableTransaction.recover(self.spark, txn_dir)
-            txn = MultiTableTransaction(self.spark, txn_dir)
+        changes, changes_handle, n_quarantined = self._gate(table, changes, snap, epoch)
         try:
-            if txn is not None:
-                result = txn.stage(
-                    table, changes, epoch=epoch, epoch_info=info,
-                    enforce_constraints=not cons,
-                )
-            else:
-                result = table.merge(
-                    changes, epoch=epoch, epoch_info=info,
-                    enforce_constraints=not cons,
-                )
-            stats = {"epoch": epoch, **result}
-            old_live = old_all = None
-            if any(kind in _PRE_STATE_KINDS for _, _, kind in pending):
-                # atomic fresh stage: the main merge is staged, not
-                # committed, so the pre-epoch state is the pre-stage current
-                if txn is not None and result.get("staged"):
-                    pre_sid = result["snapshot_id"] - 1
-                else:
-                    pre_sid = self._pre_epoch_sid(table, epoch, result)
-                chg_buckets = [
-                    r[0] for r in changes.select("__bucket").distinct().collect()
-                ]
-                if table._load_snapshot(pre_sid)["n_buckets"] != snap["n_buckets"]:
-                    chg_buckets = None
-                old_all = table.snapshot(
-                    as_of=pre_sid,
-                    buckets=chg_buckets,
-                    keys_in=changes.select(*snap["key_cols"]),
-                    with_tombstones=True,
-                )
-                old_live = old_all.filter(F.col("__op") == "U").drop("__op")
-            for dt, fn, kind in pending:
-                if kind == "history":
-                    dchanges = fn(changes.drop("__bucket"), old_all)
-                elif kind in _PRE_STATE_KINDS:
-                    dchanges = fn(changes.drop("__bucket"), old_live)
-                else:
-                    dchanges = fn(changes.drop("__bucket"))
-                if txn is not None:
-                    txn.stage(
-                        dt,
-                        dchanges,
-                        epoch=self._epoch_key(table, kind, epoch),
-                        epoch_info=info,
-                    )
-                else:
-                    dt.merge(
-                        dchanges,
-                        epoch=self._epoch_key(table, kind, epoch),
-                        epoch_info=info,
-                    )
-            if txn is not None:
-                txn_out = txn.commit()
-                if stats.pop("staged", None):
-                    stats["applied"] = True  # published by the txn commit
-                stats["txn_id"] = txn_out["txn_id"]
-            if derived:
-                stats["derived_applied"] = [table_name(t) for t, *_ in pending]
-            if n_quarantined is not None:
-                stats["quarantined"] = n_quarantined
-            return stats
+            return self._apply_lineage(
+                table, changes, epoch, info, pending, atomic, snap, n_quarantined
+            )
         finally:
             changes_handle.unpersist()
 
@@ -1733,38 +1673,18 @@ class Engine:
         epoch_info: dict | None,
         main_only: bool = False,
     ) -> dict:
-        name = table_name(table)
-        derived = self._derived.get(name, [])
         if not main_only:
-            # the durable registry knows every derived table EVER registered
-            # for this main; if some aren't re-registered in this process,
-            # the cascade cannot reach them (their derive fns are code) —
-            # fail loud rather than ship a purge that misses signature rows
-            live = {table_name(t) for t, _, _ in derived}
-            missing = sorted(set(self.registered_derived(name)) - live)
-            if missing:
-                raise RuntimeError(
-                    f"purge/redact on '{name}' would MISS derived tables "
-                    f"registered in this warehouse but not in this process: "
-                    f"{missing}. Re-register them (derived_table / "
-                    f"aggregate_table / scd2_table / join_table) before the "
-                    f"sweep, or pass main_only=True to sweep the main table "
-                    f"alone on purpose."
-                )
-        pending = [
-            (t, fn, kind)
-            for t, fn, kind in derived
-            if str(self._epoch_key(table, kind, epoch)) not in t.committed_epochs()
-        ]
-        # the quarantine sidecar holds FULL payloads of diverted rows, so a
-        # compliance sweep must reach it too (the same hole class as
-        # unswept derived tables); the sweep is an idempotent rewrite
-        # (filter/redact matching rows per epoch dir), so it runs even on
-        # a crash-resume where the merges below all no-op
-        n_swept = self._sweep_quarantine(table, predicate, set_exprs)
+            self._require_registered(table_name(table), "purge/redact")
+        pending = self._pending(table, epoch)
         main_done = str(epoch) in table.committed_epochs()
         if main_done and not pending:
-            return {"epoch": epoch, "applied": False, "quarantine_swept": n_swept}
+            # the quarantine sweep below is an idempotent rewrite, so it
+            # runs even on a crash-resume where every merge no-ops
+            return {
+                "epoch": epoch,
+                "applied": False,
+                "quarantine_swept": self._sweep_quarantine(table, predicate, set_exprs),
+            }
         if main_done:
             # resume after a partial multi-table commit: the purged rows are
             # already gone from the current snapshot, so recompute the change
@@ -1794,81 +1714,96 @@ class Engine:
                             "size_bytes", F.length(body).cast(fields["size_bytes"])
                         )
                 changes = changes.withColumn("__op", F.lit("U"))
+                # Delta's rule for UPDATE: a rewrite that breaks a CHECK
+                # constraint raises BEFORE any write. Quarantining it would
+                # leave the UNREDACTED row live in the main table while the
+                # derived tables took the redacted one. On a resume the main
+                # table already holds the rewrite, so the check is skipped.
+                broken = [
+                    name
+                    for name, expr in sorted(table.check_constraints().items())
+                    # SQL CHECK semantics, as in the write gate: NULL passes
+                    if not main_done
+                    and changes.filter(f"NOT coalesce(({expr}), true)").limit(1).count()
+                ]
+                if broken:
+                    raise ValueError(
+                        f"redact on '{table_name(table)}' rewrites rows that "
+                        f"violate CHECK constraints {broken}; nothing was "
+                        "written — choose set_exprs that satisfy them"
+                    )
+            # the quarantine sidecar holds FULL payloads of diverted rows, so
+            # a compliance sweep must reach it too (the same hole class as
+            # unswept derived tables)
+            n_swept = self._sweep_quarantine(table, predicate, set_exprs)
             info = dict(epoch_info or {})
             info.setdefault("op", "purge" if set_exprs is None else "redact")
             info.setdefault("predicate", predicate)
             result = table.merge(changes, epoch=epoch, epoch_info=info)
             stats = {"epoch": epoch, **result}
-            for dt, fn, kind in pending:
+            for dt, _fn, kind in pending:
                 if kind == "history":
-                    # a history table holds EVERY version of a key, so the
-                    # compliance cascade must sweep all of them, not derive
-                    # from the one-row-per-key change frame: purge tombstones
-                    # the key's whole version history; redact rewrites the
-                    # image columns of every version (content-derived
-                    # columns are scrubbed to NULL — the pre-redaction
-                    # content no longer exists to recompute them from).
-                    # Victim keys = the keys the MAIN purge matched PLUS any
-                    # key with a history version matching the predicate
-                    # directly (keys already deleted from the main table
-                    # still have compliance-relevant history; and a
-                    # non-key predicate — content_sha256 = <leaked hash> —
-                    # must sweep the matched keys' OTHER versions too, not
-                    # just the individually-matching rows). The direct leg
-                    # drops out only when the predicate references columns
-                    # the history schema lacks (AnalysisException at plan
-                    # bind — never a silent fallback on a transient error).
-                    from pyspark.errors import AnalysisException
-
-                    victim_keys = changes.select(*KEY_COLS)
-                    try:
-                        direct = dt.snapshot().filter(predicate).select(*KEY_COLS)
-                        victim_keys = victim_keys.unionByName(direct).distinct()
-                    except AnalysisException:
-                        pass  # predicate uses main-only columns
-                    hrows = dt.snapshot(keys_in=victim_keys)
-                    if set_exprs is None:
-                        dchanges = hrows.withColumn("__op", F.lit("D"))
-                    else:
-                        hnames = {f["name"] for f in dt.schema_fields()}
-                        dchanges = hrows
-                        for col, expr in set_exprs.items():
-                            if col in hnames:
-                                dchanges = dchanges.withColumn(col, F.expr(expr))
-                        if "content" in set_exprs:
-                            for derived_col in ("content_sha256", "size_bytes"):
-                                if (
-                                    derived_col in hnames
-                                    and derived_col not in set_exprs
-                                ):
-                                    dchanges = dchanges.withColumn(
-                                        derived_col,
-                                        F.lit(None).cast(
-                                            {
-                                                f["name"]: f["type"]
-                                                for f in dt.schema_fields()
-                                            }[derived_col]
-                                        ),
-                                    )
-                        dchanges = dchanges.withColumn("__op", F.lit("U"))
-                elif kind in _PRE_STATE_KINDS:
-                    # old_rows doubles as the pre-state of the changed keys:
-                    # for a purge/redact the changed keys ARE the matching
-                    # rows, so no second time-travel read is needed
-                    dchanges = fn(changes, old_rows)
-                else:
-                    dchanges = fn(changes)
-                dt.merge(
-                    dchanges,
-                    epoch=self._epoch_key(table, kind, epoch),
-                    epoch_info=info,
-                )
-            if derived:
+                    dt.merge(
+                        self._history_sweep(dt, changes, predicate, set_exprs),
+                        epoch=epoch,
+                        epoch_info=info,
+                    )
+            # old_rows doubles as the pre-state of the changed keys: for a
+            # purge/redact the changed keys ARE the matching rows, so no
+            # second time-travel read is needed
+            self._fan_out(
+                table,
+                [r for r in pending if r[2] != "history"],
+                changes,
+                epoch,
+                info,
+                lambda: old_rows.withColumn("__op", F.lit("U")),
+            )
+            if self._derived.get(table_name(table)):
                 stats["derived_applied"] = [table_name(t) for t, *_ in pending]
             stats["quarantine_swept"] = n_swept
             return stats
         finally:
             old_rows.unpersist()
+
+    def _history_sweep(self, dt, changes, predicate, set_exprs) -> DataFrame:
+        """A history table holds EVERY version of a key, so the compliance
+        cascade must sweep all of them, not derive from the one-row-per-key
+        change frame: purge tombstones the key's whole version history;
+        redact rewrites the image columns of every version (content-derived
+        columns are scrubbed to NULL — the pre-redaction content no longer
+        exists to recompute them from).
+
+        Victim keys = the keys the MAIN purge matched PLUS any key with a
+        history version matching the predicate directly (keys already
+        deleted from the main table still have compliance-relevant history;
+        and a non-key predicate — content_sha256 = <leaked hash> — must
+        sweep the matched keys' OTHER versions too, not just the
+        individually-matching rows). The direct leg drops out only when the
+        predicate references columns the history schema lacks
+        (AnalysisException at plan bind — never a silent fallback on a
+        transient error)."""
+        from pyspark.errors import AnalysisException
+
+        victim_keys = changes.select(*KEY_COLS)
+        try:
+            direct = dt.snapshot().filter(predicate).select(*KEY_COLS)
+            victim_keys = victim_keys.unionByName(direct).distinct()
+        except AnalysisException:
+            pass  # predicate uses main-only columns
+        hrows = dt.snapshot(keys_in=victim_keys)
+        if set_exprs is None:
+            return hrows.withColumn("__op", F.lit("D"))
+        htypes = {f["name"]: f["type"] for f in dt.schema_fields()}
+        dchanges = hrows
+        for col, expr in set_exprs.items():
+            if col in htypes:
+                dchanges = dchanges.withColumn(col, F.expr(expr))
+        if "content" in set_exprs:
+            for col in ("content_sha256", "size_bytes"):
+                if col in htypes and col not in set_exprs:
+                    dchanges = dchanges.withColumn(col, F.lit(None).cast(htypes[col]))
+        return dchanges.withColumn("__op", F.lit("U"))
 
     def _sweep_quarantine(
         self, table: LakeTable, predicate: str, set_exprs: dict[str, str] | None
@@ -1961,7 +1896,6 @@ class Engine:
         import json
         import shutil
 
-        derived = self._derived.get(table_name(table), [])
         bo = branch.current_snapshot().get("branch_of") or {}
         retired_path = os.path.join(branch.meta_dir, "retired.json")
         if os.path.exists(retired_path):
@@ -2040,26 +1974,15 @@ class Engine:
                 os.rename(tmp, dst)
 
         key_cols = table.current_snapshot()["key_cols"]
+        info = {"op": "publish", "branch": os.path.abspath(branch.location)}
         maintained: list[str] = []
-        pending_commits = [
-            (e, sid, parent)
-            for e, sid, parent in introduced
-            if any(
-                str(self._epoch_key(table, k, e)) not in t.committed_epochs()
-                for t, _f, k in derived
-            )
-        ]
         # fast-forward-aware per-epoch recovery: a branch that itself
         # absorbed a multi-epoch sub-branch would otherwise feed the folded
         # commit delta once per epoch (double-counting sum aggregates)
         for e, src_t, c_parent, c_sid in self._epoch_change_bounds(
-            branch, pending_commits
+            branch, [c for c in introduced if self._pending(table, c[0])]
         ):
-            pending = [
-                (t, fn, kind)
-                for t, fn, kind in derived
-                if str(self._epoch_key(table, kind, e)) not in t.committed_epochs()
-            ]
+            pending = self._pending(table, e)
             if not pending:
                 continue
             # persist: the change frame feeds every derive fn and the
@@ -2070,39 +1993,25 @@ class Engine:
                 .drop("_commit_snapshot")
                 .persist()
             )
-            old_rows = None
             try:
-                if any(kind in _PRE_STATE_KINDS for _, _, kind in pending):
-                    # pre-epoch state of the changed keys on the BRANCH (the
-                    # fork base equals the parent's head at publish time, so
-                    # the branch-side chain of pre-states is the true
-                    # lineage); tombstone-visible for the history kind
-                    old_rows = src_t.snapshot(
+                # pre-epoch state of the changed keys on the BRANCH (the
+                # fork base equals the parent's head at publish time, so the
+                # branch-side chain of pre-states is the true lineage)
+                applied = self._fan_out(
+                    table,
+                    pending,
+                    changes,
+                    e,
+                    info,
+                    lambda: src_t.snapshot(
                         as_of=c_parent,
                         keys_in=changes.select(*key_cols),
                         with_tombstones=True,
-                    ).persist()
-                info_d = {"op": "publish", "branch": os.path.abspath(branch.location)}
-                for dt, fn, kind in pending:
-                    if kind == "history":
-                        dchanges = fn(changes, old_rows)
-                    elif kind in _PRE_STATE_KINDS:
-                        dchanges = fn(
-                            changes,
-                            old_rows.filter(F.col("__op") == "U").drop("__op"),
-                        )
-                    else:
-                        dchanges = fn(changes)
-                    dt.merge(
-                        dchanges,
-                        epoch=self._epoch_key(table, kind, e),
-                        epoch_info=info_d,
-                    )
-                    maintained.append(f"{table_name(dt)}:{e}")
+                    ),
+                )
             finally:
                 changes.unpersist()
-                if old_rows is not None:
-                    old_rows.unpersist()
+            maintained += [f"{n}:{e}" for n in applied]
         res["derived_applied"] = maintained
         return res
 

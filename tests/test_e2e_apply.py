@@ -1477,11 +1477,13 @@ def test_purge_and_redact_sweep_quarantine_sidecar(spark, tmp_path):
     p2 = eng.purge_where(table, f"repo = '{victim}'", epoch=1)
     assert not p2["applied"] and p2["quarantine_swept"] == 0
 
-    # redact: rewrite content in the sidecar, sha/size recomputed
+    # redact: rewrite content in the sidecar, sha/size recomputed (the
+    # replacement's 10 bytes satisfy size_mod3: a rewrite that breaks a
+    # constraint is refused before any write)
     q0 = table.quarantine()
     target = q0.select("repo").distinct().orderBy("repo").first()["repo"]
     rr = eng.redact_where(
-        table, f"repo = '{target}'", {"content": "'<GONE>'"}, epoch=2
+        table, f"repo = '{target}'", {"content": "'<REDACTED>'"}, epoch=2
     )
     assert rr["quarantine_swept"] > 0
     got = (
@@ -1491,11 +1493,11 @@ def test_purge_and_redact_sweep_quarantine_sidecar(spark, tmp_path):
         .distinct()
         .collect()
     )
-    assert {g["content"] for g in got} == {"<GONE>"}
+    assert {g["content"] for g in got} == {"<REDACTED>"}
     import hashlib
 
     assert {g["content_sha256"] for g in got} == {
-        hashlib.sha256(b"<GONE>").hexdigest()
+        hashlib.sha256(b"<REDACTED>").hexdigest()
     }
 
 
@@ -1654,3 +1656,93 @@ def test_engine_merge_into_atomic_publishes_lineage_together(spark, tmp_path):
         "epoch": 9000,
         "applied": False,
     }
+
+
+def test_redact_refuses_constraint_violating_rewrite(spark, tmp_path):
+    """redact_where raises BEFORE any write when the rewritten rows break a
+    CHECK constraint (Delta's UPDATE rule): quarantining them would keep the
+    unredacted row live in the main table while the derived table took the
+    redacted one. Main table, derived table and quarantine sidecar stay
+    untouched; a redaction that satisfies the constraints still lands."""
+    import hashlib
+    import os
+
+    from data_exchange_hl7_spark.engine import FILE_STATS_SCHEMA, file_stats_derive
+
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    table = eng.snapshot_table("repo_files")
+    table.add_check_constraint("size_pos", "size_bytes > 0")
+    table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
+    stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
+    eng.apply_epoch(change_events(spark, 2000), table, epoch=0, collect_metrics=False)
+    # a repo with both live and quarantined rows: the sweep would touch both
+    victim = table.quarantine().select("repo").orderBy("repo").first()["repo"]
+    pred = f"repo = '{victim}'"
+    qdir = os.path.join(table.location, "_quarantine")
+
+    def state():
+        return (
+            table.current_snapshot()["snapshot_id"],
+            stats_t.current_snapshot()["snapshot_id"],
+            sorted(str(r) for r in table.snapshot().filter(pred).collect()),
+            sorted(str(r) for r in stats_t.snapshot().filter(pred).collect()),
+            sorted(str(r) for r in table.quarantine().collect()),
+            sorted(os.listdir(qdir)),
+        )
+
+    before = state()
+    assert before[2] and before[3]
+    with pytest.raises(ValueError, match="size_pos"):
+        eng.redact_where(table, pred, {"content": "''"}, epoch=9001)
+    assert state() == before
+    assert "9001" not in table.committed_epochs()
+
+    r = eng.redact_where(table, pred, {"content": "'[REDACTED]'"}, epoch=9001)
+    assert r["applied"] and r["quarantine_swept"] > 0
+    live = table.snapshot().filter(pred).collect()
+    assert len(live) == len(before[2])
+    assert {x["content"] for x in live} == {"[REDACTED]"}
+    want = hashlib.sha256(b"[REDACTED]").hexdigest()
+    derived = stats_t.snapshot().filter(pred).collect()
+    assert len(derived) == len(live)
+    assert {x["content_sha256"] for x in derived} == {want}
+
+
+def test_salted_apply_writes_one_delta_file_per_bucket(
+    spark, tmp_path, events, oracle_state
+):
+    """The salted apply leaves its frame partitioned by key, not bucket, so it
+    must not hand the MoR merge a __bucket column (the merge reads one as
+    "already bucket-partitioned" and every task then writes into every
+    bucket dir): at most one file per bucket per delta layer, and the
+    salted apply still reaches the oracle state."""
+    n_buckets = 8
+    eng = Engine(
+        spark, str(tmp_path / "wh"), n_buckets=n_buckets, mode="mor", salt_keys=4
+    )
+    table = eng.snapshot_table("repo_files")
+    r = eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
+    assert 0 < r["delta_files"] <= n_buckets
+    _assert_matches_oracle(table, oracle_state)
+
+
+def test_engine_merge_into_writes_one_delta_file_per_bucket(spark, tmp_path, events):
+    """Engine.merge_into's compiled frame is not bucket-partitioned either:
+    at most one file per bucket per delta layer."""
+    n_buckets = 8
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets, mode="mor")
+    table = eng.snapshot_table("repo_files")
+    eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
+    src = spark.createDataFrame(
+        table.snapshot().select("repo", "path").collect(), "repo string, path string"
+    ).withColumn("content", F.lit("MERGEINTO"))
+    r = eng.merge_into(
+        table,
+        src,
+        when_matched=[
+            {"condition": None, "action": "update", "set": {"content": "s.content"}}
+        ],
+        epoch=1,
+    )
+    assert 0 < r["delta_files"] <= n_buckets
+    assert table.snapshot().filter(F.col("content") != "MERGEINTO").count() == 0

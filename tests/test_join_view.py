@@ -210,3 +210,48 @@ def test_join_view_table_name_helper(spark, tmp_path):
     eng, t, dim, view, ev = _setup(spark, tmp_path, n_events=200)
     ev.unpersist()
     assert table_name(view) == "files_meta"
+
+
+def test_dim_check_constraint_gates_before_view_refresh(spark, tmp_path):
+    """A dim epoch goes through the same CHECK gate as a fact epoch: rows the
+    dim quarantines must not reach the join view, and the stats report the
+    quarantine count."""
+    eng, t, dim, view, ev = _setup(spark, tmp_path)
+    repos = ev.select("repo").distinct()
+    n_repos = repos.count()
+    dim.add_check_constraint("boost_nonneg", "boost >= 0")
+    eng.apply_dim_epoch(dim, _dim_rows(repos, lsn=1), epoch=0)
+    eng.apply_epoch(ev, t, epoch=0, collect_metrics=False)
+
+    bad = _dim_rows(repos, lsn=2).withColumn("boost", F.lit(-1).cast("bigint"))
+    res = eng.apply_dim_epoch(dim, bad, epoch=1)
+    assert res["quarantined"] == n_repos
+    assert dim.quarantine().count() == n_repos
+    assert view.snapshot().filter(F.col("boost") < 0).count() == 0
+    assert "repo_meta:1" in view.committed_epochs()
+    _assert_view_equals_batch_join(view, t, dim)
+    ev.unpersist()
+
+
+def test_dim_epoch_maintains_plain_derived_table(spark, tmp_path):
+    """Any table registered on the dim is maintained by apply_dim_epoch, not
+    only join views: a derived_table with main=<dim> holds the dim's rows and
+    records the epoch in its ledger."""
+    eng, t, dim, view, ev = _setup(spark, tmp_path, n_events=500)
+    copy = eng.derived_table(
+        "repo_meta_copy",
+        DIM_SCHEMA,
+        lambda ch: ch.select("repo", "tier", "boost", "last_lsn", "__op"),
+        main="repo_meta",
+        key_cols=["repo"],
+        n_buckets=4,
+    )
+    repos = ev.select("repo").distinct()
+    res = eng.apply_dim_epoch(dim, _dim_rows(repos, lsn=1), epoch=0)
+    assert set(res["derived_applied"]) == {"files_meta", "repo_meta_copy"}
+    assert "0" in copy.committed_epochs()
+    cols = [c for c, _ in DIM_SCHEMA]
+    got = {tuple(r) for r in copy.snapshot().select(*cols).collect()}
+    exp = {tuple(r) for r in dim.snapshot().select(*cols).collect()}
+    assert got == exp and len(got) > 0
+    ev.unpersist()
