@@ -1622,7 +1622,11 @@ class Engine:
         ``source`` frame, the same determinism contract as
         ``apply_epoch``'s WAL slice. CHECK constraints gate before the
         fan-out, like ``apply_epoch``. Same unregistered-derived refusal
-        contract as ``purge_where`` (``main_only=True`` overrides).
+        contract as ``purge_where`` (``main_only=True`` overrides). With an
+        SCD2 history table pending, a clause that deletes or leaves
+        ``last_lsn`` unset raises ``ValueError`` before any write: the
+        history orders versions by ``last_lsn`` and would keep the old
+        version open.
 
         ``atomic=True`` publishes the main merge and every derived merge
         from ONE multi-table transaction through ``_apply_lineage``, the
@@ -1632,6 +1636,23 @@ class Engine:
         if not main_only:
             self._require_registered(table_name(table), "merge_into")
         pending = self._pending(table, epoch)
+        # SCD2 history orders versions by last_lsn: a clause that keeps the
+        # target's lsn (every delete, an update leaving last_lsn unset) would
+        # land there as a late event and leave the old version open
+        history = sorted(table_name(t) for t, _, kind in pending if kind == "history")
+        keeps_lsn = [
+            c
+            for c in (when_matched or []) + (when_not_matched_by_source or [])
+            if c.get("action") == "delete" or "last_lsn" not in (c.get("set") or {})
+        ]
+        if history and keeps_lsn:
+            raise ValueError(
+                f"merge_into on '{table_name(table)}' cannot maintain SCD2 "
+                f"history table(s) {history}: clauses {keeps_lsn} delete or "
+                "leave last_lsn unset, which the history would record as "
+                "late events; nothing was written — set last_lsn in every "
+                "update clause and apply deletes as change events (apply_epoch)"
+            )
         main_done = str(epoch) in table.committed_epochs()
         if main_done and not pending:
             return {"epoch": epoch, "applied": False}

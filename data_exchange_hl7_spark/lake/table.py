@@ -2,11 +2,11 @@
 
 This container ships no Iceberg/Delta jars, so the lake layer is implemented
 in-repo: immutable parquet data files, a JSON snapshot log, an atomically
-swapped ``current`` pointer, field-ID based schema evolution, and
-copy-on-write keyed MERGE over hash buckets. The public surface (merge /
-add_column / rename_column / widen_column / snapshot / epoch manifest) is the
-subset of Iceberg the engine needs; on a real cluster the same calls map 1:1
-onto ``MERGE INTO`` + ``ALTER TABLE`` against an Iceberg catalog.
+swapped ``current`` pointer, field-ID based schema evolution, and keyed
+MERGE over hash buckets (copy-on-write or merge-on-read). The public surface
+(merge / add_column / rename_column / widen_column / snapshot / epoch
+manifest) is the subset of Iceberg the engine needs; on a real cluster the
+same calls map 1:1 onto ``MERGE INTO`` + ``ALTER TABLE`` against Iceberg.
 
 Reference semantics covered here:
   - Cosmos DB bulk upsert (fns-sidecars/fn-sc-cosmosdb-sink Function.kt:39-82,
@@ -40,6 +40,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _TYPE_MAP = {
     "string": T.StringType(),
@@ -77,6 +78,10 @@ def _spark_type(name: str) -> T.DataType:
     if name.startswith("array<"):
         return T.ArrayType(_spark_type(name[6:-1].strip()))
     return _TYPE_MAP[name]
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -994,7 +999,9 @@ class LakeTable:
     # ------------------------------------------------------------ read
     def _empty_df(self, fields: list[dict]) -> DataFrame:
         st = T.StructType([T.StructField(f["name"], _spark_type(f["type"])) for f in fields])
-        return self.spark.createDataFrame([], st)
+        # an empty Arrow table gives a LocalRelation; an empty list would
+        # give a LogicalRDD, and every action over it runs an extra job
+        return self.spark.createDataFrame(to_arrow_schema(st).empty_table(), st)
 
     def _read_files(
         self, files: list[str], file_sv: int, snap: dict, with_op: bool = False
@@ -1174,23 +1181,79 @@ class LakeTable:
             e = term if e is None else (e & term)
         return e
 
-    def _base_df(
-        self, snap: dict, buckets: list[int] | None, where=None
-    ) -> DataFrame | None:
-        groups: dict[int, list[str]] = {}
+    def _layer_files(
+        self, snap: dict, buckets: list[int] | None = None, where=None
+    ) -> list[tuple[int, int, list[str]]]:
+        """The files a read of ``snap`` opens, as ``(seq, schema_version,
+        files)``: the base files grouped by schema version at ``seq = -1``,
+        then one entry per delta layer at its layer index. Metadata only:
+        files outside ``buckets`` or whose manifest stats rule out ``where``
+        (``_prune``) are left out, and so are layers left empty."""
+        keep = None if buckets is None else set(buckets)
+        base: dict[int, list[str]] = {}
         for b, entry in snap["buckets"].items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            files = self._prune(entry["files"], entry.get("stats"), where)
+            if keep is None or int(b) in keep:
+                files = self._prune(entry["files"], entry.get("stats"), where)
+                if files:
+                    base.setdefault(entry["schema_version"], []).extend(files)
+        layers = [(-1, sv, fs) for sv, fs in base.items()]
+        for seq, d in enumerate(snap.get("deltas", [])):
+            files = [
+                p
+                for b, fs in d["files"].items()
+                if keep is None or int(b) in keep
+                for p in self._prune(fs, d.get("stats"), where)
+            ]
             if files:
-                groups.setdefault(entry["schema_version"], []).extend(files)
-        if not groups:
-            return None
-        dfs = [self._read_files(fs, sv, snap) for sv, fs in groups.items()]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+                layers.append((seq, d["schema_version"], files))
+        return layers
+
+    def _read_layers(
+        self, snap: dict, layers: list[tuple[int, int, list[str]]], tagged: bool
+    ) -> DataFrame | None:
+        """One frame over ``_layer_files`` entries, projected to the current
+        schema (``None`` when there is nothing to read), so an untagged read
+        never selects the physical ``__op`` column of delta files. ``tagged``
+        adds what the latest-resolve orders by: ``__op`` (``'U'`` for base
+        rows, which carry no tombstones) and ``__seq`` (the layer index)."""
+        parts = []
+        for seq, sv, files in layers:
+            df = self._read_files(files, sv, snap, with_op=tagged and seq >= 0)
+            if tagged:
+                if seq < 0:
+                    df = df.withColumn("__op", F.lit("U"))
+                df = df.withColumn("__seq", F.lit(seq))
+            parts.append(df)
+        return _union(parts) if parts else None
+
+    def _resolve(self, df: DataFrame, snap: dict, with_tombstones: bool) -> DataFrame:
+        """Resolve MoR layers to one row per key. ``resolve='sum'``: one hash
+        agg sums every layer (``df`` untagged). Otherwise one window over the
+        key ordered by (order_col desc, ``__seq`` desc) keeps the newest row
+        (``df`` tagged) — the latest-flag plan of the A1 operator. Tombstones
+        are dropped unless ``with_tombstones``, which keeps ``__op``."""
+        fields = self.schema_fields(snap)
+        names = [f["name"] for f in fields]
+        keys = snap["key_cols"]
+        if snap.get("resolve", "latest") == "sum":
+            # cast back to the declared types (Spark widens sum(int) to bigint)
+            aggs = [
+                F.sum(f["name"]).cast(_spark_type(f["type"])).alias(f["name"])
+                for f in fields
+                if f["name"] not in keys
+            ]
+            out = df.groupBy(*keys).agg(*aggs).select(*names)
+            # additive layers carry no tombstones
+            return out.withColumn("__op", F.lit("U")) if with_tombstones else out
+        w = Window.partitionBy(*keys).orderBy(
+            F.col(snap["order_col"]).desc_nulls_last(), F.col("__seq").desc()
+        )
+        winner = df.withColumn("__rn", F.row_number().over(w)).filter(
+            F.col("__rn") == 1
+        )
+        if with_tombstones:
+            return winner.select(*names, "__op")
+        return winner.filter(F.col("__op") == "U").select(*names)
 
     def snapshot(
         self,
@@ -1215,9 +1278,11 @@ class LakeTable:
         semantically identical to post-filtering and is the point-lookup
         fast path the engine's aggregate views use for pre-epoch state.
 
-        In MoR mode this resolves base + delta files: one window over
-        (key) ordered by (order_col desc, file sequence desc), keep first,
-        drop tombstones — the same latest-flag plan as the A1 operator.
+        One read path: ``_layer_files`` plans the files from the manifest,
+        ``_read_layers`` reads them as one frame, and — when delta layers
+        exist — ``_resolve`` keeps one row per key: the A1 operator's
+        latest-flag plan (window over key, order_col desc then layer index
+        desc, keep first, drop tombstones), or a per-key sum for 'sum'.
 
         ``as_of``: read a PAST committed snapshot by id (Iceberg
         ``VERSION AS OF`` time travel). Requires the snapshot metadata and
@@ -1256,21 +1321,21 @@ class LakeTable:
             snap = self._load_snapshot(
                 self._resolve_ref(as_of) if as_of is not None else None
             )
-        deltas = snap.get("deltas", [])
         keys = snap["key_cols"]
+        resolve = bool(snap.get("deltas"))
         additive = snap.get("resolve", "latest") == "sum"
         # stats-based file skipping: sound for any predicate in CoW (rows are
         # independent), key-column predicates only in MoR (a key's state is
         # split across layers — pruning a layer by a value predicate would
         # drop part of a latest-resolution or of a sum)
         prune_where = where
-        if (deltas or additive) and where:
+        if (resolve or additive) and where:
             prune_where = [w for w in where if w[0] in keys]
-        base = self._base_df(snap, buckets, prune_where)
-
-        def _restrict(df: DataFrame) -> DataFrame:
-            if keys_in is None:
-                return df
+        layers = self._layer_files(snap, buckets, prune_where)
+        out = self._read_layers(snap, layers, tagged=resolve and not additive)
+        if out is None:  # nothing to read, so nothing to resolve
+            out, resolve = self._empty_df(self.schema_fields(snap)), False
+        if keys_in is not None:
             # subset restriction: join on the key columns the frame carries
             kcols = [k for k in keys if k in keys_in.columns]
             if not kcols:
@@ -1278,84 +1343,16 @@ class LakeTable:
                     f"keys_in shares no columns with key_cols {keys}"
                 )
             # a LEFT SEMI join emits each left row at most once, so
-            # duplicate keys need no distinct (which would cost a job)
-            return df.join(keys_in.select(*kcols), kcols, "left_semi")
-
-        if not deltas:
-            # additive base is already folded by compact (one row per key)
-            out = base if base is not None else self._empty_df(self.schema_fields(snap))
-            out = _restrict(out)
-            if with_tombstones:
-                out = out.withColumn("__op", F.lit("U"))  # no tombstones here
-            return out.filter(self._where_expr(where)) if where else out
-
-        if additive:
-            fields = self.schema_fields(snap)
-            parts = [] if base is None else [base]
-            for d in deltas:
-                files = []
-                for b, fs in d["files"].items():
-                    if buckets is not None and int(b) not in buckets:
-                        continue
-                    files.extend(self._prune(fs, d.get("stats"), prune_where))
-                if files:
-                    # _read_files projects to the current schema only, so the
-                    # physical __op column in delta files is never selected
-                    parts.append(self._read_files(files, d["schema_version"], snap))
-            if not parts:
-                out = self._empty_df(fields)
-                # keep the with_tombstones column contract independent of
-                # compaction state (additive layers carry no tombstones)
-                return out.withColumn("__op", F.lit("U")) if with_tombstones else out
-            allp = parts[0]
-            for p in parts[1:]:
-                allp = allp.unionByName(p)
-            allp = _restrict(allp)  # before the agg: sums only requested keys
-            # one hash agg resolves the sum; cast back to the declared types
-            # (Spark widens sum(int) to bigint)
-            aggs = [
-                F.sum(f["name"]).cast(_spark_type(f["type"])).alias(f["name"])
-                for f in fields
-                if f["name"] not in keys
-            ]
-            out = allp.groupBy(*keys).agg(*aggs).select(*[f["name"] for f in fields])
-            if with_tombstones:
-                out = out.withColumn("__op", F.lit("U"))
-            return out.filter(self._where_expr(where)) if where else out
-
-        parts = []
-        if base is not None:
-            parts.append(base.withColumn("__op", F.lit("U")).withColumn("__seq", F.lit(-1)))
-        for seq, d in enumerate(deltas):
-            files = []
-            for b, fs in d["files"].items():
-                if buckets is not None and int(b) not in buckets:
-                    continue
-                files.extend(self._prune(fs, d.get("stats"), prune_where))
-            if not files:
-                continue
-            parts.append(
-                self._read_files(files, d["schema_version"], snap, with_op=True)
-                .withColumn("__seq", F.lit(seq))
-            )
-        if not parts:
-            out = self._empty_df(self.schema_fields(snap))
-            return out.withColumn("__op", F.lit("U")) if with_tombstones else out
-        allp = parts[0]
-        for p in parts[1:]:
-            allp = allp.unionByName(p)
-        allp = _restrict(allp)  # before the window: resolve only requested keys
-        oc = snap["order_col"]
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(oc).desc_nulls_last(), F.col("__seq").desc()
-        )
-        winner = allp.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") == 1
-        )
-        if with_tombstones:
-            out = winner.drop("__rn", "__seq")
-        else:
-            out = winner.filter(F.col("__op") == "U").drop("__rn", "__op", "__seq")
+            # duplicate keys need no distinct (which would cost a job).
+            # It runs before the resolve: only requested keys are resolved
+            out = out.join(keys_in.select(*kcols), kcols, "left_semi")
+        if resolve:
+            out = self._resolve(out, snap, with_tombstones)
+        elif with_tombstones:
+            # same column contract whatever the compaction state: with no
+            # delta layers, an additive base is already folded by compact
+            # (one row per key) and no base carries tombstones
+            out = out.withColumn("__op", F.lit("U"))
         return out.filter(self._where_expr(where)) if where else out
 
     def lookup(
@@ -1392,7 +1389,9 @@ class LakeTable:
 
         Returns the resolved rows (latest per key, tombstones dropped); with
         ``with_stats=True`` returns ``(df, stats)`` where stats reports the
-        manifest-level file pruning so tests and operators can SEE the skip.
+        manifest-level file pruning so tests and operators can SEE the skip:
+        ``files_read`` counts the files ``_layer_files`` plans for the read,
+        the same list ``snapshot()`` hands to ``_read_layers``.
         """
         snap = self._load_snapshot(
             self._resolve_ref(as_of) if as_of is not None else None
@@ -1422,23 +1421,16 @@ class LakeTable:
         )
         if not with_stats:
             return out
-        total = read = 0
-        for b, entry in snap["buckets"].items():
-            if int(b) not in buckets:
-                continue
-            total += len(entry["files"])
-            read += len(self._prune(entry["files"], entry.get("stats"), where))
-        for d in snap.get("deltas", []):
-            for b, fs in d["files"].items():
-                if int(b) not in buckets:
-                    continue
-                total += len(fs)
-                read += len(self._prune(fs, d.get("stats"), where))
+
+        def n_files(layers):
+            return sum(len(files) for _, _, files in layers)
+
+        # where holds key columns only, so the read above pruned by it too
         return out, {
             "buckets_read": len(buckets),
             "buckets_total": snap["n_buckets"],
-            "files_in_buckets": total,
-            "files_read": read,
+            "files_in_buckets": n_files(self._layer_files(snap, buckets)),
+            "files_read": n_files(self._layer_files(snap, buckets, where)),
         }
 
     def changes_between(self, from_sid: int, to_sid: int | None = None) -> DataFrame:
@@ -1487,10 +1479,7 @@ class LakeTable:
                 .withColumn("_commit_snapshot", F.lit(0))
                 .limit(0)
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     def changes_with_preimages(
         self, from_sid: int, to_sid: int | None = None
@@ -1583,10 +1572,7 @@ class LakeTable:
                 .withColumn("_commit_snapshot", F.lit(0))
                 .limit(0)
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     # ------------------------------------------------------------ merge
     @staticmethod
@@ -2069,17 +2055,10 @@ class LakeTable:
             }
 
         # old rows of the touched buckets, minus keys present in the changes
-        existing = {int(b): e for b, e in snap["buckets"].items()}
-        touched_with_data = [b for b in changed_buckets if b in existing]
-        groups: dict[int, list[str]] = {}
-        for b in touched_with_data:
-            e = existing[b]
-            groups.setdefault(e["schema_version"], []).extend(e["files"])
-        if groups:
-            olds = [self._read_files(fs, sv, snap) for sv, fs in groups.items()]
-            old_df = olds[0]
-            for d in olds[1:]:
-                old_df = old_df.unionByName(d)
+        # (a CoW table has no delta layers: the plan is base files only)
+        layers = self._layer_files(snap, changed_buckets)
+        old_df = self._read_layers(snap, layers, tagged=False)
+        if old_df is not None:
             # broadcast the changed-key set only while it is broadcast-sized;
             # a huge epoch (10^8 changed keys) would overflow the driver —
             # above the limit let AQE pick the anti-join strategy at runtime
@@ -2420,7 +2399,8 @@ class LakeTable:
         such guarantee: dropping a delete's lsn memory lets a
         late-arriving older upsert resurrect the deleted key. Here the
         per-key winner (latest order_col, layer index as tiebreaker —
-        exactly ``snapshot()``'s resolution order) is kept INCLUDING
+        exactly ``snapshot()``'s resolution order: both call ``_resolve``
+        over ``_layer_files`` / ``_read_layers``) is kept INCLUDING
         final-state deletes, so resolution is unchanged under ANY future
         arrival order; future merges still win order_col ties via their
         higher layer index. resolve='sum' tables fold additively (one
@@ -2451,47 +2431,11 @@ class LakeTable:
                 "dirty_buckets": 0,
             }
         dirty_set = set(dirty)
-        fields = self.schema_fields(snap)
-        names = [f["name"] for f in fields]
-        keys = snap["key_cols"]
-        parts = []
-        for seq, d in enumerate(deltas):
-            files = [
-                p
-                for b, fs in d["files"].items()
-                if int(b) in dirty_set
-                for p in fs
-            ]
-            if files:
-                parts.append(
-                    self._read_files(files, d["schema_version"], snap, with_op=True)
-                    .withColumn("__seq", F.lit(seq))
-                )
-        allp = parts[0]
-        for p in parts[1:]:
-            allp = allp.unionByName(p)
-        if snap.get("resolve") == "sum":
-            aggs = [
-                F.sum(f["name"]).cast(_spark_type(f["type"])).alias(f["name"])
-                for f in fields
-                if f["name"] not in keys
-            ]
-            resolved = (
-                allp.groupBy(*keys)
-                .agg(*aggs)
-                .withColumn("__op", F.lit("U"))
-                .select(*names, "__op")
-            )
-        else:
-            oc = snap["order_col"]
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(oc).desc_nulls_last(), F.col("__seq").desc()
-            )
-            resolved = (
-                allp.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)  # keep D rows: the tombstones
-                .select(*names, "__op")
-            )
+        # the dirty buckets' delta layers only: the base is never read
+        layers = [lf for lf in self._layer_files(snap, dirty) if lf[0] >= 0]
+        additive = snap.get("resolve", "latest") == "sum"
+        df = self._read_layers(snap, layers, tagged=not additive)
+        resolved = self._resolve(df, snap, with_tombstones=True)  # keep D rows
         out_rel = self._staging_rel("d", snap["snapshot_id"] + 1)
         to_write = resolved.withColumn("__bucket", self._bucket_expr(snap)).repartition(
             max(len(dirty), 1), "__bucket"

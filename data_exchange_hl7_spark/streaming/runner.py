@@ -38,6 +38,20 @@ from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 MAX_SCAN_TASKS = 20_000  # upper bound on splits for one WAL scan
 
+
+def require_consolidate_opts(compact_opts: dict | None, who: str) -> None:
+    """Refuse ``compact_opts`` that ``consolidate_deltas`` cannot take (it
+    takes ``max_delta_depth`` only) when ``who`` maintains with it, so an
+    option is never silently dropped nor fails mid-run, after a batch has
+    already applied."""
+    dropped = sorted(set(compact_opts or {}) - {"max_delta_depth"})
+    if dropped:
+        raise ValueError(
+            f"{who} maintains with consolidate_deltas, which takes only "
+            f"max_delta_depth; got compact_opts {dropped}"
+        )
+
+
 _BYTE_SUFFIX = {
     "b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
     "g": 1024**3, "gb": 1024**3, "t": 1024**4, "tb": 1024**4,
@@ -125,12 +139,8 @@ class MicroBatchRunner:
         # Under txn_boundaries maintenance is consolidate_deltas, which
         # takes max_delta_depth only: refuse the rest rather than drop it.
         self.compact_opts = compact_opts or {}
-        dropped = sorted(set(self.compact_opts) - {"max_delta_depth"})
-        if txn_boundaries and dropped:
-            raise ValueError(
-                "txn_boundaries=True maintains with consolidate_deltas, which "
-                f"takes only max_delta_depth; got compact_opts {dropped}"
-            )
+        if txn_boundaries:
+            require_consolidate_opts(self.compact_opts, "txn_boundaries=True")
 
     def run(
         self,

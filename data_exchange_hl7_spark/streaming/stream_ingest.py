@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_exchange_hl7_spark.engine import Engine
 from data_exchange_hl7_spark.lake.table import LakeTable
+from data_exchange_hl7_spark.streaming.runner import require_consolidate_opts
 from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 
@@ -73,6 +74,9 @@ def stream_apply(
     without a recorded base keeps base 0 (upgrade compatibility)."""
     if txn_boundaries:
         require_mor(table)
+    # refused here, not at the compact_every-th batch: that batch would
+    # already have applied, and every restart would re-deliver it and fail
+    require_consolidate_opts(compact_opts, "stream_apply")
     reader = spark.readStream
     if schema:
         reader = reader.schema(schema)

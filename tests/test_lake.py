@@ -102,6 +102,100 @@ def test_reads_span_schema_versions(spark, tmp_path):
         t.compact()
 
 
+@pytest.mark.parametrize("resolve", ["latest", "sum"])
+def test_read_shapes_match_model(spark, tmp_path, resolve):
+    """Every read shape against a Python model of the table, on a base at
+    two schema versions plus three delta layers (the middle one deletes,
+    or subtracts for resolve='sum'), before and after consolidate_deltas:
+    a bucket subset, a key-column and a non-key-column ``where``, a
+    key-prefix ``keys_in`` and ``with_tombstones``. A lookup's
+    ``files_read`` equals the files its frame scans."""
+    additive = resolve == "sum"
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"),
+        [("g", "string"), ("k", "string"), ("n", "int"), ("lsn", "bigint")],
+        ["g", "k"], n_buckets=4, mode="mor",
+        order_col=None if additive else "lsn", resolve=resolve,
+    )
+    model: dict = {}  # (g, k) -> [n, m, lsn, op]
+    epoch = iter(range(100))
+
+    def merge(rows):  # (g, k, n, m, lsn, op); m is left out before it exists
+        df = spark.createDataFrame(
+            rows, "g string, k string, n int, m int, lsn long, __op string"
+        )
+        has_m = "m" in [f["name"] for f in t.schema_fields()]
+        t.merge(df if has_m else df.drop("m"), epoch=next(epoch))
+        for g, k, n, m, lsn, op in rows:
+            old = model.get((g, k))
+            if additive:
+                old = old or [0, 0, 0, "U"]
+                model[(g, k)] = [old[0] + n, old[1] + (m or 0), old[2] + lsn, "U"]
+            elif old is None or lsn >= old[2]:  # a later layer wins an lsn tie
+                model[(g, k)] = [n, m, lsn, op]
+
+    keys = [(g, str(i)) for g in "ab" for i in range(6)]
+    merge([(g, k, int(k) + 1, None, 1, "U") for g, k in keys])
+    t.compact()
+    t.add_column("m", "int", default=7)
+    for v in model.values():
+        v[1] = 7  # base rows predate m: they read its initial default
+    merge([("a", "0", 50, 1, 2, "U")])
+    t.compact()  # rewrites one bucket only: the base spans two versions
+    base = t.current_snapshot()["buckets"]
+    assert len({e["schema_version"] for e in base.values()}) == 2
+    merge([(g, k, 10 * int(k), 2, 3, "U") for g, k in keys[::2]]
+          + [("c", "9", 9, 9, 3, "U")])
+    if additive:
+        merge([(g, k, -1, -1, 0, "U") for g, k in keys[1::3]])
+    else:
+        merge([(g, k, None, None, 4, "D") for g, k in keys[1::3]])
+    # ("a", "1") ties its layer-1 delete on lsn and wins as the later layer;
+    # ("a", "2") arrives with an older lsn than layer 0's and loses
+    merge([(g, k, 100 + int(k), 3, 4, "U") for g, k in keys[::3] + keys[1:2]]
+          + [("a", "2", 0, 0, 2, "U")])
+    assert len(t.current_snapshot()["deltas"]) == 3
+
+    bucket_of = {
+        (r["g"], r["k"]): r["b"]
+        for r in spark.createDataFrame(list(model), "g string, k string")
+        .select("g", "k", t.bucket_expr().alias("b")).collect()
+    }
+
+    def want(keep=lambda key, v: True, tombstones=False):
+        return {
+            key: tuple(v[:3]) + ((v[3],) if tombstones else ())
+            for key, v in model.items()
+            if (tombstones or v[3] == "U") and keep(key, v)
+        }
+
+    def got(df):
+        return {(r["g"], r["k"]): tuple(r)[2:] for r in df.collect()}
+
+    b0 = bucket_of[("a", "1")]
+    t_cols = ["g", "k", "n", "m", "lsn"]
+    for stage in ("layers", "consolidated"):
+        assert got(t.snapshot().select(*t_cols)) == want(), stage
+        assert got(t.snapshot(buckets=[b0]).select(*t_cols)) == want(
+            lambda key, v: bucket_of[key] == b0), stage
+        assert got(t.snapshot(where=[("g", "=", "a")]).select(*t_cols)) == want(
+            lambda key, v: key[0] == "a"), stage
+        # lsn has manifest stats, so a pruned layer would resurrect an
+        # older version (latest) or drop a partial sum
+        assert got(t.snapshot(where=[("lsn", "<", 3)]).select(*t_cols)) == want(
+            lambda key, v: v[2] < 3), stage
+        prefix = spark.createDataFrame([("b",)], "g string")
+        assert got(t.snapshot(keys_in=prefix).select(*t_cols)) == want(
+            lambda key, v: key[0] == "b"), stage
+        tomb = t.snapshot(with_tombstones=True).select(*t_cols, "__op")
+        assert got(tomb) == want(tombstones=True), stage
+        df, st = t.lookup([("a", "0"), ("b", "4"), ("c", "9")], with_stats=True)
+        assert got(df.select(*t_cols)) == want(
+            lambda key, v: key in {("a", "0"), ("b", "4"), ("c", "9")}), stage
+        assert st["files_read"] == len(df.inputFiles()), (stage, st)
+        assert t.consolidate_deltas()["consolidated"] or stage == "consolidated"
+
+
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 def test_merge_writes_manifest_types(spark, tmp_path, mode):
     """A change frame whose column types differ from the manifest (n as

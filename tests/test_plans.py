@@ -273,6 +273,38 @@ def test_table_reads_plan_without_jobs(spark, tmp_path):
     assert n_collect <= 3, f"8-key lookup ran {n_collect} jobs"
 
 
+def test_empty_table_reads_are_local_relations(spark, tmp_path):
+    """A read with no file to open (a fresh table, no quarantine sidecar,
+    an empty change-feed window) builds its frame from an empty Arrow
+    table: a LocalRelation, not a LogicalRDD, whose every action runs an
+    extra job. Covers each column type an empty frame must carry."""
+    from data_exchange_hl7_spark.lake.table import LakeTable
+
+    schema = [
+        ("k", "string"), ("n", "bigint"), ("tags", "array<string>"),
+        ("attrs", "map<string,int>"), ("ts", "timestamp"), ("d", "date"),
+        ("b", "binary"), ("lsn", "bigint"),
+    ]
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), schema, ["k"], n_buckets=4, mode="mor",
+        order_col="lsn",
+    )
+    sid = t.current_snapshot()["snapshot_id"]
+    frames = {
+        "snapshot": t.snapshot(),
+        "quarantine": t.quarantine(),
+        "changes_between": t.changes_between(sid),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (name, plan)
+        assert [f.dataType.simpleString() for f in df.schema][: len(schema)] == [
+            "string", "bigint", "array<string>", "map<string,int>", "timestamp",
+            "date", "binary", "bigint",
+        ], name
+        assert df.count() == 0
+
+
 def test_kmeans_assignment_broadcasts_centroids(spark):
     """Lloyd's assignment must broadcast the k centroids (never shuffle the
     corpus against them) and keep the whole loop JVM-side. The trained

@@ -544,3 +544,26 @@ def test_stream_apply_atomic_batches(spark, tmp_path):
     assert main_keys == derived_keys and main_keys
     # all transactions retired
     assert MultiTableTransaction.recover(spark, str(tmp_path / "wh" / "_txn")) == []
+
+
+def test_stream_apply_refuses_unsupported_compact_opts(spark, tmp_path):
+    """The stream maintains with consolidate_deltas, which takes only
+    max_delta_depth: any other compact_opts key is refused before the
+    stream starts. Raising at the compact_every-th batch instead would come
+    after that batch applied, and every restart would fail on it again."""
+    import pytest
+
+    src = str(tmp_path / "wal")
+    change_events(spark, 200).write.mode("overwrite").parquet(src)
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    table = eng.snapshot_table("repo_files")
+    before = table.current_snapshot()["snapshot_id"]
+    with pytest.raises(ValueError, match="sort_cols"):
+        stream_apply(
+            spark, eng, src, table, str(tmp_path / "ckpt"), compact_every=1,
+            compact_opts={"max_delta_depth": 1, "sort_cols": ["repo", "path"]},
+        )
+    assert not spark.streams.active  # no query started
+    assert not (tmp_path / "ckpt").exists()
+    assert table.current_snapshot()["snapshot_id"] == before
+    assert table.committed_epochs() == {}

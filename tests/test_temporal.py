@@ -361,3 +361,35 @@ def test_asof_join_refuses_prefixed_column_collision(spark):
     )
     with _pytest.raises(ValueError, match="asof_status"):
         temporal.asof_join(facts, dim, ["key"], "lsn", ["status"])
+
+
+def test_engine_merge_into_refuses_clauses_scd2_history_misrecords(spark, tmp_path):
+    """SCD2 history orders versions by last_lsn, so a merge_into clause that
+    keeps the target's lsn (a DELETE, or an UPDATE leaving last_lsn unset)
+    would land as a late event and leave the old version open (reproduced:
+    a DELETE of 20 keys left 20 open versions for keys the main table no
+    longer holds). Such clauses are refused before any write; an update
+    that sets last_lsn still maintains the history."""
+    import pytest
+
+    eng, t, hist = _scd2_engine(spark, tmp_path, n=2000)
+    keys = t.snapshot().select("repo", "path").orderBy("repo", "path").limit(20)
+    src = spark.createDataFrame(keys.collect(), "repo string, path string")
+    src = src.withColumn("lsn", F.lit(5000).cast("long"))
+    sids = (t.current_snapshot()["snapshot_id"], hist.current_snapshot()["snapshot_id"])
+    refused = [
+        [{"condition": None, "action": "delete"}],
+        [{"condition": None, "action": "update", "set": {"content": "'x'"}}],
+    ]
+    for clauses in refused:
+        with pytest.raises(ValueError, match="scd2_history"):
+            eng.merge_into(t, src, when_matched=clauses, epoch=9000)
+        assert (t.current_snapshot()["snapshot_id"],
+                hist.current_snapshot()["snapshot_id"]) == sids
+    eng.merge_into(t, src, epoch=9000, when_matched=[
+        {"condition": None, "action": "update",
+         "set": {"content": "'x'", "last_lsn": "s.lsn"}}])
+    cur = hist.snapshot().filter("is_current")
+    assert {(r["repo"], r["path"], r["valid_from_lsn"]) for r in cur.collect()} == {
+        (r["repo"], r["path"], r["last_lsn"]) for r in t.snapshot().collect()
+    }
