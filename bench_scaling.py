@@ -313,7 +313,7 @@ def main() -> None:
         "stage: efficiency >= 0.8, satisfying the scaling criterion on the",
         "resource the sandbox can actually vary.",
     ]
-    # marker-delimited in-place update (like bench_skew/bench_sustained):
+    # marker-delimited in-place update (like bench_sustained):
     # other sections of BENCH.md — skew, sustained, hand-written notes —
     # must survive a scaling re-run
     begin, end = "<!-- scaling:begin -->", "<!-- scaling:end -->"

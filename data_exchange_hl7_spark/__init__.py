@@ -4,8 +4,8 @@ A from-scratch re-expression of the semantics of CDCgov/data-exchange-hl7
 (reference at /root/reference, survey in SURVEY.md) as an idiomatic PySpark
 engine: a binlog/WAL-style change-event stream over a lake table of
 source-code repositories is replayed through key-partitioned MERGE/upsert
-apply with deterministic per-(repo, path) LSN ordering, salted skew handling,
-schema evolution, and exactly-once idempotent commits.
+apply with deterministic per-(repo, path) LSN ordering, schema evolution,
+and exactly-once idempotent commits.
 
 Reference semantic map (SURVEY.md section 7.1):
   debatch (fn-receiver-debatcher Function.kt:104-170) -> operators.debatch

@@ -7,7 +7,7 @@ One micro-batch (epoch) flows:
  -> validate + branch                  (V1-V3 verdicts, K2 router)
  -> apply schema events                (mergeSchema analogue -> lake DDL)
  -> RENAME -> delete+upsert rewrite    (debatch-style explode, narrow)
- -> latest-per-key window dedup        (A1, salted for hot keys)
+ -> latest-per-key window dedup        (A1)
  -> lake MERGE w/ epoch manifest       (K3 bulk upsert, exactly-once)
  -> metrics + lineage append           (A3/A4/K5 report tables)
 
@@ -294,18 +294,14 @@ class Engine:
         warehouse: str,
         n_buckets: int = 64,
         mode: str = "cow",
-        salt_keys: int | None = None,
     ):
         """``mode``: "cow" (read-optimized) or "mor" (write-optimized
         merge-on-read — the 10^10-event configuration; pair with periodic
-        compaction via MicroBatchRunner(compact_every=K)). ``salt_keys``:
-        use two-phase salted dedup with this many salts when individual
-        (repo, path) keys are hot (e.g. one file updated in most events)."""
+        compaction via MicroBatchRunner(compact_every=K))."""
         self.spark = spark
         self.warehouse = warehouse
         self.n_buckets = n_buckets
         self.mode = mode
-        self.salt_keys = salt_keys
         # main-table name -> [(derived LakeTable, derive fn, kind)] where
         # kind is "derived" or "aggregate" — see derived_table / _register
         self._derived: dict[str, list[tuple[LakeTable, Any, str]]] = {}
@@ -1393,26 +1389,16 @@ class Engine:
         # MERGE write below is shuffle-free (bucket = f(key), so one hash
         # exchange serves both the per-key window and the bucketed layout).
         # The dedup key is (repo, path): a hot REPO spreads over its many
-        # paths, so per-key skew stays mild; the salted two-phase variant is
-        # for genuinely hot single keys (salt_keys option).
+        # paths, so per-key skew stays mild.
         order_cols = ["lsn", "ts", "event_id"]
         # the table's CURRENT bucket count (may differ from the engine's
         # creation-time default after a rebucket) keeps the dedup exchange
         # aligned with the storage layout
         snap = table.current_snapshot()
-        if self.salt_keys:
-            # no __bucket column here: the salted window leaves the frame
-            # partitioned by key, not by bucket, and the MoR merge takes a
-            # __bucket column to mean the frame is already bucket-partitioned
-            # (every task would then write into every bucket dir)
-            latest = dedup_ops.latest_by_key_salted(
-                flat, KEY_COLS, order_cols, n_salts=self.salt_keys
-            )
-        else:
-            flat = flat.withColumn("__bucket", table.bucket_expr())
-            latest = dedup_ops.latest_by_key_bucketed(
-                flat, KEY_COLS, order_cols, n_buckets=snap["n_buckets"]
-            )
+        flat = flat.withColumn("__bucket", table.bucket_expr())
+        latest = dedup_ops.latest_by_key_bucketed(
+            flat, KEY_COLS, order_cols, n_buckets=snap["n_buckets"]
+        )
 
         # populate evolved extra columns from supporting_metadata
         schema_meta = snap["properties"].get("schema_meta", {})
@@ -1427,7 +1413,7 @@ class Engine:
 
         cleaned = F.coalesce(F.col("content"), F.lit(""))
         changes = latest.select(
-            *([] if self.salt_keys else [F.col("__bucket")]),
+            F.col("__bucket"),
             F.col("repo"),
             F.col("path"),
             F.col("commit"),
@@ -1472,9 +1458,6 @@ class Engine:
             "rejected": got["rejected"] or 0,
             "schema_changes": got["schema_changes"] or 0,
         }
-        bucket = (
-            F.col("__bucket") if "__bucket" in changes.columns else table.bucket_expr()
-        )
         # the per-bucket lineage agg scans the changes cache (one Spark job);
         # its RESULT is metadata-sized (<= n_buckets rows), so both report
         # tables are then written driver-side — launching Spark write jobs
@@ -1482,7 +1465,7 @@ class Engine:
         # per-epoch fixed cost, and fixed cost is what bounds small-epoch
         # sustained throughput at the 10^10-event target
         lineage_rows = (
-            changes.groupBy(bucket.alias("partition_id"))
+            changes.groupBy(F.col("__bucket").alias("partition_id"))
             .agg(
                 F.count("*").alias("keys_changed"),
                 F.sum((F.col("__op") == "D").cast("int")).alias("deleted"),

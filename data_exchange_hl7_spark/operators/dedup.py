@@ -15,11 +15,6 @@ file ts, latest_flag_and_sequencing.scala:77-142) but ends in a total order:
 the reference admits irresolvable ties ("not_solvable_dupe",
 latest_flag_and_sequencing.scala:122-123 TODO); we append event_id as the
 final tie-break so every replay is deterministic (SURVEY.md section 7.4).
-
-Skew: a hot key (one repo ~30% of traffic) makes the single window shuffle
-skewed. ``latest_by_key_salted`` does two-phase dedup — a salted within-salt
-window first (uniformly spread), then a tiny cross-salt window over the <=
-n_salts survivors per key.
 """
 
 from __future__ import annotations
@@ -55,35 +50,6 @@ def latest_by_key(
         )
         return out
     return out.filter(F.col("__rn") == 1).drop("__rn")
-
-
-def latest_by_key_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str] | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase latest-per-key for skewed keys (SURVEY.md section 4 'Spill/skew').
-
-    Phase 1 partitions by (key, salt) where salt = hash(order cols) % n_salts,
-    so a hot key's rows spread over n_salts reducers; phase 2 runs the same
-    window over at most n_salts survivors per key — negligible data.
-    """
-    order_cols = order_cols or DEFAULT_ORDER
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(n_salts))
-    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(*_order_desc(order_cols))
-    phase1 = (
-        df.withColumn("__salt", salt)
-        .withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*_order_desc(order_cols))
-    return (
-        phase1.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__salt")
-    )
 
 
 def latest_by_key_bucketed(

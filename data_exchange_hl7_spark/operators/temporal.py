@@ -35,9 +35,10 @@ A lakehouse consumer of the same change feed additionally needs:
 Scale notes (100 TB): every operator here is a single hash exchange on the
 key (or a pure aggregation with map-side combine for ``net_changes``); the
 as-of join never builds a range product — the union trick keeps cost
-O(|facts| + |dim|) through one sort within key partitions. Hot keys follow
-the same salting story as operators/dedup.py (the window variants) — the
-aggregation variant (``net_changes``) is skew-immune by construction.
+O(|facts| + |dim|) through one sort within key partitions. A hot key's
+rows land in one window task, as in operators/dedup.py (the window
+variants) — the aggregation variant (``net_changes``) is skew-immune by
+construction.
 """
 
 from __future__ import annotations

@@ -219,25 +219,6 @@ ORDER BY event_id
 """
 
 
-def latest_state_salted(spark, sf_dir):
-    """Salted two-phase variant of cdc_latest_state — must produce the SAME
-    rows (skew path equivalence proof, SURVEY.md section 4 skew row)."""
-    from data_exchange_hl7_spark.operators.dedup import latest_by_key_salted
-
-    ev = _t(spark, sf_dir, "events").withColumn("lsn", F.col("event_id"))
-    out = latest_by_key_salted(ev, ["user_id"], ["ts", "event_id"], n_salts=8)
-    return (
-        out.filter(F.col("event_type") != "error")
-        .select(
-            "user_id",
-            F.col("event_type").alias("last_op"),
-            F.date_format("ts", TS_FMT_SPARK).alias("last_ts"),
-            F.col("event_id").alias("last_event_id"),
-        )
-        .orderBy("user_id")
-    )
-
-
 def case_id_derivation(spark, sf_dir):
     """A2 case-id derivation: concat_ws('~~', ...)
     (fn_validate_hl7.scala:57-72)."""

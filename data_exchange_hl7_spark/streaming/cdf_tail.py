@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_exchange_hl7_spark.lake.table import LakeTable
-from data_exchange_hl7_spark.operators.dedup import latest_by_key, latest_by_key_salted
+from data_exchange_hl7_spark.operators.dedup import latest_by_key
 
 
 class CdfTailReplicator:
@@ -64,18 +64,11 @@ class CdfTailReplicator:
         replica: LakeTable,
         transform=None,
         max_snapshots_per_poll: int | None = None,
-        salt_hot_keys: int | None = None,
     ) -> None:
         self.upstream = upstream
         self.replica = replica
         self.transform = transform
         self.max_snapshots_per_poll = max_snapshots_per_poll
-        # opt-in two-phase reduce for windows where one key dominates (a
-        # repo/path rewritten millions of times between polls): spread the
-        # hot key over N salted reducers first — same tradeoff as the
-        # engine's salted apply (plain window wins to ~40M rows on one box,
-        # salting is the cluster-scale opt-in; BENCH.md skew section)
-        self.salt_hot_keys = salt_hot_keys
 
     # ------------------------------------------------------------ offsets
     def offset(self) -> int:
@@ -116,13 +109,8 @@ class CdfTailReplicator:
         # _commit_snapshot as the tie-break, mirroring upstream's
         # layer-sequence rule that a future merge wins an order_col tie
         # (lake/table.py read resolution).
-        reduce = latest_by_key
-        if self.salt_hot_keys:
-            reduce = lambda df, k, o: latest_by_key_salted(  # noqa: E731
-                df, k, o, n_salts=self.salt_hot_keys
-            )
         changes = (
-            reduce(feed, keys, [order_col, "_commit_snapshot"])
+            latest_by_key(feed, keys, [order_col, "_commit_snapshot"])
             .drop("_commit_snapshot")
             .withColumnRenamed("_change_type", "__op")
         )

@@ -52,6 +52,49 @@ def require_consolidate_opts(compact_opts: dict | None, who: str) -> None:
         )
 
 
+def _maintain_lineage(
+    engine: Engine,
+    table: LakeTable,
+    compact_opts: dict,
+    keep_last: int | None,
+    keep_tombstones: bool,
+) -> dict:
+    """One maintenance pass over ``table`` and every table registered on it
+    (derived tables accrete delta layers at the same cadence): fold each
+    one's delta layers, then expire its snapshots past ``keep_last`` when
+    set. Returns the main table's ``compaction`` (and ``expiry``) results.
+
+    ``keep_tombstones`` folds with ``consolidate_deltas``: when a later
+    batch can carry an OLDER-lsn event (apply_lsn-sliced gated epochs, a
+    file-arrival-ordered stream), ``compact`` folds to the base and drops
+    delete tombstones, which would let such an event resurrect a deleted
+    key; consolidation keeps them. The main table gets ``compact_opts``
+    unfiltered, so an unknown column still raises; sort_cols/zorder_cols
+    are main-table layout hints, so a derived table keeps only those its
+    schema actually has.
+    """
+
+    def fold(t: LakeTable, opts: dict) -> dict:
+        if keep_tombstones:
+            return t.consolidate_deltas(max_delta_depth=opts.get("max_delta_depth"))
+        return t.compact(**opts)
+
+    out = {"compaction": fold(table, compact_opts)}
+    if keep_last:
+        out["expiry"] = table.expire_snapshots(keep_last)
+    for dt, *_ in engine._derived.get(_tname(table), []):
+        opts = dict(compact_opts)
+        layout_keys = [k for k in ("sort_cols", "zorder_cols") if opts.get(k)]
+        if layout_keys:
+            have = {f["name"] for f in dt.schema_fields()}
+            for k in layout_keys:
+                opts[k] = [c for c in opts[k] if c in have] or None
+        fold(dt, opts)
+        if keep_last:
+            dt.expire_snapshots(keep_last)
+    return out
+
+
 _BYTE_SUFFIX = {
     "b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
     "g": 1024**3, "gb": 1024**3, "t": 1024**4, "tb": 1024**4,
@@ -285,47 +328,13 @@ class MicroBatchRunner:
                 # timed separately so sustained-throughput reports can add it
                 # to the epoch wall instead of silently excluding it
                 m0 = time.time()
-                if self.txn_boundaries:
-                    # gated epochs are apply_lsn-sliced, so a LATER epoch
-                    # can carry OLDER-lsn events (held transactions);
-                    # compact() folds to the base and drops delete
-                    # tombstones, which would let such an event resurrect a
-                    # deleted key. consolidate_deltas keeps the tombstones
-                    # (same rule stream_ingest.apply_batch applies for
-                    # file-arrival-ordered batches).
-                    info["compaction"] = table.consolidate_deltas(
-                        max_delta_depth=self.compact_opts.get("max_delta_depth")
-                    )
-                else:
-                    info["compaction"] = table.compact(**self.compact_opts)
-                if self.expire_keep_last:
-                    info["expiry"] = table.expire_snapshots(self.expire_keep_last)
-                # derived tables accrete delta layers at the same epoch
-                # cadence as the main table — same maintenance wall applies.
-                # sort_cols/zorder_cols are main-table layout hints; keep
-                # only those the derived schema actually has
-                for dt, *_ in self.engine._derived.get(_tname(table), []):
-                    if self.txn_boundaries:
-                        # derived merges ride the same out-of-lsn-order
-                        # epochs as the main table — same tombstone rule
-                        dt.consolidate_deltas(
-                            max_delta_depth=self.compact_opts.get(
-                                "max_delta_depth"
-                            )
-                        )
-                        if self.expire_keep_last:
-                            dt.expire_snapshots(self.expire_keep_last)
-                        continue
-                    opts = dict(self.compact_opts)
-                    have = {f["name"] for f in dt.schema_fields()}
-                    for layout_key in ("sort_cols", "zorder_cols"):
-                        if opts.get(layout_key):
-                            opts[layout_key] = [
-                                c for c in opts[layout_key] if c in have
-                            ] or None
-                    dt.compact(**opts)
-                    if self.expire_keep_last:
-                        dt.expire_snapshots(self.expire_keep_last)
+                # gated epochs are apply_lsn-sliced, so a LATER epoch can
+                # carry OLDER-lsn events (held transactions): keep the
+                # tombstones, for the main and the derived tables alike
+                info.update(_maintain_lineage(
+                    self.engine, table, self.compact_opts,
+                    self.expire_keep_last, keep_tombstones=self.txn_boundaries,
+                ))
                 info["maintenance_wall_s"] = round(time.time() - m0, 3)
             if fail_after_epoch is not None and epoch >= fail_after_epoch:
                 break

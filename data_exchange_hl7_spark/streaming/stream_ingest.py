@@ -23,7 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_exchange_hl7_spark.engine import Engine
 from data_exchange_hl7_spark.lake.table import LakeTable
-from data_exchange_hl7_spark.streaming.runner import require_consolidate_opts
+from data_exchange_hl7_spark.streaming.runner import (
+    _maintain_lineage,
+    require_consolidate_opts,
+)
 from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 
@@ -201,15 +204,10 @@ def stream_apply(
         # Keyed on batch_id, so a crash-redelivered batch re-runs the same
         # (state-preserving, idempotent) maintenance.
         if compact_every and (batch_id + 1) % compact_every == 0:
-            from data_exchange_hl7_spark.engine import table_name
-
-            tables = [table] + [
-                dt for dt, *_ in engine._derived.get(table_name(table), [])
-            ]
-            for t in tables:
-                t.consolidate_deltas(**(compact_opts or {}))
-                if expire_keep_last:
-                    t.expire_snapshots(expire_keep_last)
+            _maintain_lineage(
+                engine, table, compact_opts or {}, expire_keep_last,
+                keep_tombstones=True,
+            )
 
     writer = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", os.path.join(checkpoint_dir)

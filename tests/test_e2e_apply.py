@@ -1708,18 +1708,14 @@ def test_redact_refuses_constraint_violating_rewrite(spark, tmp_path):
     assert {x["content_sha256"] for x in derived} == {want}
 
 
-def test_salted_apply_writes_one_delta_file_per_bucket(
+def test_mor_apply_writes_one_delta_file_per_bucket(
     spark, tmp_path, events, oracle_state
 ):
-    """The salted apply leaves its frame partitioned by key, not bucket, so it
-    must not hand the MoR merge a __bucket column (the merge reads one as
-    "already bucket-partitioned" and every task then writes into every
-    bucket dir): at most one file per bucket per delta layer, and the
-    salted apply still reaches the oracle state."""
+    """The apply's dedup exchange leaves its frame partitioned by storage
+    bucket and hands the MoR merge a __bucket column saying so: at most one
+    file per bucket per delta layer, and the apply reaches the oracle state."""
     n_buckets = 8
-    eng = Engine(
-        spark, str(tmp_path / "wh"), n_buckets=n_buckets, mode="mor", salt_keys=4
-    )
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets, mode="mor")
     table = eng.snapshot_table("repo_files")
     r = eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
     assert 0 < r["delta_files"] <= n_buckets

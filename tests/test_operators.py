@@ -98,16 +98,6 @@ def test_latest_by_key_cascade(spark):
     assert out["C"]["event_id"] == "e7"  # event_id is the total-order fallback
 
 
-def test_salted_equals_plain(spark):
-    df = _events(spark)
-    plain = sorted(tuple(r) for r in DD.latest_by_key(df, ["k"]).collect())
-    for n_salts in (2, 16):
-        salted = sorted(
-            tuple(r) for r in DD.latest_by_key_salted(df, ["k"], n_salts=n_salts).collect()
-        )
-        assert salted == plain
-
-
 def test_bucketed_equals_plain(spark):
     """latest_by_key_bucketed must match latest_by_key exactly (same total
     order), while leaving rows partitioned by the storage bucket."""

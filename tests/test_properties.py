@@ -22,7 +22,6 @@ from data_exchange_hl7_spark.operators.debatch import debatch
 from data_exchange_hl7_spark.operators.dedup import (
     latest_by_key,
     latest_by_key_bucketed,
-    latest_by_key_salted,
 )
 from data_exchange_hl7_spark.operators.mmg_content import parse_cardinality
 from data_exchange_hl7_spark.streaming.runner import _parse_byte_conf
@@ -61,10 +60,6 @@ def test_latest_by_key_variants_match_python_oracle(spark, raw):
     plain = latest_by_key(df, ["k"], ["lsn", "ts", "event_id"])
     got = sorted(tuple(r) for r in plain.select("k", "lsn", "ts", "event_id").collect())
     assert got == expected
-
-    salted = latest_by_key_salted(df, ["k"], ["lsn", "ts", "event_id"], n_salts=4)
-    got_s = sorted(tuple(r) for r in salted.select("k", "lsn", "ts", "event_id").collect())
-    assert got_s == expected
 
     from pyspark.sql import functions as F
 
