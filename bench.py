@@ -237,7 +237,7 @@ def main() -> None:
         # window dedup, bucketed parquet write) before the timed run — the
         # first JVM run otherwise pays ~35s of JIT that no steady-state
         # micro-batch ever sees (cold vs warm measured 44s vs 9.6s)
-        warm_eng = Engine(spark, os.path.join(tmp, "wh_warm"), n_buckets=64, mode="mor")
+        warm_eng = Engine(spark, os.path.join(tmp, "wh_warm"), n_buckets=64)
         warm_table = warm_eng.snapshot_table("repo_files")
         warm_wal = wal.filter(wal["lsn"] < 20_000)
         MicroBatchRunner(warm_eng, epoch_size=20_000).run(warm_wal, warm_table)
@@ -253,12 +253,7 @@ def main() -> None:
         # chances to catch a quiet stretch instead of recording the noise.
         trials: list[float] = []
         while True:
-            eng = Engine(
-                spark,
-                os.path.join(tmp, f"wh{len(trials)}"),
-                n_buckets=64,
-                mode="mor",
-            )
+            eng = Engine(spark, os.path.join(tmp, f"wh{len(trials)}"), n_buckets=64)
             table = eng.snapshot_table("repo_files")
             t0 = time.time()
             MicroBatchRunner(eng, epoch_size=n_events // EPOCHS).run(wal, table)

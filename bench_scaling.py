@@ -40,14 +40,14 @@ spark = build_session("scaling", master=f"local[{cpus}]")
 spark.sparkContext.setLogLevel("ERROR")
 wal = spark.read.parquet(wal_path)
 # warmup: a miniature apply compiles every codegen path before timing
-warm = Engine(spark, tempfile.mkdtemp(prefix="dex_warm_"), n_buckets=64, mode="mor")
+warm = Engine(spark, tempfile.mkdtemp(prefix="dex_warm_"), n_buckets=64)
 wt = warm.snapshot_table("repo_files")
 MicroBatchRunner(warm, epoch_size=100_000).run(wal.filter(F.col("lsn") < 100_000), wt)
 
 best, rows = None, None
 for trial in range(trials):
     wh = tempfile.mkdtemp(prefix=f"dex_scale_{cpus}_")
-    eng = Engine(spark, wh, n_buckets=64, mode="mor")
+    eng = Engine(spark, wh, n_buckets=64)
     table = eng.snapshot_table("repo_files")
     t0 = time.time()
     MicroBatchRunner(eng, epoch_size=n_events // 2).run(wal, table)

@@ -19,13 +19,13 @@ cpus, n_events, wal_path = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
 spark = build_session("scaling_low", master=f"local[{cpus}]")
 spark.sparkContext.setLogLevel("ERROR")
 wal = spark.read.parquet(wal_path)
-warm = Engine(spark, tempfile.mkdtemp(prefix="dex_warm_"), n_buckets=64, mode="mor")
+warm = Engine(spark, tempfile.mkdtemp(prefix="dex_warm_"), n_buckets=64)
 wt = warm.snapshot_table("repo_files")
 MicroBatchRunner(warm, epoch_size=100_000).run(wal.filter(F.col("lsn") < 100_000), wt)
 best, rows = None, None
 for trial in range(2):
     wh = tempfile.mkdtemp(prefix=f"dex_scale_{cpus}_")
-    eng = Engine(spark, wh, n_buckets=64, mode="mor")
+    eng = Engine(spark, wh, n_buckets=64)
     table = eng.snapshot_table("repo_files")
     t0 = time.time()
     MicroBatchRunner(eng, epoch_size=n_events // 2).run(wal, table)

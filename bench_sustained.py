@@ -40,12 +40,12 @@ change_events(spark, n_epochs * epoch_size).write.mode("overwrite").parquet(path
 wal = spark.read.parquet(path)
 
 # warmup epoch in a throwaway warehouse (JIT/codegen)
-warm = Engine(spark, tempfile.mkdtemp(prefix="sus_warm_"), n_buckets=64, mode="mor")
+warm = Engine(spark, tempfile.mkdtemp(prefix="sus_warm_"), n_buckets=64)
 wt = warm.snapshot_table("repo_files")
 MicroBatchRunner(warm, epoch_size=epoch_size).run(
     wal.filter(F.col("lsn") < epoch_size), wt)
 
-eng = Engine(spark, tempfile.mkdtemp(prefix="sus_wh_"), n_buckets=64, mode="mor")
+eng = Engine(spark, tempfile.mkdtemp(prefix="sus_wh_"), n_buckets=64)
 table = eng.snapshot_table("repo_files")
 stats = MicroBatchRunner(
     eng, epoch_size=epoch_size, compact_every=compact_every, expire_keep_last=1

@@ -6,7 +6,11 @@ through one entrypoint on any cluster manager —
 
     spark-submit --master yarn --py-files dex.zip cli.py ingest \
         --warehouse /mnt/shared/lake/wh --wal /mnt/shared/wal/changes \
-        --mode mor --epoch-size 1000000 --compact-every 8 --expire-keep-last 4
+        --epoch-size 1000000 --compact-every 8 --expire-keep-last 4
+
+Every table is merge-on-read: each epoch appends delta files, and
+``--compact-every K`` folds them into base files every K epochs
+(``--compact-every 1`` keeps the table read-optimized).
 
 The table METADATA/ledger layer uses POSIX filesystem semantics (O_EXCL
 commit arbitration, os.replace) — point ``--warehouse`` at a mount every
@@ -53,7 +57,6 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--fmt", default="parquet", choices=["parquet", "jsonl", "csv"])
     sp.add_argument("--epoch-size", type=int, default=100_000)
     sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--mode", default="mor", choices=["cow", "mor"])
     sp.add_argument("--compact-every", type=int, default=None)
     sp.add_argument("--expire-keep-last", type=int, default=None)
     sp.add_argument(
@@ -79,7 +82,6 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--wal", required=True)
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--mode", default="mor", choices=["cow", "mor"])
     sp.add_argument("--max-files-per-trigger", type=int, default=None)
     sp.add_argument("--compact-every", type=int, default=None)
     sp.add_argument("--expire-keep-last", type=int, default=None)
@@ -106,7 +108,6 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--fmt", default="parquet", choices=["parquet", "jsonl", "csv"])
     sp.add_argument("--epoch-size", type=int, default=100_000)
     sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--mode", default="mor", choices=["cow", "mor"])
     sp.add_argument("--repo", default=None)
     sp.add_argument("--path", default=None)
     sp.add_argument("--lsn-range", type=int, nargs=2, default=None)
@@ -137,7 +138,6 @@ def _build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--predicate", required=True, help="SQL predicate over the table")
     sp.add_argument("--epoch", type=int, required=True)
     sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--mode", default="mor", choices=["cow", "mor"])
     sp.add_argument(
         "--main-only", action="store_true",
         help="deliberately skip the derived-table cascade",
@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "ingest":
         from data_exchange_hl7_spark.streaming.runner import MicroBatchRunner
 
-        eng = Engine(spark, args.warehouse, n_buckets=args.buckets, mode=args.mode)
+        eng = Engine(spark, args.warehouse, n_buckets=args.buckets)
         t = eng.snapshot_table(args.table)
         stats = MicroBatchRunner(
             eng,
@@ -218,7 +218,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "stream":
         from data_exchange_hl7_spark.streaming.stream_ingest import stream_apply
 
-        eng = Engine(spark, args.warehouse, n_buckets=args.buckets, mode=args.mode)
+        eng = Engine(spark, args.warehouse, n_buckets=args.buckets)
         t = eng.snapshot_table(args.table)
         # a tail started before any producer wrote cannot infer a schema
         # from existing files — fall back to the canonical WAL schema
@@ -249,7 +249,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "replay":
         from data_exchange_hl7_spark.streaming.runner import replay
 
-        eng = Engine(spark, args.warehouse, n_buckets=args.buckets, mode=args.mode)
+        eng = Engine(spark, args.warehouse, n_buckets=args.buckets)
         t = replay(
             eng,
             read_wal(spark, args.wal, fmt=args.fmt),
@@ -289,7 +289,7 @@ def main(argv: list[str] | None = None) -> int:
             # --table must fail the takedown loudly, not report success
             print(json.dumps({"error": f"no table at {loc}"}), file=sys.stderr)
             return 2
-        eng = Engine(spark, args.warehouse, n_buckets=args.buckets, mode=args.mode)
+        eng = Engine(spark, args.warehouse, n_buckets=args.buckets)
         t = eng.snapshot_table(args.table)
         r = eng.purge_where(
             t, args.predicate, epoch=args.epoch, main_only=args.main_only

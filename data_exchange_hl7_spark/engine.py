@@ -293,15 +293,16 @@ class Engine:
         spark: SparkSession,
         warehouse: str,
         n_buckets: int = 64,
-        mode: str = "cow",
+        mode: str = "mor",
     ):
-        """``mode``: "cow" (read-optimized) or "mor" (write-optimized
-        merge-on-read — the 10^10-event configuration; pair with periodic
-        compaction via MicroBatchRunner(compact_every=K))."""
+        """Every table is merge-on-read (``mode`` accepts only "mor"); fold
+        the deltas with ``MicroBatchRunner(compact_every=K)``, where ``K=1``
+        keeps the tables read-optimized."""
+        if mode != "mor":
+            raise ValueError(f"mode={mode!r}: every table is merge-on-read")
         self.spark = spark
         self.warehouse = warehouse
         self.n_buckets = n_buckets
-        self.mode = mode
         # main-table name -> [(derived LakeTable, derive fn, kind)] where
         # kind is "derived" or "aggregate" — see derived_table / _register
         self._derived: dict[str, list[tuple[LakeTable, Any, str]]] = {}
@@ -323,8 +324,7 @@ class Engine:
             SNAPSHOT_SCHEMA,
             KEY_COLS,
             n_buckets=self.n_buckets,
-            mode=self.mode,
-            order_col="last_lsn" if self.mode == "mor" else None,
+            order_col="last_lsn",
         )
 
     # ----------------------------------------------------- schema events
@@ -412,8 +412,7 @@ class Engine:
                 schema,
                 key_cols or KEY_COLS,
                 n_buckets=n_buckets or self.n_buckets,
-                mode=self.mode,
-                order_col="last_lsn" if self.mode == "mor" else None,
+                order_col="last_lsn",
             )
         self._register(main, t, derive, "derived")
         return t
@@ -543,7 +542,6 @@ class Engine:
                 # keeps the per-epoch delta merge from paying a wide shuffle
                 # + n_buckets tiny files for a handful of rows
                 n_buckets=n_buckets or min(self.n_buckets, 8),
-                mode="mor",
                 resolve="sum",
             )
         self._register(main, t, delta_fn, "aggregate")
@@ -580,7 +578,6 @@ class Engine:
                 SCD2_HISTORY_SCHEMA,
                 [*KEY_COLS, "valid_from_lsn"],
                 n_buckets=n_buckets or self.n_buckets,
-                mode="mor",
                 order_col="last_lsn",
             )
         self._register(main, t, scd2_history_rows, "history")
@@ -690,7 +687,6 @@ class Engine:
                 schema,
                 mkeys,
                 n_buckets=n_buckets or self.n_buckets,
-                mode="mor",
                 order_col="last_lsn",
             )
 
@@ -904,8 +900,8 @@ class Engine:
         can start at any pipeline stage instead of ingestion; the repo's
         ``streaming.runner.replay`` is the start-at-ingestion form).
 
-        MoR delta layers ARE the persisted per-epoch change frames, so for
-        each committed epoch (numeric order) the exact frame ``apply_epoch``
+        Delta layers ARE the persisted per-epoch change frames, so for
+        each committed epoch (commit order) the exact frame ``apply_epoch``
         fed the derive fn is recovered from the main table's change data
         feed — ``changes_between(parent, committing_sid)`` projected to that
         epoch's own schema version — then mapped by the registered fn and
@@ -917,11 +913,14 @@ class Engine:
         Aggregate views re-derive their deltas against the main table's
         PRE-epoch state (time travel to the committing snapshot's parent
         with the changed-key semi join pushed below the MoR resolve) — the
-        same recovery path ``apply_epoch`` uses on resume.
+        same recovery path ``apply_epoch`` uses on resume. An SCD2 history
+        table replays the whole-history sweep of each purge/redact epoch
+        from the predicate and ``set_exprs`` in the main table's ledger, as
+        ``purge_where`` / ``redact_where`` applied it.
 
-        Requires a MoR main table and every epoch's committing snapshot
-        inside the retention window (the Iceberg incremental-read
-        contract); expired epochs raise rather than silently skipping.
+        Requires every epoch's committing snapshot inside the retention
+        window (the Iceberg incremental-read contract); expired epochs raise
+        rather than silently skipping.
 
         Scale shape: per epoch this reads O(that epoch's changes) from the
         delta layers plus, for aggregates, O(changed keys) of pre-state —
@@ -946,7 +945,6 @@ class Engine:
                 [(f["name"], f["type"]) for f in src.schema_fields()],
                 ssnap["key_cols"],
                 n_buckets=ssnap["n_buckets"],
-                mode=ssnap["mode"],
                 order_col=ssnap["order_col"],
                 resolve=ssnap["resolve"],
             )
@@ -956,9 +954,8 @@ class Engine:
         # every future compliance sweep
         self._persist_registration(table_name(main), tgt, kind)
         epoch_commits = self._epoch_commits(main)
-        missing = set(main.committed_epochs()) - {
-            str(e) for e, _sid, _parent in epoch_commits
-        }
+        ledger = main.committed_epochs()
+        missing = set(ledger) - {str(e) for e, _sid, _parent in epoch_commits}
         if missing:
             raise ValueError(
                 f"epochs {sorted(missing)} predate the retention window; "
@@ -974,9 +971,11 @@ class Engine:
         }
         done = set(tgt.committed_epochs())
         key_cols = main.current_snapshot()["key_cols"]
+        # commit order, not epoch-id order: a purge/redact sweep touches
+        # exactly the versions committed before it
         pending_commits = [
             c
-            for c in sorted(epoch_commits)
+            for c in sorted(epoch_commits, key=lambda c: (c[1], c[0]))
             if str(self._epoch_key(main, kind, c[0])) not in done
         ]
         for e, src_t, c_parent, c_sid in self._epoch_change_bounds(
@@ -987,6 +986,15 @@ class Engine:
                 .withColumnRenamed("_change_type", "__op")
                 .drop("_commit_snapshot")
             )
+            info = ledger[str(e)]
+            if kind == "history" and info.get("op") in ("purge", "redact"):
+                # replay the whole-history sweep, not the one-row-per-key feed
+                set_exprs = info.get("set_exprs")
+                if info["op"] == "redact" and not set_exprs:
+                    raise ValueError(f"redact epoch {e} has no set_exprs in its ledger")
+                sweep = self._history_sweep(tgt, changes, info["predicate"], set_exprs)
+                tgt.merge(sweep, epoch=e, epoch_info={"replay": meta})
+                continue
             self._fan_out(
                 main,
                 [(tgt, fn, kind)],
@@ -1005,7 +1013,8 @@ class Engine:
         self, src: LakeTable, commits: list[tuple[int, int, int]]
     ) -> list[tuple[int, LakeTable, int, int]]:
         """(epoch, source table, from_sid, to_sid) for recovering each
-        epoch's EXACT change frame from ``src``'s history.
+        epoch's EXACT change frame from ``src``'s history, in the order of
+        ``commits``.
 
         Fast-forward-aware: epochs folded into one fast_forward commit share
         a single combined delta on ``src``; feeding that once per epoch
@@ -1021,7 +1030,7 @@ class Engine:
         per_commit = Counter(sid for _e, sid, _p in commits)
         cache: dict[str, tuple[LakeTable, dict[int, tuple[int, int]]]] = {}
         out: list[tuple[int, LakeTable, int, int]] = []
-        for e, sid, parent in sorted(commits):
+        for e, sid, parent in commits:
             src_t, c_sid, c_parent = src, sid, parent
             smeta = src._load_snapshot(sid)
             if smeta.get("operation") == "fast_forward":
@@ -1743,6 +1752,7 @@ class Engine:
             info = dict(epoch_info or {})
             info.setdefault("op", "purge" if set_exprs is None else "redact")
             info.setdefault("predicate", predicate)
+            info.setdefault("set_exprs", set_exprs)  # rebuild_derived replays it
             result = table.merge(changes, epoch=epoch, epoch_info=info)
             stats = {"epoch": epoch, **result}
             for dt, _fn, kind in pending:
@@ -2119,15 +2129,9 @@ class Engine:
         apply under a NEW epoch id. Rows that still fail validation land in
         that epoch's rejects.
 
-        Ordering vs the live stream: in MoR mode the read-time per-key
-        window orders by last_lsn, so a reprocessed old version can never
-        clobber a newer live one. In CoW mode the merge REPLACES existing
-        rows for the changed keys unconditionally, so stale re-drives are
-        filtered here first: rejects are left-joined against the live
-        snapshot on the table keys and only rows with lsn greater than the
-        live row's last_lsn (or with no live row) are applied. The join is
-        bucket-pruned the same way the merge is — the reject set's buckets
-        bound which live buckets are read.
+        Ordering vs the live stream: the read-time per-key window orders by
+        last_lsn, so a reprocessed old version can never clobber a newer
+        live one.
         """
         rej = self.rejects(table_name(table))
         if source_epochs is not None:
@@ -2135,20 +2139,6 @@ class Engine:
         events = rej.drop("status", "report_entries", "epoch")
         if fix is not None:
             events = fix(events)
-        if table.current_snapshot().get("mode") != "mor":
-            live = table.snapshot().select(
-                *KEY_COLS, F.col("last_lsn").alias("__live_lsn")
-            )
-            events = (
-                events.join(live, KEY_COLS, "left")
-                .filter(
-                    # schema DDL is keyless metadata — never lsn-guarded
-                    F.col("op").isin(*SCHEMA_OPS)
-                    | F.col("__live_lsn").isNull()
-                    | (F.col("lsn") > F.col("__live_lsn"))
-                )
-                .drop("__live_lsn")
-            )
         return self.apply_epoch(events, table, epoch=epoch)
 
     def reprocess_quarantine(

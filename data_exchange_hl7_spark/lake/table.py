@@ -3,7 +3,7 @@
 This container ships no Iceberg/Delta jars, so the lake layer is implemented
 in-repo: immutable parquet data files, a JSON snapshot log, an atomically
 swapped ``current`` pointer, field-ID based schema evolution, and keyed
-MERGE over hash buckets (copy-on-write or merge-on-read). The public surface
+merge-on-read MERGE over hash buckets. The public surface
 (merge / add_column / rename_column / widen_column / snapshot / epoch
 manifest) is the subset of Iceberg the engine needs; on a real cluster the
 same calls map 1:1 onto ``MERGE INTO`` + ``ALTER TABLE`` against Iceberg.
@@ -19,11 +19,11 @@ Reference semantics covered here:
     across an evolution boundary stays correct — SURVEY.md section 7.4 item 3)
 
 Scale design: data is hash-bucketed on the merge key (Iceberg
-``bucket(N, key)`` transform analogue). MERGE rewrites only buckets that
-contain changed keys; the bucket list collected to the driver is bounded by
-``n_buckets`` (metadata, not data). At 100 TB you raise ``n_buckets`` (e.g.
-4096-65536) so each bucket is a few GB and a micro-batch touches only the
-buckets its keys hash into.
+``bucket(N, key)`` transform analogue). MERGE appends one delta file per
+bucket its changed keys hash into, and ``compact()`` folds only the buckets
+that carry deltas; the bucket lists are bounded by ``n_buckets`` (metadata,
+not data). At 100 TB you raise ``n_buckets`` (e.g. 4096-65536) so each
+bucket is a few GB.
 """
 
 from __future__ import annotations
@@ -57,10 +57,6 @@ _TYPE_MAP = {
 
 # legal type widenings (Iceberg spec: int->long, float->double)
 _WIDEN_OK = {("int", "bigint"), ("int", "long"), ("float", "double")}
-
-# CoW merge broadcasts the changed-key anti-join side only below this row
-# count; larger epochs fall back to AQE's runtime join choice
-_BROADCAST_KEY_LIMIT = 1_000_000
 
 # parquet row-group bloom filters on the key columns: the standard lever for
 # point lookups on hash-bucketed files, where min/max stats are useless (a
@@ -130,24 +126,23 @@ class LakeTable:
         schema: list[tuple[str, str]],
         key_cols: list[str],
         n_buckets: int = 64,
-        mode: str = "cow",
         order_col: str | None = None,
         resolve: str = "latest",
     ) -> "LakeTable":
         """Create an empty table. ``schema`` is [(name, type_string), ...].
 
-        ``mode``: "cow" rewrites touched buckets on every merge (read-
-        optimized); "mor" (merge-on-read, Iceberg MoR analogue) appends
-        bucketed delta files per merge and resolves latest-per-key at read
-        time ordered by ``order_col`` — write cost per epoch is O(changes),
-        not O(table), which is what survives a 10^10-event stream. Compact
-        periodically with ``compact()``.
+        Every merge appends bucketed delta files (merge-on-read, the Iceberg
+        MoR analogue) and reads resolve the layers per key — write cost per
+        epoch is O(changes), not O(table), which is what survives a
+        10^10-event stream. ``compact()`` folds the deltas back into base
+        files; a read-optimized table is one compacted after every merge
+        (``MicroBatchRunner(compact_every=1)``).
 
-        ``resolve``: read-time resolution semantics for MoR layers.
+        ``resolve``: read-time resolution semantics for the layers.
         "latest" (default) keeps the newest row per key ordered by
-        ``order_col`` and honors ``D`` tombstones. "sum" makes the table
-        ADDITIVE — every non-key column must be numeric, merge rows are
-        per-key DELTAS, and reads resolve by summing all layers per key
+        ``order_col`` (required) and honors ``D`` tombstones. "sum" makes
+        the table ADDITIVE — every non-key column must be numeric, merge
+        rows are per-key DELTAS, and reads resolve by summing all layers per key
         (compaction folds partial sums; a key removed from the modeled
         domain is expressed as a negative delta, never a tombstone). This
         is the storage shape for incrementally-maintained aggregate
@@ -168,8 +163,6 @@ class LakeTable:
                     "(plus array<...> / map<...> of these)"
                 ) from None
         if resolve == "sum":
-            if mode != "mor":
-                raise ValueError("additive (resolve='sum') tables require mode='mor'")
             # exact membership, not prefix: every name here must both be
             # summable and exist in _TYPE_MAP
             _numeric = {"int", "bigint", "long", "float", "double"}
@@ -179,8 +172,8 @@ class LakeTable:
             ]
             if bad:
                 raise ValueError(f"additive tables need numeric value columns; got {bad}")
-        elif mode == "mor" and not order_col:
-            raise ValueError("mor mode requires order_col for read resolution")
+        elif not order_col:
+            raise ValueError("resolve='latest' requires order_col for read resolution")
         t = cls(spark, location)
         os.makedirs(t.meta_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
@@ -195,12 +188,11 @@ class LakeTable:
             "schemas": {"0": fields},
             "key_cols": key_cols,
             "n_buckets": n_buckets,
-            "mode": mode,
             "order_col": order_col,
             "resolve": resolve,
             "next_field_id": len(fields) + 1,
             "buckets": {},  # bucket -> {"files": [...], "schema_version": int}
-            "deltas": [],  # mor: [{"files": {bucket: [...]}, "schema_version": int}]
+            "deltas": [],  # [{"files": {bucket: [...]}, "schema_version": int}]
             "properties": {"epochs": {}},
             "committed_at": time.time(),
         }
@@ -1136,8 +1128,8 @@ class LakeTable:
     ) -> tuple[int, bool]:
         """``COUNT(*)`` answered from manifest metadata when provably exact
         (Iceberg ``record_count`` semantics): no data file is opened when
-        the snapshot has no delta layers (CoW, or MoR/additive after a full
-        compaction — physical rows ARE logical rows then) and no predicate.
+        the snapshot has no delta layers (after a full compaction, physical
+        rows ARE logical rows) and no predicate.
         Any other shape falls back to the exact read path. Returns
         ``(count, metadata_only)`` so callers and tests can SEE which path
         answered. At 100 TB the metadata path is a manifest walk — zero
@@ -1293,11 +1285,11 @@ class LakeTable:
         ``= > >= < <=``. The predicate is always applied as a DataFrame
         filter (correctness never depends on stats); additionally, data
         files whose manifest min/max stats cannot satisfy it are skipped
-        without being opened (Iceberg manifest-level data skipping). In MoR
-        mode file skipping is only sound for predicates on key columns
-        (constant per key — pruning a non-key column could hide a key's
-        latest version and resurrect an older one), so non-key predicates
-        prune nothing there and are applied after latest-resolution.
+        without being opened (Iceberg manifest-level data skipping). Over
+        delta layers file skipping is only sound for predicates on key
+        columns (constant per key — pruning a non-key column could hide a
+        key's latest version and resurrect an older one), so non-key
+        predicates prune nothing there and are applied after resolution.
 
         ``staged``: read a write-audit-publish staged snapshot by its token
         (the audit step) instead of a committed one.
@@ -1306,8 +1298,8 @@ class LakeTable:
         delete tombstone, exposing ``__op`` ('U'/'D') — the complete per-key
         pre-state the SCD2 history maintenance needs to classify late
         events (a resolved read cannot distinguish never-seen from deleted).
-        Only meaningful for MoR latest-resolution; CoW and folded bases
-        carry no tombstones, so every row comes back ``__op = 'U'``. NB:
+        Only meaningful for latest-resolution; folded bases carry no
+        tombstones, so their rows come back ``__op = 'U'``. NB:
         ``compact()`` drops tombstones (its lsn-monotone contract);
         ``consolidate_deltas`` retains them, which is why out-of-order
         feeds must use the consolidation cadence.
@@ -1324,10 +1316,10 @@ class LakeTable:
         keys = snap["key_cols"]
         resolve = bool(snap.get("deltas"))
         additive = snap.get("resolve", "latest") == "sum"
-        # stats-based file skipping: sound for any predicate in CoW (rows are
-        # independent), key-column predicates only in MoR (a key's state is
-        # split across layers — pruning a layer by a value predicate would
-        # drop part of a latest-resolution or of a sum)
+        # stats-based file skipping: sound for any predicate on a folded base
+        # (rows are independent), key-column predicates only over delta
+        # layers (a key's state is split across layers — pruning a layer by
+        # a value predicate would drop part of a latest-resolution or of a sum)
         prune_where = where
         if (resolve or additive) and where:
             prune_where = [w for w in where if w[0] in keys]
@@ -1434,7 +1426,7 @@ class LakeTable:
         }
 
     def changes_between(self, from_sid: int, to_sid: int | None = None) -> DataFrame:
-        """Change data feed (MoR): every change row committed AFTER snapshot
+        """Change data feed: every change row committed AFTER snapshot
         ``from_sid`` up to and including ``to_sid`` (default current), with
         ``_change_type`` (``U`` upsert / ``D`` delete) and
         ``_commit_snapshot`` columns — the Iceberg incremental-read /
@@ -1445,8 +1437,7 @@ class LakeTable:
         applied, in commit order; downstream incremental consumers re-apply
         them keyed by (key_cols, order_col)."""
         to_snap = self._load_snapshot(to_sid)
-        if to_snap.get("mode") != "mor":
-            raise ValueError("changes_between requires a merge-on-read table")
+        self._require_order_col(to_snap, "read the change feed of")
         chain = []
         s = to_snap
         # snapshot ids are dense (every CAS commit is parent+1), so the walk
@@ -1504,8 +1495,7 @@ class LakeTable:
         O(commits in the window), the same shape every CDF poller
         (CdfTailReplicator) already has."""
         to_snap = self._load_snapshot(to_sid)
-        if to_snap.get("mode") != "mor":
-            raise ValueError("changes_with_preimages requires a merge-on-read table")
+        self._require_order_col(to_snap, "read the change feed of")
         keys = to_snap["key_cols"]
         cols = [f["name"] for f in self.schema_fields(to_snap)]
         # commit ids in the window, oldest first (dense ids)
@@ -1676,6 +1666,18 @@ class LakeTable:
                 out.append(entry)
         return out
 
+    def _require_order_col(self, snap: dict, verb: str) -> None:
+        """Refuse a latest-resolved table without ``order_col``: one created
+        by an older version in copy-on-write mode. Its merges rewrote base
+        files, so it cannot resolve delta layers and keeps no change feed."""
+        if snap.get("resolve", "latest") == "latest" and not snap.get("order_col"):
+            raise ValueError(
+                f"cannot {verb} {self.location}: it was created in copy-on-write "
+                "mode by an older version and has no order_col. Copy it into a "
+                "new table: LakeTable.create(..., order_col=<version column>) "
+                "and merge old.snapshot().withColumn('__op', F.lit('U')) into it"
+            )
+
     def bucket_expr(self):
         """Public storage-bucket expression — upstream stages can pre-partition
         on it so the MERGE write needs no extra shuffle."""
@@ -1690,9 +1692,13 @@ class LakeTable:
         enforce_constraints: bool = True,
     ) -> dict:
         """Keyed MERGE (upsert + delete) — the Iceberg ``MERGE INTO``
-        analogue, and the engine's exactly-once apply step. The table's
-        ``mode`` picks the write: "cow" rewrites the touched buckets, "mor"
-        appends one bucketed delta layer (see ``create``).
+        analogue, and the engine's exactly-once apply step. It appends one
+        bucketed delta layer that reads resolve per key (see ``create``);
+        ``compact()`` folds the layers into base files.
+
+        A table created by an older version in copy-on-write mode has no
+        ``order_col`` and cannot resolve delta layers, so merging into it
+        raises ``ValueError`` before any write; reads of it still work.
 
         ``enforce_constraints=False`` is for callers that already ran
         ``_enforce_check_constraints`` on this frame (``Engine.apply_epoch``
@@ -1705,7 +1711,8 @@ class LakeTable:
         column for upserts. If ``epoch`` is given and already committed the
         call is a NO-OP (idempotent replay, reference K3/K4 semantics).
 
-        Returns {"applied": bool, "snapshot_id": int, "buckets_rewritten": n}.
+        Returns {"applied": bool, "snapshot_id": int}, plus ``delta_files``
+        when the layer holds files.
 
         ``publish=False`` runs the write-audit-publish pattern (Iceberg WAP):
         data files and the snapshot are written but ``current`` does not
@@ -1714,12 +1721,9 @@ class LakeTable:
         ``discard_staged(token)``.
         """
         snap = self.current_snapshot()
+        self._require_order_col(snap, "merge into")
         if epoch is not None and str(epoch) in snap["properties"]["epochs"]:
-            return {
-                "applied": False,
-                "snapshot_id": snap["snapshot_id"],
-                "buckets_rewritten": 0,
-            }
+            return {"applied": False, "snapshot_id": snap["snapshot_id"]}
 
         # write-time CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT
         # ... CHECK` / DLT expectation analogue): violating upserts are
@@ -1737,29 +1741,7 @@ class LakeTable:
                 changes, cons, snap, epoch
             )
         try:
-            if snap.get("mode") == "mor":
-                result = self._merge_mor(changes, snap, epoch, epoch_info, publish)
-            else:
-                # persist: changes feed the bucket-list collect, the anti-join
-                # key broadcast, and the upsert union — compute the window once.
-                # When the constraint gate ran, its tagged frame is already
-                # the cache and the filtered view reads through it; a second
-                # persist would materialize a duplicate copy.
-                if "__bucket" not in changes.columns:
-                    changes = changes.withColumn("__bucket", self._bucket_expr(snap))
-                own_persist = tagged_handle is None
-                if own_persist:
-                    changes = changes.persist()
-                # unpersist on EVERY exit: a write failure or a lost commit CAS
-                # (ConcurrentCommitError retried by the streaming runner) must
-                # not leave the cached frame pinned across retries
-                try:
-                    result = self._merge_cow(
-                        changes, snap, epoch, epoch_info, publish
-                    )
-                finally:
-                    if own_persist:
-                        changes.unpersist()
+            result = self._merge_mor(changes, snap, epoch, epoch_info, publish)
             if cons:
                 result["quarantined"] = n_quarantined
             return result
@@ -1786,7 +1768,7 @@ class LakeTable:
         WHEN NOT MATCHED BY SOURCE UPDATE/DELETE), compiled declaratively
         into one change frame and delegated to :meth:`merge` — so it
         inherits exactly-once epoch replay, CHECK-constraint quarantine,
-        CoW/MoR storage, write-audit-publish, and CDF visibility for free.
+        merge-on-read storage, write-audit-publish, and CDF visibility for free.
         Reference analogue: the Cosmos keyed-upsert sink's conditional
         apply semantics (K3) generalized to the full SQL MERGE clause set.
 
@@ -1878,11 +1860,7 @@ class LakeTable:
             and epoch is not None
             and str(epoch) in snap["properties"]["epochs"]
         ):
-            return {
-                "applied": False,
-                "snapshot_id": snap["snapshot_id"],
-                "buckets_rewritten": 0,
-            }
+            return {"applied": False, "snapshot_id": snap["snapshot_id"]}
         keys = snap["key_cols"]
         fields = self.schema_fields(snap)
         missing = [k for k in keys if k not in source.columns]
@@ -2035,67 +2013,6 @@ class LakeTable:
         good = tagged.filter(F.size("__violated") == 0).drop("__violated")
         return good, n_bad, tagged
 
-    def _merge_cow(
-        self, changes: DataFrame, snap: dict, epoch, epoch_info, publish: bool
-    ) -> dict:
-        cur_fields = self.schema_fields(snap)
-        cur_names = [f["name"] for f in cur_fields]
-        keys = snap["key_cols"]
-        # bounded by n_buckets — metadata-sized collect, never data-sized
-        changed_buckets = sorted(
-            r["__bucket"]
-            for r in changes.select("__bucket").distinct().collect()
-        )
-        if not changed_buckets:
-            # still record the epoch (empty micro-batch must advance manifest)
-            return {
-                "applied": publish,
-                "buckets_rewritten": 0,
-                **self._commit(snap, "merge", epoch, epoch_info, publish),
-            }
-
-        # old rows of the touched buckets, minus keys present in the changes
-        # (a CoW table has no delta layers: the plan is base files only)
-        layers = self._layer_files(snap, changed_buckets)
-        old_df = self._read_layers(snap, layers, tagged=False)
-        if old_df is not None:
-            # broadcast the changed-key set only while it is broadcast-sized;
-            # a huge epoch (10^8 changed keys) would overflow the driver —
-            # above the limit let AQE pick the anti-join strategy at runtime
-            # (changes is persisted, so this count scans the cache)
-            changed_keys = changes.select(*keys).distinct()
-            if changes.count() <= _BROADCAST_KEY_LIMIT:
-                changed_keys = F.broadcast(changed_keys)
-            survivors = old_df.join(changed_keys, on=keys, how="left_anti")
-        else:
-            survivors = self._empty_df(cur_fields)
-
-        upserts = changes.filter(F.col("__op") == "U").select(*cur_names)
-        new_data = survivors.unionByName(upserts).withColumn(
-            "__bucket", self._bucket_expr(snap)
-        )
-
-        # write the rewritten buckets under a per-snapshot directory
-        out_rel = self._staging_rel("s", snap["snapshot_id"] + 1)
-        self._bucketed_writer(
-            new_data.repartition(max(len(changed_buckets), 1), "__bucket"), snap
-        ).parquet(os.path.join(self.data_dir, out_rel))
-
-        written = self._written_files(out_rel)
-        new_buckets = dict(snap["buckets"])
-        new_buckets.update(self._base_entries(written, snap))
-        # changed buckets that ended up empty (all rows deleted) lose their entry
-        for b in changed_buckets:
-            if str(b) not in written:
-                new_buckets.pop(str(b), None)
-        return {
-            "applied": publish,
-            "buckets_rewritten": len(changed_buckets),
-            **self._commit(
-                snap, "merge", epoch, epoch_info, publish, buckets=new_buckets
-            ),
-        }
-
     def _merge_mor(
         self, changes: DataFrame, snap: dict, epoch, epoch_info, publish: bool = True
     ) -> dict:
@@ -2122,7 +2039,7 @@ class LakeTable:
             os.path.join(self.data_dir, out_rel)
         )
         files = self._written_files(out_rel)
-        out = {"applied": publish, "buckets_rewritten": 0}
+        out = {"applied": publish}
         if not files:
             # still record the epoch (empty micro-batch must advance manifest)
             return {**out, **self._commit(snap, "merge", epoch, epoch_info, publish)}
@@ -2147,8 +2064,8 @@ class LakeTable:
         Tombstones every CURRENT row matching the SQL ``predicate`` through
         the same exactly-once merge the CDC apply uses: idempotent under
         ``epoch`` replay, visible in the change-data-feed as ``D`` rows, and
-        time travel still shows the pre-delete state. In MoR mode this
-        writes O(matching keys) tombstone deltas — no bucket rewrite.
+        time travel still shows the pre-delete state. It writes
+        O(matching keys) tombstone deltas — no bucket rewrite.
 
         COMPLIANCE NOTE: this is a LOGICAL delete. Physical removal of the
         bytes requires ``compact()`` (folds tombstones into rewritten

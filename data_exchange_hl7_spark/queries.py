@@ -1302,7 +1302,6 @@ def _lake_demo_table(spark: SparkSession, sf_dir: str):
         schema=[("user_id", "bigint"), ("event_type", "string"), ("event_id", "bigint")],
         key_cols=["user_id"],
         n_buckets=8,
-        mode="mor",
         order_col="event_id",
     )
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -1407,7 +1406,6 @@ def cdf_replica_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=4,  # != upstream's 8: replication is layout-independent
-            mode="mor",
             order_col="event_id",
         )
         tail = CdfTailReplicator(up, rep, max_snapshots_per_poll=1)
@@ -1501,7 +1499,6 @@ def ivf_index_replica_read(spark, sf_dir):
             ],
             key_cols=["vec_id"],
             n_buckets=8,
-            mode="mor",
             order_col="lsn",
         )
         idx = LakeTable.create(
@@ -1515,7 +1512,6 @@ def ivf_index_replica_read(spark, sf_dir):
             ],
             key_cols=["vec_id"],
             n_buckets=4,
-            mode="mor",
             order_col="lsn",
         )
         emb = _t(spark, sf_dir, "embeddings")
@@ -1686,7 +1682,6 @@ def schema_evolution_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events")
@@ -1895,7 +1890,6 @@ def rebucket_read(spark, sf_dir):
             schema=[("user_id", "bigint"), ("event_type", "string"), ("event_id", "bigint")],
             key_cols=["user_id"],
             n_buckets=4,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -1965,7 +1959,6 @@ def zorder_read(spark, sf_dir):
             ],
             key_cols=["user_id", "event_type"],
             n_buckets=2,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -2157,7 +2150,7 @@ def derived_file_stats(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "file_stats"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_derived_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
         eng.apply_epoch(
@@ -2217,7 +2210,7 @@ def aggregate_repo_stats(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "repo_stats"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_agg_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
         docs = _t(spark, sf_dir, "documents")
@@ -2321,7 +2314,7 @@ def incremental_minhash_index(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "minhash_index"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_mhidx_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
         base = _t(spark, sf_dir, "documents").select(
@@ -2448,7 +2441,7 @@ def index_dup_candidates(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "minhash_index"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_mhdelta_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
         base = _t(spark, sf_dir, "documents").select(
@@ -2633,7 +2626,6 @@ def merge_multi_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -2762,7 +2754,7 @@ def merge_cascade_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "file_stats"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_mergecascade_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
         eng.apply_epoch(
@@ -2874,7 +2866,7 @@ def stream_txn_gate_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "repo_files"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_streamtxn_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         docs = _t(spark, sf_dir, "documents")
         base = docs.select(
@@ -3025,7 +3017,6 @@ def commit_summary_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3095,7 +3086,6 @@ def count_meta_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3179,7 +3169,6 @@ def column_default_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3273,7 +3262,6 @@ def txn_gate_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         full = (
@@ -3373,7 +3361,6 @@ def purge_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3443,7 +3430,6 @@ def _constraint_demo(spark, sf_dir):
         ],
         key_cols=["user_id"],
         n_buckets=8,
-        mode="mor",
         order_col="event_id",
     )
     t.add_check_constraint("no_signup_state", "event_type <> 'signup'")
@@ -3592,7 +3578,6 @@ def cdf_preimages_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3692,7 +3677,6 @@ def txn_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         marks = LakeTable.create(
@@ -3701,7 +3685,6 @@ def txn_read(spark, sf_dir):
             schema=[("event_type", "string"), ("hi_event_id", "bigint")],
             key_cols=["event_type"],
             n_buckets=4,
-            mode="mor",
             order_col="hi_event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3785,7 +3768,6 @@ def rollback_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3863,7 +3845,6 @@ def branch_read(spark, sf_dir):
             ],
             key_cols=["user_id"],
             n_buckets=8,
-            mode="mor",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -3937,7 +3918,7 @@ def publish_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "repo_stats"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_pub_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
         docs = _t(spark, sf_dir, "documents")
@@ -4035,8 +4016,8 @@ def redrive_read(spark, sf_dir):
 
     Scale shape: rejects are ~1/5 here but ~1% in production — the re-drive
     is one ordinary O(changes) epoch over the reject table, never a WAL
-    re-scan; the lsn guard (CoW) / read-time window (MoR) makes stale
-    re-drives unable to clobber newer live rows."""
+    re-scan; the read-time window on last_lsn makes stale re-drives unable
+    to clobber newer live rows."""
     import tempfile
 
     from data_exchange_hl7_spark.engine import Engine
@@ -4046,7 +4027,7 @@ def redrive_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "repo_files"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_redrive_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         docs = _t(spark, sf_dir, "documents")
         wal = (
@@ -4088,7 +4069,7 @@ def redrive_read(spark, sf_dir):
 
         eng.reprocess_rejects(table, epoch=1000, fix=fix)
         _LAKE_DEMO_CACHE[key] = loc
-    eng = Engine(spark, loc, n_buckets=8, mode="mor")
+    eng = Engine(spark, loc, n_buckets=8)
     table = eng.snapshot_table("repo_files")
     redriven = (
         eng.rejects("repo_files")
@@ -4147,7 +4128,7 @@ def stream_ingest_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "repo_files"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_stream_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         docs = _t(spark, sf_dir, "documents")
         base = docs.select(
@@ -4264,7 +4245,7 @@ def replay_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "repo_files_replay"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_replay_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         docs = _t(spark, sf_dir, "documents")
         k = docs.agg(F.max("doc_id")).collect()[0][0] // 2  # scalar, metadata-sized
         base = docs.select(
@@ -4806,7 +4787,7 @@ def _scd2_demo(spark, sf_dir) -> str:
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "scd2_history"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_scd2_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.scd2_table("scd2_history")
         base = _t(spark, sf_dir, "documents").select(
@@ -5490,7 +5471,7 @@ def join_view_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "files_meta"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_joinview_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         dim = LakeTable.create(
             spark,
@@ -5503,7 +5484,6 @@ def join_view_read(spark, sf_dir):
             ],
             ["repo"],
             n_buckets=4,
-            mode="mor",
             order_col="last_lsn",
         )
         eng.join_table(
@@ -5700,7 +5680,6 @@ def files_inspect_read(spark, sf_dir):
             ],
             key_cols=["user_id", "event_type"],
             n_buckets=2,
-            mode="cow",
             order_col="event_id",
         )
         ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id")
@@ -5708,6 +5687,7 @@ def files_inspect_read(spark, sf_dir):
             ev, ["user_id", "event_type"], ["event_id"]
         ).withColumn("__op", F.lit("U"))
         t.merge(changes, epoch=1)
+        t.compact()  # the read-optimized cadence: stats describe base files
         _LAKE_DEMO_CACHE[key] = loc
 
     # row count through the advertised metadata-table surface (footer
@@ -5792,7 +5772,7 @@ def purge_cascade_read(spark, sf_dir):
     loc = _LAKE_DEMO_CACHE.get(key)
     if not (loc and LakeTable.exists(os.path.join(loc, "file_stats"))):
         loc = tempfile.mkdtemp(prefix="dex_engine_purgecascade_")
-        eng = Engine(spark, loc, n_buckets=8, mode="mor")
+        eng = Engine(spark, loc, n_buckets=8)
         table = eng.snapshot_table("repo_files")
         eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
         eng.apply_epoch(
@@ -6057,7 +6037,6 @@ def corpus_build_read(spark, sf_dir):
             ],
             key_cols=["doc_id"],
             n_buckets=8,
-            mode="mor",
             order_col="ver",
         )
         t.add_check_constraint("min_tokens", f"n_tok >= {CB_MIN_TOKENS}")

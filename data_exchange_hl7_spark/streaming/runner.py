@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from data_exchange_hl7_spark.engine import Engine
 from data_exchange_hl7_spark.engine import table_name as _tname
 from data_exchange_hl7_spark.lake.table import LakeTable
-from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 
 MAX_SCAN_TASKS = 20_000  # upper bound on splits for one WAL scan
@@ -169,8 +168,8 @@ class MicroBatchRunner:
         # VERIFIED against the observed WAL (txn_gate raises on violation)
         self.max_txn_span = max_txn_span
         self.held_txns: int | None = None
-        # mor maintenance cadence: fold deltas into base every K applied
-        # epochs (bounds read amplification at K delta layers)
+        # maintenance cadence: fold deltas into base every K applied epochs
+        # (bounds read amplification at K delta layers; 1 = read-optimized)
         self.compact_every = compact_every
         # when set, expire old snapshots after each compaction (bounds
         # storage: without it a 10^10-event stream accretes a delta layer
@@ -205,8 +204,6 @@ class MicroBatchRunner:
         # later run on the same runner (gated or not) would read the
         # previous run's count
         self.held_txns = None
-        if self.txn_boundaries:
-            require_mor(table)
         # unpersist on EVERY exit: the max_txn_span verification inside
         # gate_transactions raises AFTER the dim is materialized, so the
         # persist must already be under this try or each failed run pins a
@@ -393,8 +390,8 @@ def replay(
         flt = flt.filter((F.col("ts") >= ts_range[0]) & (F.col("ts") <= ts_range[1]))
         meta["filter"]["ts_range"] = [str(t) for t in ts_range]
     table = engine.snapshot_table(table_name)
-    # maintenance cadence matters for LARGE replays: without it a mor-mode
-    # replay accretes one delta layer per epoch for the whole run
+    # maintenance cadence matters for LARGE replays: without it the replay
+    # accretes one delta layer per epoch for the whole run
     MicroBatchRunner(
         engine,
         epoch_size,

@@ -27,7 +27,6 @@ from data_exchange_hl7_spark.streaming.runner import (
     _maintain_lineage,
     require_consolidate_opts,
 )
-from data_exchange_hl7_spark.streaming.txn_gate import require_mor
 
 
 def stream_apply(
@@ -75,8 +74,6 @@ def stream_apply(
     collide with the parent's committed epochs 0..k and no-op silently — the
     WAL window would be lost on the audit branch. A pre-existing checkpoint
     without a recorded base keeps base 0 (upgrade compatibility)."""
-    if txn_boundaries:
-        require_mor(table)
     # refused here, not at the compact_every-th batch: that batch would
     # already have applied, and every restart would re-deliver it and fail
     require_consolidate_opts(compact_opts, "stream_apply")

@@ -54,21 +54,6 @@ TXN_EVENTS_KEY = "txn_events"
 APPLY_LSN = "__apply_lsn"
 
 
-def require_mor(table) -> None:
-    """Refuse a non-MoR target for a gated apply. CoW's ``_merge_cow``
-    resolves cross-epoch conflicts by arrival order, not order_col; gated
-    epochs are sliced by apply lsn, so a later epoch legitimately carries
-    OLDER-lsn events (held transactions), and under CoW those would
-    overwrite newer state. MoR resolves per key by order_col at read time,
-    which is arrival-order-independent, so the gate is MoR-only."""
-    if table.current_snapshot().get("mode") != "mor":
-        raise ValueError(
-            "txn_boundaries=True requires a mode='mor' table: gated "
-            "epochs can apply older-lsn events after newer ones, and "
-            "CoW merges resolve cross-epoch conflicts by arrival order"
-        )
-
-
 def txn_dim(
     events: DataFrame,
     txn_id_col: str = "txn_id",

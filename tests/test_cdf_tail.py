@@ -24,7 +24,6 @@ def _mk(spark, path, n_buckets=4, cols=None):
         schema=cols,
         key_cols=["k"],
         n_buckets=n_buckets,
-        mode="mor",
         order_col="lsn",
     )
 

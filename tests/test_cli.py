@@ -35,7 +35,7 @@ def test_cli_lifecycle(spark):
 
     out = _cli(
         "ingest", "--warehouse", wh, "--wal", wal, "--epoch-size", "1500",
-        "--buckets", "8", "--mode", "mor", "--compact-every", "2",
+        "--buckets", "8", "--compact-every", "2",
     )
     assert out[-1]["rows"] > 0 and len(out) >= 2
     assert all(s["applied"] for s in out[:-1])
@@ -51,7 +51,7 @@ def test_cli_lifecycle(spark):
     victim = files and "org-0001/proj"
     p = _cli(
         "purge", "--warehouse", wh, "--predicate", f"repo = '{victim}'",
-        "--epoch", "9999", "--buckets", "8", "--mode", "mor",
+        "--epoch", "9999", "--buckets", "8",
     )
     assert p[-1]["applied"]
 
@@ -104,7 +104,7 @@ def test_cli_purge_refuses_typod_table_and_unregistered_deriveds(spark):
     from data_exchange_hl7_spark.streaming.runner import MicroBatchRunner
 
     wh = tempfile.mkdtemp(prefix="cli_purge_wh_")
-    eng = Engine(spark, wh, n_buckets=4, mode="mor")
+    eng = Engine(spark, wh, n_buckets=4)
     t = eng.snapshot_table("repo_files")
     eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
     MicroBatchRunner(eng, epoch_size=1500).run(change_events(spark, 1500), t)
@@ -161,14 +161,14 @@ def test_cli_atomic_ingest_recover_and_quarantine(spark):
     wh = tempfile.mkdtemp(prefix="cli_wh_a_")
     write_wal(change_events(spark, 3000), wal)
     # pre-create the table with a firing constraint so the CLI ingest gates
-    eng = Engine(spark, wh, n_buckets=8, mode="mor")
+    eng = Engine(spark, wh, n_buckets=8)
     eng.snapshot_table("repo_files").add_check_constraint(
         "size_mod3", "size_bytes % 3 <> 0"
     )
 
     out = _cli(
         "ingest", "--warehouse", wh, "--wal", wal, "--epoch-size", "1500",
-        "--buckets", "8", "--mode", "mor", "--atomic",
+        "--buckets", "8", "--atomic",
     )
     assert out[-1]["rows"] > 0
     applied = [s for s in out[:-1] if s.get("applied")]

@@ -44,9 +44,9 @@ def _assert_matches_oracle(table, oracle_state):
             assert got.get(f) == orc["extra"].get(f), (key, f)
 
 
-@pytest.mark.parametrize("mode,compact_every", [("cow", None), ("mor", None), ("mor", 2)])
-def test_full_replay_matches_oracle(spark, events, oracle_state, tmp_path, mode, compact_every):
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16, mode=mode)
+@pytest.mark.parametrize("compact_every", [1, None, 2], ids=lambda k: f"mor-{k}")
+def test_full_replay_matches_oracle(spark, events, oracle_state, tmp_path, compact_every):
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
     table = eng.snapshot_table("repo_files")
     stats = MicroBatchRunner(eng, epoch_size=EPOCH, compact_every=compact_every).run(
         events, table
@@ -54,6 +54,9 @@ def test_full_replay_matches_oracle(spark, events, oracle_state, tmp_path, mode,
     assert len(stats) == N_EVENTS // EPOCH
     assert all(s.get("applied") for s in stats)
     assert oracle_state.rows, "oracle produced empty state — generator broken"
+    if compact_every == 1:
+        # the read-optimized cadence: every epoch is folded into base files
+        assert table.current_snapshot()["deltas"] == []
     _assert_matches_oracle(table, oracle_state)
 
     # evolved schema landed
@@ -252,7 +255,7 @@ def test_reprocess_rejects_after_fix(spark, tmp_path):
     rows stay rejected."""
     from data_exchange_hl7_spark.engine import Engine
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     events = change_events(spark, 4000)
     MicroBatchRunner(eng, epoch_size=2000).run(events, table)
@@ -300,14 +303,13 @@ def test_reprocess_rejects_after_fix(spark, tmp_path):
     assert rej2.filter(F.coalesce(F.trim("commit"), F.lit("")) == "").count() == 0
 
 
-def test_reprocess_rejects_cow_no_stale_clobber(spark, tmp_path):
-    """CoW merge replaces matched keys unconditionally (no read-time lsn
-    window like MoR), so reprocess_rejects must drop stale re-drives BEFORE
-    apply: a rejected old version of a key whose live row is newer must not
-    overwrite it. Same no-clobber contract as the MoR test, on mode='cow'."""
+def test_reprocess_rejects_no_stale_clobber(spark, tmp_path):
+    """A re-driven reject older than the live row of its key must not
+    overwrite it: the read-time window orders each key's versions by
+    last_lsn, so the stale version loses to the newer live one."""
     from data_exchange_hl7_spark.engine import Engine
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="cow")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     events = change_events(spark, 4000)
     MicroBatchRunner(eng, epoch_size=2000).run(events, table)
@@ -318,8 +320,7 @@ def test_reprocess_rejects_cow_no_stale_clobber(spark, tmp_path):
               for r in table.snapshot().collect()}
 
     # deterministic stale re-drive: a VALID event for an existing live key
-    # with lsn 0 (older than any live version). Without the guard, the CoW
-    # merge would replace the live row with this content unconditionally.
+    # with lsn 0 (older than any live version)
     victim = table.snapshot().orderBy(F.desc("last_lsn")).limit(1).collect()[0]
     vkey = (victim["repo"], victim["path"])
     stale_ev = (
@@ -358,7 +359,7 @@ def test_reprocess_rejects_cow_no_stale_clobber(spark, tmp_path):
                 assert after[k][1] == sha, f"same-lsn row changed content {k}"
         else:
             assert k in deleted_keys and deleted_keys[k] > lsn, k
-    # the injected stale event was filtered out, not applied
+    # the injected stale event lost to the live row
     assert after[vkey] == before[vkey], "stale re-drive clobbered the live row"
 
 
@@ -374,7 +375,7 @@ def test_derived_table_transactional_with_main(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     events = change_events(spark, 4000)
@@ -410,7 +411,7 @@ def test_derived_table_resumes_after_partial_commit(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     events = change_events(spark, 2000)
@@ -467,7 +468,7 @@ def test_derived_table_runner_resume_skips_only_fully_committed(spark, tmp_path)
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     events = change_events(spark, 4000)
@@ -520,7 +521,7 @@ def test_derived_table_reregistration_replaces(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
@@ -540,7 +541,7 @@ def test_derived_table_compacted_with_main(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     events = change_events(spark, 4000)
@@ -594,7 +595,7 @@ def test_aggregate_table_matches_final_groupby(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 4000)
@@ -625,7 +626,7 @@ def test_aggregate_table_resumes_after_partial_commit(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 3000)
@@ -677,7 +678,7 @@ def test_aggregate_resume_refuses_expired_prestate(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 2000)
@@ -710,7 +711,7 @@ def test_minhash_index_incremental_equals_recompute(spark, tmp_path):
         minhash_index_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     idx = eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
     events = change_events(spark, 4000)
@@ -740,7 +741,7 @@ def test_engine_purge_tombstones_whole_lineage(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     idx_t = eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
@@ -784,7 +785,7 @@ def test_engine_purge_resumes_after_partial_commit(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     events = change_events(spark, 2000)
@@ -832,7 +833,7 @@ def test_engine_redact_rederives_lineage(spark, tmp_path):
         minhash_index_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     idx_t = eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
@@ -881,7 +882,7 @@ def test_rebuild_derived_stage_scoped_replay(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
@@ -940,7 +941,7 @@ def test_engine_rollback_cascades_lineage(spark, tmp_path):
     )
 
     def build(wh):
-        eng = Engine(spark, str(tmp_path / wh), n_buckets=8, mode="mor")
+        eng = Engine(spark, str(tmp_path / wh), n_buckets=8)
         t = eng.snapshot_table("repo_files")
         d = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
         a = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
@@ -993,7 +994,7 @@ def test_rebuild_derived_after_rollback_uses_corrected_epoch(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
@@ -1034,7 +1035,7 @@ def test_publish_maintains_derived_and_aggregate(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
@@ -1103,7 +1104,7 @@ def test_publish_resumes_after_partial_commit(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 3000).persist()
@@ -1152,7 +1153,7 @@ def test_rebuild_derived_after_multi_epoch_publish(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 3000).persist()
@@ -1187,7 +1188,7 @@ def test_rollback_past_publish_then_republish(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 3000).persist()
@@ -1229,7 +1230,7 @@ def test_publish_resume_drops_leaked_pin_tag(spark, tmp_path):
     """Crash between the retire marker and fast_forward's tag drop leaks
     the fork-base pin (unbounded expiry retention + the branch name becomes
     unusable); the resumed Engine.publish must finish the bookkeeping."""
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     events = change_events(spark, 2000).persist()
     eng.apply_epoch(events.filter(F.col("lsn") < 1000), table, epoch=0)
@@ -1259,7 +1260,7 @@ def test_publish_of_branch_with_nested_fast_forward(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     events = change_events(spark, 3000).persist()
@@ -1282,7 +1283,7 @@ def test_publish_of_branch_with_nested_fast_forward(spark, tmp_path):
         assert got[repo] == vals, repo
 
     # the refusal path: same topology, sub-branch dropped before publish
-    eng2 = Engine(spark, str(tmp_path / "wh2"), n_buckets=8, mode="mor")
+    eng2 = Engine(spark, str(tmp_path / "wh2"), n_buckets=8)
     t2 = eng2.snapshot_table("repo_files")
     eng2.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
     eng2.apply_epoch(events.filter(F.col("lsn") < 1000), t2, epoch=0)
@@ -1314,7 +1315,7 @@ def test_purge_refuses_when_deriveds_not_reregistered(spark, tmp_path):
     )
 
     wh = str(tmp_path / "wh")
-    eng = Engine(spark, wh, n_buckets=4, mode="mor")
+    eng = Engine(spark, wh, n_buckets=4)
     table = eng.snapshot_table("repo_files")
     idx_t = eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
     events = change_events(spark, 1500)
@@ -1322,7 +1323,7 @@ def test_purge_refuses_when_deriveds_not_reregistered(spark, tmp_path):
     victim = table.snapshot().select("repo").first()["repo"]
 
     # fresh process: new Engine on the same warehouse, nothing re-registered
-    eng2 = Engine(spark, wh, n_buckets=4, mode="mor")
+    eng2 = Engine(spark, wh, n_buckets=4)
     t2 = eng2.snapshot_table("repo_files")
     assert set(eng2.registered_derived("repo_files")) == {"minhash_index"}
     with _pytest.raises(RuntimeError, match="minhash_index"):
@@ -1351,7 +1352,7 @@ def test_apply_epoch_releases_persisted_frames(spark, tmp_path):
     it — the metrics Observation rebinds the frame (CollectMetrics node),
     so unpersisting the rebound handle leaked one cached epoch per apply
     (regression: 3 leaked frames after 3 epochs before the fix)."""
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     t = eng.snapshot_table("repo_files")
     MicroBatchRunner(eng, epoch_size=1000).run(change_events(spark, 3000), t)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
@@ -1369,7 +1370,7 @@ def test_check_constraints_gate_before_derived_fanout(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
@@ -1419,7 +1420,7 @@ def test_reprocess_quarantine_redrive(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
@@ -1460,7 +1461,7 @@ def test_purge_and_redact_sweep_quarantine_sidecar(spark, tmp_path):
     recomputed); the sweep is idempotent on re-run."""
     from data_exchange_hl7_spark.engine import Engine
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
     events = change_events(spark, 2000)
@@ -1514,7 +1515,7 @@ def test_engine_merge_into_cascades_lineage(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     agg_t = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
@@ -1574,7 +1575,7 @@ def test_engine_merge_into_cascades_lineage(spark, tmp_path):
     src.unpersist()
 
     # a process that has not re-registered the deriveds must be refused
-    eng_bare = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng_bare = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     t_bare = eng_bare.snapshot_table("repo_files")
     with pytest.raises(RuntimeError, match="would MISS derived tables"):
         eng_bare.merge_into(t_bare, src, **clauses, epoch=9001)
@@ -1590,7 +1591,7 @@ def test_engine_merge_into_resumes_after_partial_commit(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     eng.apply_epoch(change_events(spark, 2000), table, epoch=0)
@@ -1637,7 +1638,7 @@ def test_engine_merge_into_atomic_publishes_lineage_together(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     eng.apply_epoch(change_events(spark, 2000), table, epoch=0)
@@ -1669,7 +1670,7 @@ def test_redact_refuses_constraint_violating_rewrite(spark, tmp_path):
 
     from data_exchange_hl7_spark.engine import FILE_STATS_SCHEMA, file_stats_derive
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_pos", "size_bytes > 0")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
@@ -1715,7 +1716,7 @@ def test_mor_apply_writes_one_delta_file_per_bucket(
     bucket and hands the MoR merge a __bucket column saying so: at most one
     file per bucket per delta layer, and the apply reaches the oracle state."""
     n_buckets = 8
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets)
     table = eng.snapshot_table("repo_files")
     r = eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
     assert 0 < r["delta_files"] <= n_buckets
@@ -1726,7 +1727,7 @@ def test_engine_merge_into_writes_one_delta_file_per_bucket(spark, tmp_path, eve
     """Engine.merge_into's compiled frame is not bucket-partitioned either:
     at most one file per bucket per delta layer."""
     n_buckets = 8
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets)
     table = eng.snapshot_table("repo_files")
     eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
     src = spark.createDataFrame(

@@ -31,7 +31,6 @@ def _mk_dim(spark, loc):
         DIM_SCHEMA,
         ["repo"],
         n_buckets=4,
-        mode="mor",
         order_col="last_lsn",
     )
 
@@ -48,7 +47,7 @@ def _dim_rows(repos_df, lsn, op="U", boost_add=0):
 
 
 def _setup(spark, tmp_path, n_events=3000):
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     t = eng.snapshot_table("repo_files")
     dim = _mk_dim(spark, str(tmp_path / "wh" / "repo_meta"))
     view = eng.join_table(
@@ -117,7 +116,7 @@ def test_join_view_resumes_after_partial_commit(spark, tmp_path):
 
     # crash window: epoch 1 lands on the MAIN table through an engine that
     # has no view registered (= died between the two commits)
-    eng_blind = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng_blind = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     t_blind = eng_blind.snapshot_table("repo_files")
     eng_blind.apply_epoch(
         ev.filter(F.col("lsn") >= 1500), t_blind, epoch=1, collect_metrics=False
@@ -195,7 +194,7 @@ def test_join_view_rebuild_from_either_parent(spark, tmp_path):
 
 
 def test_join_view_rejects_bad_registration(spark, tmp_path):
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     eng.snapshot_table("repo_files")
     dim = _mk_dim(spark, str(tmp_path / "wh" / "repo_meta"))
     with pytest.raises(ValueError, match="subset of the main key"):

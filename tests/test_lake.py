@@ -13,11 +13,14 @@ def _changes(spark, rows):
     return df
 
 
-def _mk(spark, tmp_path, name="t", mode="cow"):
+def _mk(spark, tmp_path, name="t"):
     return LakeTable.create(
-        spark, str(tmp_path / name), SCHEMA, ["k"], n_buckets=4,
-        mode=mode, order_col="lsn" if mode == "mor" else None,
+        spark, str(tmp_path / name), SCHEMA, ["k"], n_buckets=4, order_col="lsn"
     )
+
+
+# "folded" compacts after every merge, the read-optimized cadence
+FOLD = pytest.mark.parametrize("fold", [False, True], ids=["mor", "folded"])
 
 
 def test_merge_upsert_delete(spark, tmp_path):
@@ -66,7 +69,7 @@ def test_reads_span_schema_versions(spark, tmp_path):
     return the same rows, before and after compaction. Each layer is read
     with its own version's manifest schema, so an old INT32 file reads as
     int and then widens."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U"),
                              ("c", "3", 3, 3, "U")]), epoch=0)
     t.add_column("tier", "string", default="bronze")
@@ -114,7 +117,7 @@ def test_read_shapes_match_model(spark, tmp_path, resolve):
     t = LakeTable.create(
         spark, str(tmp_path / "t"),
         [("g", "string"), ("k", "string"), ("n", "int"), ("lsn", "bigint")],
-        ["g", "k"], n_buckets=4, mode="mor",
+        ["g", "k"], n_buckets=4,
         order_col=None if additive else "lsn", resolve=resolve,
     )
     model: dict = {}  # (g, k) -> [n, m, lsn, op]
@@ -196,17 +199,48 @@ def test_read_shapes_match_model(spark, tmp_path, resolve):
         assert t.consolidate_deltas()["consolidated"] or stage == "consolidated"
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_merge_writes_manifest_types(spark, tmp_path, mode):
+@FOLD
+def test_merge_writes_manifest_types(spark, tmp_path, fold):
     """A change frame whose column types differ from the manifest (n as
     long for an int column) is cast on write, so the files read back with
     the manifest schema."""
-    t = _mk(spark, tmp_path, mode=mode)
+    t = _mk(spark, tmp_path)
     t.merge(spark.createDataFrame(
         [("a", "1", 7, 1, "U")], "k string, v string, n long, lsn int, __op string"
     ), epoch=0)
+    if fold:
+        t.compact()
     assert [tuple(r) for r in t.snapshot().collect()] == [("a", "1", 7, 1)]
     assert [r["n"] for r in t.lookup([("a",)]).collect()] == [7]
+
+
+def test_legacy_copy_on_write_manifest_reads_but_refuses_merge(spark, tmp_path):
+    """A table written by an older version in copy-on-write mode has
+    ``mode: "cow"`` and no order_col in its manifest, so delta layers over it
+    cannot be resolved. Its reads still work; a merge raises before any
+    write."""
+    import json
+    import os
+
+    t = _mk(spark, tmp_path, "legacy")
+    t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
+    t.compact()
+    # the manifest as the copy-on-write merge left it: base files, no deltas
+    snap = t.current_snapshot()
+    with open(os.path.join(t.meta_dir, f"v{snap['snapshot_id']:08d}.json"), "w") as f:
+        json.dump({**snap, "mode": "cow", "order_col": None}, f)
+    assert {tuple(r) for r in t.snapshot().collect()} == {("a", "1", 1, 1), ("b", "2", 2, 2)}
+    assert [r["v"] for r in t.lookup([("a",)]).collect()] == ["1"]
+    assert t.count_rows() == (2, True)
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(t.location) for f in fs)
+
+    before = files()
+    with pytest.raises(ValueError, match="copy-on-write.*order_col"):
+        t.merge(_changes(spark, [("a", "9", 9, 3, "U")]), epoch=1)
+    assert files() == before
+    assert t.current_snapshot() == {**snap, "mode": "cow", "order_col": None}
 
 
 def test_illegal_widen_rejected(spark, tmp_path):
@@ -226,7 +260,7 @@ def test_concurrent_commit_detected(spark, tmp_path):
 
 
 def test_mor_resolution_and_compaction(spark, tmp_path):
-    t = _mk(spark, tmp_path, "t4", mode="mor")
+    t = _mk(spark, tmp_path, "t4")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     t.merge(_changes(spark, [("a", "3", 3, 3, "U"), ("b", None, None, 4, "D")]), epoch=1)
     before = sorted(tuple(r) for r in t.snapshot().collect())
@@ -248,7 +282,7 @@ def test_metadata_tables_reflect_manifest(spark, tmp_path):
     files/snapshots/refs metadata tables: ops queries (delta depth per
     bucket, size distribution, tag audit) as plain DataFrame SQL, built
     metadata-only from the manifest + parquet footers."""
-    t = _mk(spark, tmp_path, "meta", mode="mor")
+    t = _mk(spark, tmp_path, "meta")
     t.merge(_changes(spark, [(f"k{i}", str(i), i, i, "U") for i in range(30)]), epoch=0)
     t.compact()  # MoR: base files exist only after the first compaction
     t.merge(_changes(spark, [(f"k{i}", "u", i, 100 + i, "U") for i in range(10)]), epoch=1)
@@ -292,7 +326,7 @@ def test_orphan_files_reports_unreferenced_only(spark, tmp_path):
     then actually reclaims the orphan."""
     import os
 
-    t = _mk(spark, tmp_path, "orph", mode="mor")
+    t = _mk(spark, tmp_path, "orph")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     assert t.orphan_files().count() == 0
 
@@ -328,7 +362,7 @@ def test_remove_orphans_age_and_inflight_guards(spark, tmp_path):
     and referenced data is untouched."""
     import os
 
-    t = _mk(spark, tmp_path, "rmorph", mode="mor")
+    t = _mk(spark, tmp_path, "rmorph")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
 
     def _fake(sid_dir):
@@ -375,7 +409,7 @@ def test_zorder_compaction_prunes_on_every_clustered_column(spark, tmp_path):
         t = LakeTable.create(
             spark, str(tmp_path / name),
             [("r", "string"), ("p", "string"), ("v", "string"), ("lsn", "bigint")],
-            ["r", "p"], n_buckets=1, mode="mor", order_col="lsn",
+            ["r", "p"], n_buckets=1, order_col="lsn",
         )
         df = spark.createDataFrame(
             grid, "r string, p string, v string, lsn long, __op string"
@@ -415,7 +449,7 @@ def test_zorder_compaction_prunes_on_every_clustered_column(spark, tmp_path):
 
 
 def test_mor_order_col_decides(spark, tmp_path):
-    t = _mk(spark, tmp_path, "t5", mode="mor")
+    t = _mk(spark, tmp_path, "t5")
     # later delta with LOWER lsn must NOT win
     t.merge(_changes(spark, [("a", "new", 1, 10, "U")]), epoch=0)
     t.merge(_changes(spark, [("a", "stale", 1, 5, "U")]), epoch=1)
@@ -426,6 +460,7 @@ def test_bucket_pruned_read(spark, tmp_path):
     t = _mk(spark, tmp_path, "t6")
     rows = [(f"k{i}", str(i), i, i, "U") for i in range(50)]
     t.merge(_changes(spark, rows), epoch=0)
+    t.compact()  # inspect the folded base buckets
     snap = t.current_snapshot()
     some_bucket = int(list(snap["buckets"].keys())[0])
     part = t.snapshot(buckets=[some_bucket])
@@ -433,7 +468,7 @@ def test_bucket_pruned_read(spark, tmp_path):
 
 
 def test_expire_snapshots_removes_orphans(spark, tmp_path):
-    t = _mk(spark, tmp_path, "t7", mode="mor")
+    t = _mk(spark, tmp_path, "t7")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     t.merge(_changes(spark, [("a", "3", 3, 3, "U")]), epoch=1)
     t.compact()
@@ -472,7 +507,7 @@ def test_incremental_compaction_touches_only_dirty_buckets(spark, tmp_path):
     their delta entries, and the resolved state is unchanged."""
     import os
 
-    t = _mk(spark, tmp_path, "t9", mode="mor")
+    t = _mk(spark, tmp_path, "t9")
     base = [(f"k{i}", str(i), i, i, "U") for i in range(40)]
     t.merge(_changes(spark, base), epoch=0)
     t.compact()  # all 40 keys land as base files across the 4 buckets
@@ -513,7 +548,7 @@ def test_expire_spares_inflight_writer_files(spark, tmp_path):
     committer) must survive expiry; expired dirs lose their sidecars too."""
     import os
 
-    t = _mk(spark, tmp_path, "t10", mode="mor")
+    t = _mk(spark, tmp_path, "t10")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     t.merge(_changes(spark, [("a", "2", 2, 2, "U")]), epoch=1)
     t.compact()
@@ -603,7 +638,7 @@ def test_history_lineage(spark, tmp_path):
     the right operation name, one manifest key set, no operation-specific
     field leaking onto a descendant, and a staged commit that publishes
     with its fingerprint intact."""
-    t = _mk(spark, tmp_path, "th", mode="mor")
+    t = _mk(spark, tmp_path, "th")
 
     def ch(rows):  # after add_column("x"), upserts carry every column
         return _changes(spark, rows).withColumn("x", F.lit(None).cast("string"))
@@ -649,7 +684,7 @@ def test_history_lineage(spark, tmp_path):
 
 
 def test_changes_between_is_exact_change_feed(spark, tmp_path):
-    t = _mk(spark, tmp_path, "cdf", mode="mor")
+    t = _mk(spark, tmp_path, "cdf")
     r1 = t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     r2 = t.merge(_changes(spark, [("a", "9", 9, 3, "U"), ("b", None, None, 4, "D")]), epoch=1)
     r3 = t.merge(_changes(spark, [("c", "5", 5, 5, "U")]), epoch=2)
@@ -669,7 +704,7 @@ def test_changes_between_is_exact_change_feed(spark, tmp_path):
     feed = t.changes_between(r1["snapshot_id"])
     mirror = LakeTable.create(
         spark, str(tmp_path / "mirror"), SCHEMA, ["k"], n_buckets=4,
-        mode="mor", order_col="lsn",
+        order_col="lsn",
     )
     mirror.merge(old.withColumn("__op", F.lit("U")), epoch=0)
     mirror.merge(
@@ -680,16 +715,29 @@ def test_changes_between_is_exact_change_feed(spark, tmp_path):
 
 
 def test_changes_between_raises_on_cow(spark, tmp_path):
+    """A table an older version created in copy-on-write mode (a hand-edited
+    v0.json: ``mode: "cow"``, no order_col) kept its history in base-file
+    rewrites, not delta layers: its change feed refuses, never reads empty."""
+    import json
+    import os
+
     t = _mk(spark, tmp_path, "cdfcow")
-    with pytest.raises(ValueError, match="merge-on-read"):
+    v0 = os.path.join(t.meta_dir, "v00000000.json")
+    with open(v0) as f:
+        snap = json.load(f)
+    with open(v0, "w") as f:
+        json.dump({**snap, "mode": "cow", "order_col": None}, f)
+    with pytest.raises(ValueError, match="copy-on-write"):
         t.changes_between(0)
+    with pytest.raises(ValueError, match="copy-on-write"):
+        t.changes_with_preimages(0)
 
 
 def test_stats_file_skipping_prunes_and_stays_correct(spark, tmp_path):
     # one bucket so pruning (not bucketing) is what separates the files
     t = LakeTable.create(
         spark, str(tmp_path / "sk"), SCHEMA, ["k"], n_buckets=1,
-        mode="mor", order_col="lsn",
+        order_col="lsn",
     )
     t.merge(_changes(spark, [(f"a{i:02d}", "x", i, i, "U") for i in range(10)]), epoch=0)
     t.merge(_changes(spark, [(f"z{i:02d}", "y", i, 100 + i, "U") for i in range(10)]), epoch=1)
@@ -721,7 +769,7 @@ def test_mor_nonkey_predicate_never_prunes_before_resolution(spark, tmp_path):
     # and return NO rows for "a".
     t = LakeTable.create(
         spark, str(tmp_path / "nk"), SCHEMA, ["k"], n_buckets=1,
-        mode="mor", order_col="lsn",
+        order_col="lsn",
     )
     t.merge(_changes(spark, [("a", "old", 1, 1, "U")]), epoch=0)
     t.merge(_changes(spark, [("a", "new", 999, 2, "U")]), epoch=1)
@@ -735,7 +783,7 @@ def test_sorted_compaction_tightens_file_skipping(spark, tmp_path):
     skip files INSIDE the bucket — and the read stays value-identical."""
     t = LakeTable.create(
         spark, str(tmp_path / "sortc"), SCHEMA, ["k"], n_buckets=1,
-        mode="mor", order_col="lsn",
+        order_col="lsn",
     )
     t.merge(_changes(spark, [(f"a{i:02d}", "x", i, i, "U") for i in range(20)]), epoch=0)
     t.merge(_changes(spark, [(f"z{i:02d}", "y", i, 100 + i, "U") for i in range(20)]), epoch=1)
@@ -754,7 +802,7 @@ def test_sorted_compaction_tightens_file_skipping(spark, tmp_path):
     # default compaction path unchanged: single file per bucket
     t2 = LakeTable.create(
         spark, str(tmp_path / "plainc"), SCHEMA, ["k"], n_buckets=1,
-        mode="mor", order_col="lsn",
+        order_col="lsn",
     )
     t2.merge(_changes(spark, [(f"a{i:02d}", "x", i, i, "U") for i in range(10)]), epoch=0)
     t2.compact()
@@ -764,7 +812,7 @@ def test_sorted_compaction_tightens_file_skipping(spark, tmp_path):
 def test_rebucket_preserves_state_and_future_merges(spark, tmp_path):
     """Bucket-count evolution: same rows before/after, bucket-pruned reads
     work under the new count, and later merges land in the new layout."""
-    t = _mk(spark, tmp_path, "rb", mode="mor")  # 4 buckets
+    t = _mk(spark, tmp_path, "rb")  # 4 buckets
     t.merge(_changes(spark, [(f"k{i}", str(i), i, i, "U") for i in range(40)]), epoch=0)
     before = {(r["k"], r["lsn"]) for r in t.snapshot().collect()}
 
@@ -792,7 +840,7 @@ def test_concurrent_writers_cas_serializes(spark, tmp_path):
 
     from data_exchange_hl7_spark.lake.table import ConcurrentCommitError
 
-    t = _mk(spark, tmp_path, "cc", mode="mor")
+    t = _mk(spark, tmp_path, "cc")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
 
     # simulate a stale writer: capture the parent, let another commit land,
@@ -843,7 +891,7 @@ def test_write_audit_publish(spark, tmp_path):
 
     from data_exchange_hl7_spark.lake.table import ConcurrentCommitError
 
-    t = _mk(spark, tmp_path, "wap", mode="mor")
+    t = _mk(spark, tmp_path, "wap")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
 
     r = t.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1, publish=False)
@@ -878,7 +926,7 @@ def test_tags_pin_snapshots_against_expiry(spark, tmp_path):
     expire_snapshots until the tag is dropped; as_of accepts tag names."""
     import pytest
 
-    t = _mk(spark, tmp_path, "tags", mode="mor")
+    t = _mk(spark, tmp_path, "tags")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     t.create_tag("v1.0")
     t.merge(_changes(spark, [("a", "2", 2, 2, "U"), ("b", "9", 9, 3, "U")]), epoch=1)
@@ -906,7 +954,7 @@ def test_discard_staged_reclaims_data_dirs(spark, tmp_path):
     later commit an orphaned stage would never be reclaimed."""
     import os
 
-    t = _mk(spark, tmp_path, "dsc", mode="mor")
+    t = _mk(spark, tmp_path, "dsc")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     before = set(os.listdir(t.data_dir))
     r = t.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1, publish=False)
@@ -922,7 +970,7 @@ def test_discard_staged_reclaims_data_dirs(spark, tmp_path):
 def test_history_epochs_sort_numerically(spark, tmp_path):
     """Epoch keys are stringified ints; past 9 epochs a lexicographic sort
     would order '10' before '2' in the lineage output."""
-    t = _mk(spark, tmp_path, "hist12", mode="mor")
+    t = _mk(spark, tmp_path, "hist12")
     for e in range(12):
         t.merge(_changes(spark, [("a", str(e), e, e + 1, "U")]), epoch=e)
     epochs = [int(e) for e in t.history()[0]["epochs"]]
@@ -934,7 +982,7 @@ def test_delete_where_purge_lifecycle(spark, tmp_path):
     exactly-once merge (logical delete), the CDF shows them as D, time
     travel preserves the pre-purge state, and compact+expire makes the
     removal physical (pre-purge snapshot gone)."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(
         _changes(
             spark,
@@ -967,7 +1015,7 @@ def test_update_where_redacts_in_place(spark, tmp_path):
     """update_where rewrites matching rows through the exactly-once merge:
     the redacted value wins the MoR read-time resolution (same order value,
     later layer), replay is a no-op, and time travel shows the original."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(
         _changes(spark, [("a", "secret", 1, 1, "U"), ("b", "ok", 2, 2, "U")]),
         epoch=0,
@@ -992,7 +1040,7 @@ def test_lookup_point_read_prunes_and_stays_correct(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "pl"),
         [("repo", "string"), ("path", "string"), ("v", "string"), ("lsn", "bigint")],
-        ["repo", "path"], n_buckets=4, mode="mor", order_col="lsn",
+        ["repo", "path"], n_buckets=4, order_col="lsn",
     )
 
     def ch(rows):
@@ -1040,7 +1088,7 @@ def test_rollback_restores_state_and_reopens_epoch(spark, tmp_path):
     the ledger restore is what makes the re-apply possible under the
     exactly-once rule. Final state must equal a control table that never saw
     the bad batch."""
-    t = _mk(spark, tmp_path, "roll", mode="mor")
+    t = _mk(spark, tmp_path, "roll")
     good0 = [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]
     bad1 = [("a", "CORRUPT", -1, 3, "U"), ("c", "CORRUPT", -1, 4, "U")]
     fix1 = [("a", "9", 9, 3, "U"), ("c", "3", 3, 4, "U")]
@@ -1062,7 +1110,7 @@ def test_rollback_restores_state_and_reopens_epoch(spark, tmp_path):
     assert not t.merge(_changes(spark, [("a", "XX", 0, 99, "U")]), epoch=0)["applied"]
     assert t.merge(_changes(spark, fix1), epoch=1)["applied"]
 
-    control = _mk(spark, tmp_path, "control", mode="mor")
+    control = _mk(spark, tmp_path, "control")
     control.merge(_changes(spark, good0), epoch=0)
     control.merge(_changes(spark, fix1), epoch=1)
     got = sorted(map(tuple, t.snapshot().select("k", "v", "n", "lsn").collect()))
@@ -1079,7 +1127,7 @@ def test_rollback_time_travel_cdf_and_expiry(spark, tmp_path):
     rollback commit emits NO change-feed rows (Iceberg contract — consumers
     re-sync from the restored snapshot); expire_snapshots never reclaims the
     restored files because liveness is per-file from kept manifests."""
-    t = _mk(spark, tmp_path, "rollcdf", mode="mor")
+    t = _mk(spark, tmp_path, "rollcdf")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     pre_sid = t.current_snapshot()["snapshot_id"]
     t.merge(_changes(spark, [("a", "CORRUPT", -1, 2, "U")]), epoch=1)
@@ -1107,7 +1155,7 @@ def test_rollback_keeps_current_schema(spark, tmp_path):
     """Iceberg rollback does not revert schema: after add_column + rollback
     to a pre-evolution snapshot, the column survives (null-filled through
     field-ID projection) and writes at the current schema proceed."""
-    t = _mk(spark, tmp_path, "rollschema", mode="mor")
+    t = _mk(spark, tmp_path, "rollschema")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     pre_sid = t.current_snapshot()["snapshot_id"]
     t.add_column("extra", "string")
@@ -1139,7 +1187,7 @@ def test_rollback_across_rebucket_restores_layout(spark, tmp_path):
     evolved after the target snapshot, the restored state carries the
     target's n_buckets and subsequent merges bucket against it — otherwise
     the merge's key-hash routing would disagree with the restored files."""
-    t = _mk(spark, tmp_path, "rollbucket", mode="mor")
+    t = _mk(spark, tmp_path, "rollbucket")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     pre_sid = t.current_snapshot()["snapshot_id"]
     assert t.current_snapshot()["n_buckets"] == 4
@@ -1165,7 +1213,7 @@ def test_branch_fork_isolated_then_fast_forward(spark, tmp_path):
     fast_forward publishes the branch head as ONE linear parent commit whose
     state equals the branch's. After publish the branch is retired (further
     commits raise) but stays readable, and the pin tag is dropped."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
 
     b = t.branch(str(tmp_path / "audit"))
@@ -1206,7 +1254,7 @@ def test_branch_fork_isolated_then_fast_forward(spark, tmp_path):
 def test_branch_inherits_epoch_ledger(spark, tmp_path):
     """Exactly-once holds across the fork: re-applying a parent-committed
     epoch on the branch no-ops (the fork copies the ledger)."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"))
     assert not b.merge(_changes(spark, [("a", "XX", 0, 9, "U")]), epoch=0)["applied"]
@@ -1217,7 +1265,7 @@ def test_fast_forward_rejects_diverged_parent(spark, tmp_path):
     """Iceberg's fast-forward precondition: if the parent moved since the
     fork, the publish raises and NOTHING changes on either table — the
     recovery is a fresh fork + idempotent re-apply."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"))
     b.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
@@ -1232,7 +1280,7 @@ def test_fast_forward_rejects_diverged_parent(spark, tmp_path):
     assert b.merge(_changes(spark, [("d", "4", 4, 4, "U")]), epoch=2)["applied"]
 
     # not-a-branch and wrong-parent guards
-    other = _mk(spark, tmp_path, "other", mode="mor")
+    other = _mk(spark, tmp_path, "other")
     with pytest.raises(ValueError):
         t.fast_forward(other)
 
@@ -1241,7 +1289,7 @@ def test_branch_pinned_against_parent_expiry(spark, tmp_path):
     """The fork base is tagged on the parent, so parent expire_snapshots
     cannot reclaim files a live branch still references; branch expiry walks
     only the branch's own data dir, so it can never delete parent files."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"))
     b.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
@@ -1264,7 +1312,7 @@ def test_fast_forward_adopts_schema_and_bucket_evolution(spark, tmp_path):
     """A branch that evolved schema (add_column) and physical layout
     (rebucket) publishes both: the parent's post-publish reads see the new
     column and subsequent parent merges route by the branch's bucket count."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"))
     b.add_column("extra", "string")
@@ -1294,7 +1342,7 @@ def test_fast_forward_cdf_and_empty_branch(spark, tmp_path):
     """changes_between across the fast-forward commit emits exactly the
     branch's merged rows (its delta layers); publishing a zero-commit branch
     is a no-op."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     pre = t.current_snapshot()["snapshot_id"]
 
@@ -1313,7 +1361,7 @@ def test_branch_name_collision_and_duplicate_fork(spark, tmp_path):
     """A live branch's name cannot be reused (the pin tag would be silently
     clobbered — the VACUUM-breaks-clones footgun); an existing table cannot
     be branch-targeted."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     t.branch(str(tmp_path / "br"))
     with pytest.raises(ValueError):
@@ -1333,7 +1381,7 @@ def test_fast_forward_stages_under_next_sid(spark, tmp_path):
     import os
     import re
 
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     t.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
     pre_sid = t.current_snapshot()["snapshot_id"]
@@ -1384,7 +1432,7 @@ def test_fast_forward_self_heals_lost_retire_marker(spark, tmp_path):
     import json
     import os
 
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"), name="audit")
     b.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
@@ -1423,7 +1471,7 @@ def test_concurrent_fast_forwards_exactly_one_wins(spark, tmp_path):
     idempotent re-apply, publish)."""
     import threading
 
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("base", "0", 0, 1, "U")]), epoch=0)
 
     branches = []
@@ -1475,7 +1523,7 @@ def test_drop_column_and_no_resurrection_on_readd(spark, tmp_path):
     same name allocates a fresh field id — previously-written values must
     never resurface under the re-added column (the drop/re-add corruption a
     name-based file mapping would hit). Key/order columns refuse to drop."""
-    t = _mk(spark, tmp_path, "t", mode="mor")
+    t = _mk(spark, tmp_path, "t")
     t.add_column("extra", "string")
     t.merge(
         spark.createDataFrame(
@@ -1528,7 +1576,7 @@ def test_consolidate_deltas_keeps_tombstones_out_of_order(spark, tmp_path):
     carrying an OLDER event cannot resurrect a deleted key — the property
     full compact() cannot give (its resolved rewrite drops tombstones under
     the documented lsn-monotone contract, pinned here as the contrast)."""
-    t = _mk(spark, tmp_path, "minor", mode="mor")
+    t = _mk(spark, tmp_path, "minor")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     t.merge(_changes(spark, [("a", None, None, 10, "D")]), epoch=1)
 
@@ -1550,7 +1598,7 @@ def test_consolidate_deltas_keeps_tombstones_out_of_order(spark, tmp_path):
     # contrast pin: full compact() under the same out-of-order feed DOES
     # resurrect — the documented lsn-monotone contract, why streams must
     # use consolidate_deltas
-    t2 = _mk(spark, tmp_path, "major", mode="mor")
+    t2 = _mk(spark, tmp_path, "major")
     t2.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     t2.merge(_changes(spark, [("a", None, None, 10, "D")]), epoch=1)
     t2.compact()
@@ -1570,7 +1618,6 @@ def test_consolidate_deltas_sum_and_depth(spark, tmp_path):
         schema=[("k", "string"), ("n", "bigint")],
         key_cols=["k"],
         n_buckets=2,
-        mode="mor",
         resolve="sum",
     )
     for e in range(4):
@@ -1600,7 +1647,7 @@ def test_concurrent_same_branch_publish_single_winner(spark, tmp_path):
     them on its CAS loss, corrupting the winner's snapshot)."""
     import threading
 
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("base", "0", 0, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"), name="audit")
     b.merge(_changes(spark, [("k", "1", 1, 2, "U")]), epoch=1)
@@ -1644,7 +1691,7 @@ def test_fast_forward_refuses_when_branch_advances_mid_publish(spark, tmp_path):
     excluded from the parent yet locked out by the retire marker."""
     import os
 
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"), name="audit")
     b.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
@@ -1677,7 +1724,7 @@ def test_fast_forward_expired_walk_raises_concurrent_error(spark, tmp_path):
     metadata is expired, the self-heal walk must surface the documented
     ConcurrentCommitError (rebase guidance), not a bare ValueError from the
     retention-horizon load."""
-    t = _mk(spark, tmp_path, "parent", mode="mor")
+    t = _mk(spark, tmp_path, "parent")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     b = t.branch(str(tmp_path / "br"), name="audit")
     b.merge(_changes(spark, [("b", "2", 2, 2, "U")]), epoch=1)
@@ -1723,7 +1770,6 @@ def _mk_sum(spark, tmp_path, name="addt"):
         schema=[("k", "string"), ("n", "bigint")],
         key_cols=["k"],
         n_buckets=2,
-        mode="mor",
         resolve="sum",
     )
 
@@ -1829,7 +1875,7 @@ def test_incremental_compact_keeps_clean_delta_stats(spark, tmp_path):
     """Incremental compact rewrites dirty buckets only; the surviving delta
     layers of CLEAN buckets must keep their per-file min/max stats, or
     pruning silently dies for them until their own rewrite."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     # bucket-targeted merges: find keys landing in different buckets
     t.merge(_changes(spark, [(f"k{i}", "v", i, i, "U") for i in range(8)]), epoch=0)
     t.merge(_changes(spark, [("k0", "w", 9, 9, "U")]), epoch=1)
@@ -1898,7 +1944,7 @@ def test_create_rejects_unsupported_types(spark, tmp_path):
         LakeTable.create(
             spark, str(tmp_path / "bad2"),
             schema=[("k", "string"), ("amt", "decimal")],
-            key_cols=["k"], mode="mor", resolve="sum",
+            key_cols=["k"], resolve="sum",
         )
 
 
@@ -1922,7 +1968,7 @@ def test_fast_forward_moved_parent_raises_value_error(spark, tmp_path):
 def test_check_constraint_quarantines_and_gates(spark, tmp_path):
     """Violating upserts divert to the quarantine sidecar; passing rows and
     tombstones merge normally. NULL evaluates as pass (SQL-standard CHECK)."""
-    t = _mk(spark, tmp_path, name="cons", mode="mor")
+    t = _mk(spark, tmp_path, name="cons")
     t.add_check_constraint("n_pos", "n > 0")
     r = t.merge(
         _changes(
@@ -1948,7 +1994,7 @@ def test_check_constraint_quarantines_and_gates(spark, tmp_path):
 def test_check_constraint_multiple_names_and_redrive(spark, tmp_path):
     """A row violating two constraints lists both; a corrected re-merge of
     the quarantined payload lands it (the dead-letter re-drive shape)."""
-    t = _mk(spark, tmp_path, name="cons2", mode="mor")
+    t = _mk(spark, tmp_path, name="cons2")
     t.add_check_constraint("n_pos", "n > 0")
     t.add_check_constraint("v_short", "length(v) <= 3")
     t.merge(_changes(spark, [("x", "toolong", -1, 1, "U")]), epoch=0)
@@ -1964,7 +2010,7 @@ def test_check_constraint_replay_idempotent(spark, tmp_path):
     """Re-merging a committed epoch is a no-op: state AND quarantine remain
     byte-identical (the quarantine write precedes the commit, but per-epoch
     overwrite makes a crash-retry rewrite the identical rows)."""
-    t = _mk(spark, tmp_path, name="cons3", mode="mor")
+    t = _mk(spark, tmp_path, name="cons3")
     t.add_check_constraint("n_pos", "n > 0")
     rows = [("a", "1", 1, 1, "U"), ("b", "2", -2, 2, "U")]
     t.merge(_changes(spark, rows), epoch=0)
@@ -1978,7 +2024,7 @@ def test_check_constraint_replay_idempotent(spark, tmp_path):
 def test_add_check_constraint_validates_existing_rows(spark, tmp_path):
     from data_exchange_hl7_spark.lake.table import CheckConstraintError
 
-    t = _mk(spark, tmp_path, name="cons4", mode="mor")
+    t = _mk(spark, tmp_path, name="cons4")
     t.merge(_changes(spark, [("a", "1", -1, 1, "U")]), epoch=0)
     with pytest.raises(CheckConstraintError):
         t.add_check_constraint("n_pos", "n > 0")
@@ -1994,21 +2040,21 @@ def test_check_constraint_rejected_on_additive_tables(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "add"),
         schema=[("k", "string"), ("n", "bigint")],
-        key_cols=["k"], mode="mor", resolve="sum",
+        key_cols=["k"], resolve="sum",
     )
     with pytest.raises(ValueError, match="additive"):
         t.add_check_constraint("n_pos", "n > 0")
 
 
 def test_check_constraint_bad_expression_fails_fast(spark, tmp_path):
-    t = _mk(spark, tmp_path, name="cons5", mode="mor")
+    t = _mk(spark, tmp_path, name="cons5")
     with pytest.raises(Exception):
         t.add_check_constraint("bad", "no_such_column > 0")
     assert t.check_constraints() == {}
 
 
 def test_quarantine_empty_when_no_violations(spark, tmp_path):
-    t = _mk(spark, tmp_path, name="cons6", mode="mor")
+    t = _mk(spark, tmp_path, name="cons6")
     t.add_check_constraint("n_pos", "n > 0")
     t.merge(_changes(spark, [("a", "1", 1, 1, "U")]), epoch=0)
     assert t.quarantine().count() == 0
@@ -2020,7 +2066,7 @@ def test_changes_with_preimages_classification(spark, tmp_path):
     """Delta readChangeFeed parity: insert / update pre+post / delete with
     pre-image values; a tombstone on a never-live key is dropped; metadata-
     only commits in the window are skipped without a job."""
-    t = _mk(spark, tmp_path, name="cdfpre", mode="mor")
+    t = _mk(spark, tmp_path, name="cdfpre")
     t.merge(_changes(spark, [("a", "a1", 1, 1, "U"), ("b", "b1", 2, 2, "U")]), epoch=0)
     # window start: after the first merge (sid 1)
     t.set_properties({"note": "metadata-only commit inside the window"})
@@ -2074,10 +2120,11 @@ def _merge_into_clauses():
     )
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_merge_into_clause_algebra(spark, tmp_path, mode):
-    """All five clause kinds + first-match-wins + fall-through, both modes."""
-    t = _mk(spark, tmp_path, mode=mode)
+@FOLD
+def test_merge_into_clause_algebra(spark, tmp_path, fold):
+    """All five clause kinds + first-match-wins + fall-through, over delta
+    layers and over a folded base."""
+    t = _mk(spark, tmp_path)
     t.merge(
         _changes(
             spark,
@@ -2091,6 +2138,8 @@ def test_merge_into_clause_algebra(spark, tmp_path, mode):
         ),
         epoch=0,
     )
+    if fold:
+        t.compact()
     src = spark.createDataFrame(
         [
             ("a", "a2", 7, 99),
@@ -2102,26 +2151,27 @@ def test_merge_into_clause_algebra(spark, tmp_path, mode):
         "k string, v string, n int, lsn long",
     )
     t.merge_into(src, epoch=1, **_merge_into_clauses())
+    if fold:
+        t.compact()
     rows = {r["k"]: (r["v"], r["n"], r["lsn"]) for r in t.snapshot().collect()}
     assert rows == {
         "a": ("a2", 2, 99),     # set n = t.n + 1
-        "c": ("c1", 3, 30),     # untouched (MoR: no change row written at all)
+        "c": ("c1", 3, 30),     # untouched (no change row written at all)
         "e": ("stale", 5, 50),
         "f": ("f1", 6, 97),
     }
-    # clause deletes ride the normal merge -> CDF-visible as D rows (MoR)
-    if mode == "mor":
-        feed = {
-            (r["k"], r["_change_type"])
-            for r in t.changes_between(1).select("k", "_change_type").collect()
-        }
-        assert ("b", "D") in feed and ("d", "D") in feed
-        # the fall-through row wrote NO change row: target state untouched
-        assert not any(k == "c" for k, _ in feed)
+    # clause deletes ride the normal merge -> CDF-visible as D rows
+    feed = {
+        (r["k"], r["_change_type"])
+        for r in t.changes_between(1).select("k", "_change_type").collect()
+    }
+    assert ("b", "D") in feed and ("d", "D") in feed
+    # the fall-through row wrote NO change row: target state untouched
+    assert not any(k == "c" for k, _ in feed)
 
 
 def test_merge_into_epoch_idempotent_and_errors(spark, tmp_path):
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", "a1", 1, 10, "U")]), epoch=0)
     src = spark.createDataFrame([("a", "a2", 2, 99)], "k string, v string, n int, lsn long")
     r1 = t.merge_into(src, epoch=1, when_matched=[{"action": "delete"}])
@@ -2157,7 +2207,7 @@ def test_merge_into_epoch_idempotent_and_errors(spark, tmp_path):
 
 def test_merge_into_null_condition_is_no_match(spark, tmp_path):
     """SQL MERGE: a clause condition evaluating to NULL does not fire."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", None, 1, 10, "U")]), epoch=0)
     src = spark.createDataFrame([("a", None, 2, 99)], "k string, v string, n int, lsn long")
     t.merge_into(
@@ -2186,7 +2236,7 @@ def test_merge_into_insert_defaults_and_missing_cols(spark, tmp_path):
 def test_merge_into_rejected_on_additive(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "add"), [("k", "string"), ("n", "bigint")],
-        ["k"], n_buckets=2, mode="mor", resolve="sum",
+        ["k"], n_buckets=2, resolve="sum",
     )
     src = spark.createDataFrame([("a", 1)], "k string, n long")
     with pytest.raises(ValueError, match="additive"):
@@ -2196,13 +2246,15 @@ def test_merge_into_rejected_on_additive(spark, tmp_path):
 # ----------------------- column initial-defaults ---------------------------
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_add_column_initial_default(spark, tmp_path, mode):
+@FOLD
+def test_add_column_initial_default(spark, tmp_path, fold):
     """Files written before the column existed read back the default, not
     NULL; post-addition writes carry their explicit values; compaction
     materializes the default physically without changing the answer."""
-    t = _mk(spark, tmp_path, mode=mode)
+    t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
+    if fold:
+        t.compact()
     t.add_column("tier", "string", default="bronze")
     new = spark.createDataFrame(
         [("b", "2x", 2, 5, "gold", "U"), ("c", "3", 3, 6, None, "U")],
@@ -2247,22 +2299,23 @@ def test_add_column_default_must_be_scalar(spark, tmp_path):
 
 
 def test_count_rows_metadata_only_paths(spark, tmp_path):
-    """CoW with no deltas answers COUNT(*) from manifest record counts
-    (zero data files opened); predicates and un-compacted MoR fall back to
-    the exact read path; a fully-compacted MoR table is metadata-exact
+    """A folded table (no deltas) answers COUNT(*) from manifest record
+    counts (zero data files opened); predicates and delta layers fall back
+    to the exact read path; a fully-compacted table is metadata-exact
     again (physical rows == logical rows once tombstones fold)."""
     t = _mk(spark, tmp_path)
     t.merge(
         _changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U"), ("c", "3", 3, 3, "U")]),
         epoch=0,
     )
+    t.compact()
     n, meta = t.count_rows()
     assert (n, meta) == (3, True)
     # predicate: falls back, still exact
     n, meta = t.count_rows(where=[("k", "=", "a")])
     assert (n, meta) == (1, False)
 
-    m = _mk(spark, tmp_path, name="m", mode="mor")
+    m = _mk(spark, tmp_path, name="m")
     m.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     m.merge(_changes(spark, [("a", "9", 9, 5, "U"), ("b", None, None, 6, "D")]), epoch=1)
     # delta layers present: physical rows != logical rows -> exact path
@@ -2271,7 +2324,7 @@ def test_count_rows_metadata_only_paths(spark, tmp_path):
     m.compact()
     n, meta = m.count_rows()
     assert (n, meta) == (1, True)
-    # time travel composes (pre-delta snapshot of the CoW table)
+    # time travel composes (the merge's snapshot, before the fold)
     n, meta = t.count_rows(as_of=1)
     assert n == 3
 
@@ -2301,7 +2354,7 @@ def test_commit_summary_in_snapshots_table(spark, tmp_path):
     """Every commit records an Iceberg-style summary (file-set diff vs the
     parent + added record counts from the manifest stats), surfaced through
     meta_snapshots — metadata math only, never a data read."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")]), epoch=0)
     t.merge(_changes(spark, [("c", "3", 3, 3, "U")]), epoch=1)
     rows = {r["snapshot_id"]: r for r in t.meta_snapshots().collect()}
@@ -2323,7 +2376,7 @@ def test_merge_into_respects_check_constraints(spark, tmp_path):
     to the quarantine sidecar instead of merging — the compiled change
     frame rides the same gate as a plain merge, so MERGE INTO cannot
     poison current state."""
-    t = _mk(spark, tmp_path, mode="mor")
+    t = _mk(spark, tmp_path)
     t.merge(_changes(spark, [("a", "ok", 1, 1, "U"), ("b", "ok", 2, 2, "U")]), epoch=0)
     t.add_check_constraint("v_not_bad", "v <> 'bad'")
     src = spark.createDataFrame(

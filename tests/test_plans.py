@@ -247,7 +247,7 @@ def test_table_reads_plan_without_jobs(spark, tmp_path):
 
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("k", "string"), ("v", "string"), ("lsn", "bigint")],
-        ["k"], n_buckets=4, mode="mor", order_col="lsn",
+        ["k"], n_buckets=4, order_col="lsn",
     )
     cols = "k string, v string, lsn long, __op string"
     t.merge(spark.createDataFrame([(f"k{i}", "a", i, "U") for i in range(40)], cols), epoch=0)
@@ -286,7 +286,7 @@ def test_empty_table_reads_are_local_relations(spark, tmp_path):
         ("b", "binary"), ("lsn", "bigint"),
     ]
     t = LakeTable.create(
-        spark, str(tmp_path / "t"), schema, ["k"], n_buckets=4, mode="mor",
+        spark, str(tmp_path / "t"), schema, ["k"], n_buckets=4,
         order_col="lsn",
     )
     sid = t.current_snapshot()["snapshot_id"]
@@ -444,7 +444,7 @@ def test_aggregate_prestate_scan_prunes_content(spark, tmp_path):
     from data_exchange_hl7_spark.engine import KEY_COLS, Engine, repo_stats_delta
     from data_exchange_hl7_spark.streaming.runner import MicroBatchRunner
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     t = eng.snapshot_table("repo_files")
     MicroBatchRunner(eng, epoch_size=1000).run(change_events(spark, 2000), t)
     changes = (
@@ -884,7 +884,7 @@ def test_constraint_gate_is_narrow_projection(spark):
     loc = tempfile.mkdtemp(prefix="plan_cons_")
     t = LakeTable.create(
         spark, loc, [("k", "string"), ("n", "int"), ("lsn", "bigint")],
-        ["k"], n_buckets=4, mode="mor", order_col="lsn",
+        ["k"], n_buckets=4, order_col="lsn",
     )
     ch = spark.createDataFrame(
         [("a", 1, 1, "U")], "k string, n int, lsn long, __op string"

@@ -397,7 +397,6 @@ def test_rollback_model_equivalence(spark, ops):
             [("k", "int"), ("v", "int"), ("lsn", "bigint")],
             ["k"],
             n_buckets=2,
-            mode="mor",
             order_col="lsn",
         )
         model: dict[int, tuple[int, int]] = {}
@@ -517,11 +516,11 @@ def test_cdf_tail_replica_converges(spark, tmp_path_factory, case):
     cols = [("k", "bigint"), ("v", "string"), ("lsn", "bigint")]
     up = LakeTable.create(
         spark, str(base / "up"), schema=cols, key_cols=["k"],
-        n_buckets=4, mode="mor", order_col="lsn",
+        n_buckets=4, order_col="lsn",
     )
     rep = LakeTable.create(
         spark, str(base / "rep"), schema=cols, key_cols=["k"],
-        n_buckets=2, mode="mor", order_col="lsn",
+        n_buckets=2, order_col="lsn",
     )
     for e in range(n_epochs):
         chunk = rows[e::n_epochs]
@@ -574,7 +573,7 @@ def test_constraint_gate_partitions_exactly(spark, tmp_path_factory, rows):
     tmp = tmp_path_factory.mktemp("gate_prop")
     t = LakeTable.create(
         spark, str(tmp / "t"), [("k", "string"), ("n", "int"), ("lsn", "bigint")],
-        ["k"], n_buckets=4, mode="mor", order_col="lsn",
+        ["k"], n_buckets=4, order_col="lsn",
     )
     # one row per key: keep the last occurrence (merge contract)
     dedup = {}

@@ -16,7 +16,7 @@ def _final_state(spark, tmp_path, fmt, ev):
     assert [f.name for f in back.schema] == [n for n, _ in WAL_FIELDS]
     assert dict(back.dtypes)["supporting_metadata"] == "map<string,string>"
     assert dict(back.dtypes)["ts"] == "timestamp"
-    eng = Engine(spark, str(tmp_path / f"wh_{fmt}"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / f"wh_{fmt}"), n_buckets=8)
     t = eng.snapshot_table("repo_files")
     eng.apply_epoch(back, t, epoch=0, collect_metrics=False)
     return {
@@ -74,7 +74,7 @@ def test_jsonl_wal_stream_apply_exactly_once(spark, tmp_path):
     src = str(tmp_path / "jsonl_wal")
     write_wal(ev.filter("lsn < 1000"), src, "jsonl")
 
-    eng = Engine(spark, str(tmp_path / "wh_js"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh_js"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     ckpt = str(tmp_path / "ckpt_js")
 
@@ -105,7 +105,7 @@ def test_jsonl_wal_stream_apply_exactly_once(spark, tmp_path):
             os.rename(os.path.join(more, f), os.path.join(src, "b_" + f))
     drain()
 
-    eng2 = Engine(spark, str(tmp_path / "wh_batch"), n_buckets=8, mode="mor")
+    eng2 = Engine(spark, str(tmp_path / "wh_batch"), n_buckets=8)
     t2 = eng2.snapshot_table("repo_files")
     eng2.apply_epoch(ev, t2, epoch=0, collect_metrics=False)
     got = {(r["repo"], r["path"]): r["content_sha256"] for r in table.snapshot().collect()}

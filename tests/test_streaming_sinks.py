@@ -21,7 +21,7 @@ def test_stream_apply_matches_oracle(spark, tmp_path):
     ev = change_events(spark, 3000).persist()
     ev.filter(F.col("lsn") < 1500).write.mode("overwrite").parquet(src)
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
     table = eng.snapshot_table("repo_files")
     ckpt = str(tmp_path / "ckpt")
 
@@ -82,7 +82,7 @@ def test_runner_compact_and_expire_cadence(spark, tmp_path):
     from data_exchange_hl7_spark.engine import Engine
     from data_exchange_hl7_spark.streaming.runner import MicroBatchRunner
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     table = eng.snapshot_table("repo_files")
     events = change_events(spark, 4000)
     stats = MicroBatchRunner(
@@ -93,7 +93,7 @@ def test_runner_compact_and_expire_cadence(spark, tmp_path):
     # post-run: deltas folded at last compaction boundary, manifest intact
     assert set(table.committed_epochs()) == {"0", "1", "2", "3"}
     # state equals an un-maintained replay of the same WAL
-    eng2 = Engine(spark, str(tmp_path / "wh2"), n_buckets=4, mode="mor")
+    eng2 = Engine(spark, str(tmp_path / "wh2"), n_buckets=4)
     t2 = eng2.snapshot_table("repo_files")
     MicroBatchRunner(eng2, epoch_size=1000).run(events, t2)
     a = sorted(tuple(r) for r in table.snapshot().collect())
@@ -131,7 +131,7 @@ def test_epoch_split_sizing(spark, tmp_path):
     assert _epoch_split_bytes(wal, 1, 4 * 1024 * 1024) is None
 
     # run() applies the tuned value only inside the run and restores after
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     table = eng.snapshot_table("repo_files")
     MicroBatchRunner(eng, epoch_size=5000).run(wal, table)
     assert int(spark.conf.get("spark.sql.files.maxPartitionBytes")) == configured
@@ -265,7 +265,7 @@ def test_stream_apply_maintains_derived_table(spark, tmp_path):
     ev = change_events(spark, 2000)
     ev.write.mode("overwrite").parquet(src)
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
 
@@ -302,7 +302,7 @@ def test_stream_apply_maintains_aggregate_view(spark, tmp_path):
     ev = change_events(spark, 2000)
     ev.filter(F.col("lsn") < 1000).write.mode("overwrite").parquet(src)
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
     table = eng.snapshot_table("repo_files")
     view = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
 
@@ -382,7 +382,7 @@ def test_stream_apply_into_branch_then_publish(spark, tmp_path):
     exactly-once holds across checkpoint resumes; Engine.publish then lands
     the audited window on the parent, matching the all-events oracle."""
     ev = change_events(spark, 3000).persist()
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
     table = eng.snapshot_table("repo_files")
     eng.apply_epoch(ev.filter(F.col("lsn") < 1500), table, epoch=0)
 
@@ -423,7 +423,7 @@ def test_stream_apply_maintenance_cadence(spark, tmp_path):
     )
 
     ev = change_events(spark, 6000).persist()
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
 
@@ -466,7 +466,7 @@ def test_stream_apply_maintains_scd2_history(spark, tmp_path):
     pre-epoch-state recovery works per micro-batch, not just per manual
     apply_epoch."""
     ev = change_events(spark, 6000).persist()
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     hist = eng.scd2_table()
 
@@ -526,7 +526,7 @@ def test_stream_apply_atomic_batches(spark, tmp_path):
     src = str(tmp_path / "wal_stream")
     change_events(spark, 2000).write.mode("overwrite").parquet(src)
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
 
@@ -555,7 +555,7 @@ def test_stream_apply_refuses_unsupported_compact_opts(spark, tmp_path):
 
     src = str(tmp_path / "wal")
     change_events(spark, 200).write.mode("overwrite").parquet(src)
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     table = eng.snapshot_table("repo_files")
     before = table.current_snapshot()["snapshot_id"]
     with pytest.raises(ValueError, match="sort_cols"):

@@ -182,7 +182,7 @@ def _scd2_engine(spark, tmp_path, n=3000):
     from data_exchange_hl7_spark.datagen import change_events
     from data_exchange_hl7_spark.engine import Engine
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     t = eng.snapshot_table("repo_files")
     hist = eng.scd2_table()
     ev = change_events(spark, n).persist()
@@ -270,8 +270,38 @@ def test_scd2_table_purge_removes_whole_history(spark, tmp_path):
 def test_scd2_table_rebuild_matches_original(spark, tmp_path):
     """Stage-scoped replay of the history kind: rebuild_derived recovers the
     per-epoch change frames + pre-states from the main CDF and lands a
-    byte-identical history table."""
+    byte-identical history table. That holds after a purge and a redact
+    too: they sweep EVERY version of the matched keys, not the one row per
+    key the change feed holds, so the rebuild replays those sweeps from the
+    main table's ledger."""
+    from data_exchange_hl7_spark.datagen import change_events
+
     eng, t, hist = _scd2_engine(spark, tmp_path)
+    # the redacted repo holds both open and closed versions
+    redacted = (
+        hist.snapshot().groupBy("repo").agg(F.countDistinct("is_current").alias("n"))
+        .filter("n = 2").orderBy("repo").first()["repo"]
+    )
+    purged = t.snapshot().filter(F.col("repo") != redacted).orderBy("repo").first()["repo"]
+    eng.purge_where(t, f"repo = '{purged}'", epoch=10)
+    eng.redact_where(
+        t, f"repo = '{redacted}'",
+        {"content": "'[REDACTED]'", "commit": "'[REDACTED]'"}, epoch=11,
+    )
+    h = hist.snapshot()
+    assert h.filter(F.col("repo") == purged).count() == 0
+    swept = h.filter(F.col("repo") == redacted)
+    assert swept.filter(~F.col("is_current")).count() > 0  # closed versions too
+    assert swept.filter(
+        (F.col("commit") != "[REDACTED]") | F.col("content_sha256").isNotNull()
+    ).count() == 0
+    # a later commit under a LOWER epoch id: the sweeps never saw its
+    # versions, so the rebuild must replay in commit order, not by epoch id
+    later = change_events(spark, 4000).filter(F.col("lsn") >= 3000)
+    eng.apply_epoch(later, t, epoch=2, collect_metrics=False)
+    assert hist.snapshot().filter(
+        (F.col("repo") == redacted) & F.col("content_sha256").isNotNull()
+    ).count() > 0
     rebuilt = eng.rebuild_derived(t, "scd2_history", target_name="scd2_rebuilt")
     a = hist.snapshot().orderBy("repo", "path", "valid_from_lsn").collect()
     b = rebuilt.snapshot().orderBy("repo", "path", "valid_from_lsn").collect()

@@ -16,7 +16,7 @@ SCHEMA = [("k", "string"), ("v", "string"), ("lsn", "bigint")]
 def _mk(spark, tmp_path, name):
     return LakeTable.create(
         spark, str(tmp_path / name), SCHEMA, ["k"], n_buckets=4,
-        mode="mor", order_col="lsn",
+        order_col="lsn",
     )
 
 
@@ -156,7 +156,7 @@ def _engine_pair(spark, tmp_path):
         file_stats_derive,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     stats_t = eng.derived_table("file_stats", FILE_STATS_SCHEMA, file_stats_derive)
     events = change_events(spark, 3000)
@@ -248,7 +248,7 @@ def test_engine_atomic_epoch_with_constraints_and_aggregate(spark, tmp_path):
         repo_stats_delta,
     )
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
     view = eng.aggregate_table("repo_stats", REPO_STATS_SCHEMA, repo_stats_delta)
@@ -342,7 +342,7 @@ def test_publish_adopts_branch_quarantine(spark, tmp_path):
     from data_exchange_hl7_spark.engine import Engine
     import pyspark.sql.functions as SF
 
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
     ev = change_events(spark, 2000)

@@ -114,7 +114,7 @@ def test_runner_txn_boundaries_applies_committed_subset(spark, tmp_path):
     visible = visible.persist()
     committed_only = committed_only.persist()
     try:
-        eng = Engine(spark, str(tmp_path / "gated"), n_buckets=8, mode="mor")
+        eng = Engine(spark, str(tmp_path / "gated"), n_buckets=8)
         t = eng.snapshot_table("repo_files")
         runner = MicroBatchRunner(
             eng, epoch_size=1000, txn_boundaries=True, max_txn_span=TXN_SIZE
@@ -124,7 +124,7 @@ def test_runner_txn_boundaries_applies_committed_subset(spark, tmp_path):
         assert runner.held_txns and runner.held_txns > 0
 
         # control: a plain (ungated) apply of exactly the committed subset
-        eng2 = Engine(spark, str(tmp_path / "plain"), n_buckets=8, mode="mor")
+        eng2 = Engine(spark, str(tmp_path / "plain"), n_buckets=8)
         t2 = eng2.snapshot_table("repo_files")
         MicroBatchRunner(eng2, epoch_size=1000).run(committed_only, t2)
         assert _state(t) == _state(t2)
@@ -145,13 +145,13 @@ def test_runner_txn_boundaries_kill_and_resume(spark, tmp_path):
     events = change_events(spark, 2000).persist()
     try:
         visible, committed_only = _with_txn_metadata(events)
-        eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+        eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
         t = eng.snapshot_table("repo_files")
         mk = lambda: MicroBatchRunner(eng, epoch_size=500, txn_boundaries=True)
         mk().run(visible, t, fail_after_epoch=1)  # crash mid-stream
         mk().run(visible, t)  # resume must converge, skipping committed
 
-        eng2 = Engine(spark, str(tmp_path / "plain"), n_buckets=8, mode="mor")
+        eng2 = Engine(spark, str(tmp_path / "plain"), n_buckets=8)
         t2 = eng2.snapshot_table("repo_files")
         MicroBatchRunner(eng2, epoch_size=500).run(committed_only, t2)
         assert _state(t) == _state(t2)
@@ -181,7 +181,7 @@ def test_stream_apply_txn_boundaries_cross_poll(spark, tmp_path):
         block_lo = (cut // TXN_SIZE) * TXN_SIZE
         visible.filter(F.col("lsn") < cut).write.mode("overwrite").parquet(src)
 
-        eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8, mode="mor")
+        eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
         t = eng.snapshot_table("repo_files")
         stream_apply(
             spark, eng, src, t, ckpt, txn_boundaries=True
@@ -189,7 +189,7 @@ def test_stream_apply_txn_boundaries_cross_poll(spark, tmp_path):
 
         # poll 1: only transactions wholly inside [0, block_lo) can be
         # complete; the straddling block is withheld in the sidecar
-        eng1 = Engine(spark, str(tmp_path / "plain1"), n_buckets=8, mode="mor")
+        eng1 = Engine(spark, str(tmp_path / "plain1"), n_buckets=8)
         t1 = eng1.snapshot_table("repo_files")
         MicroBatchRunner(eng1, epoch_size=500).run(
             committed_only.filter(F.col("lsn") < block_lo), t1
@@ -206,7 +206,7 @@ def test_stream_apply_txn_boundaries_cross_poll(spark, tmp_path):
             spark, eng, src, t, ckpt, txn_boundaries=True
         ).awaitTermination(120)
 
-        eng2 = Engine(spark, str(tmp_path / "plain2"), n_buckets=8, mode="mor")
+        eng2 = Engine(spark, str(tmp_path / "plain2"), n_buckets=8)
         t2 = eng2.snapshot_table("repo_files")
         MicroBatchRunner(eng2, epoch_size=500).run(committed_only, t2)
         assert _state(t) == _state(t2)
@@ -254,38 +254,10 @@ def test_disagreeing_declared_count_withheld(spark):
     assert {r["lsn"] for r in gated2.collect()} == {1}
 
 
-def test_runner_txn_boundaries_rejects_cow(spark, tmp_path):
-    """CoW merges resolve cross-epoch conflicts by arrival order, but gated
-    epochs are apply_lsn-sliced — a later epoch can carry older-lsn events.
-    The runner must refuse the combination loudly."""
-    events = change_events(spark, 100)
-    visible, _ = _with_txn_metadata(events)
-    eng = Engine(spark, str(tmp_path / "cow"), n_buckets=4, mode="cow")
-    t = eng.snapshot_table("repo_files")
-    runner = MicroBatchRunner(eng, epoch_size=50, txn_boundaries=True)
-    with pytest.raises(ValueError, match="mor"):
-        runner.run(visible, t)
-
-
-def test_stream_apply_txn_boundaries_rejects_cow(spark, tmp_path):
-    """stream_apply carries the runner's guard: a gated stream into a CoW
-    table is refused before the stream starts."""
-    from data_exchange_hl7_spark.streaming.stream_ingest import stream_apply
-
-    eng = Engine(spark, str(tmp_path / "cow"), n_buckets=4, mode="cow")
-    t = eng.snapshot_table("repo_files")
-    with pytest.raises(ValueError, match="mor"):
-        stream_apply(
-            spark, eng, str(tmp_path / "wal"), t, str(tmp_path / "ckpt"),
-            txn_boundaries=True,
-        )
-    assert not (tmp_path / "ckpt").exists()
-
-
 def test_runner_txn_boundaries_refuses_dropped_compact_opts(spark, tmp_path):
     """Gated maintenance is consolidate_deltas, which takes max_delta_depth
     only; any other compact_opts key is refused, not silently dropped."""
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     with pytest.raises(ValueError, match="sort_cols"):
         MicroBatchRunner(
             eng, epoch_size=50, compact_every=1, txn_boundaries=True,
@@ -353,7 +325,7 @@ def test_gated_maintenance_preserves_tombstones(spark, tmp_path):
             F.sha2(F.coalesce(F.col("content"), F.lit("")), 256),
         )
     )
-    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4, mode="mor")
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
     t = eng.snapshot_table("repo_files")
     MicroBatchRunner(
         eng, epoch_size=50, txn_boundaries=True, compact_every=1
