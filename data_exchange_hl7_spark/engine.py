@@ -100,23 +100,37 @@ def minhash_index_derive(changes: DataFrame) -> DataFrame:
     over the epoch's change frame: the 3-word shingle set and each band's
     minimum are array expressions evaluated per row — no explode, no
     shuffle, no second WAL pass. Documents with fewer than 3 tokens sign as
-    NULL (nothing to shingle); D tombstones pass through."""
+    NULL (nothing to shingle); D tombstones pass through.
+
+    The token array and the shingle array each get their own projection:
+    a lambda evaluates the expressions it references once per element, so
+    inlined, the content was re-split for every shingle and re-shingled for
+    every band (9 s vs 1.1 s for 4000 events, 4-vCPU VM)."""
+    keep = ["repo", "path", "last_lsn", "__op"]
     body = F.coalesce(F.col("content"), F.lit(""))
-    toks = F.filter(F.split(body, " "), lambda t: F.length(t) > 0)
-    sh = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.array_join(F.slice(toks, i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    toks = changes.select(
+        *keep, F.filter(F.split(body, " "), lambda t: F.length(t) > 0).alias("__toks")
+    )
+    n = F.size("__toks")
+    sh = toks.select(
+        *keep,
+        F.when(
+            n >= 3,
+            F.transform(
+                F.sequence(F.lit(1), n - 2),
+                lambda i: F.array_join(F.slice(F.col("__toks"), i, 3), " "),
+            ),
+        )
+        .otherwise(F.array().cast("array<string>"))
+        .alias("__sh"),
+    )
     bands = [
         F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(s, F.lit(f":{b}"))))
+            F.transform("__sh", lambda s: F.md5(F.concat(s, F.lit(f":{b}"))))
         ).alias(f"mh{b}")
         for b in range(4)
     ]
-    return changes.select("repo", "path", *bands, "last_lsn", "__op")
+    return sh.select("repo", "path", *bands, "last_lsn", "__op")
 
 
 # Built-in aggregate-view spec (Engine.aggregate_table): per-repo rollup

@@ -139,45 +139,7 @@ def _n(entries: Column, classification: str) -> Column:
     return F.size(F.filter(entries, lambda x: x["classification"] == classification))
 
 
-def report_entries_expr(
-    max_content_bytes: int = 1_000_000,
-    value_set_entries: Column | None = None,
-) -> Column:
-    """The flat report_entries column (all three sections concatenated) as a
-    standalone expression — lets a caller that cached only status/counts
-    (e.g. the epoch apply) reconstruct entries for the few rows that need
-    them (the reject sink) without re-validating the whole slice."""
-    vs = (
-        value_set_entries
-        if value_set_entries is not None
-        else F.array().cast(ENTRY_TYPE)
-    )
-    return F.concat(
-        _entries_of(_structure_checks()),
-        _entries_of(_content_checks(max_content_bytes)),
-        vs.cast(ENTRY_TYPE),
-    )
-
-
-def validate(
-    df: DataFrame,
-    max_content_bytes: int = 1_000_000,
-    value_set_entries: Column | None = None,
-) -> DataFrame:
-    """Attach NistReport-shaped verdict columns.
-
-    Adds ``report`` — the full NistReport struct
-    {entries: {structure[], content[], value_set[]},
-     error_count: {structure, value_set, content},
-     warning_count: {structure, value_set, content}, status}
-    (NistReport.kt:13-55) — plus flattened conveniences: ``report_entries``
-    (all three arrays concatenated), ``error_count`` / ``warning_count``
-    structs, and ``status`` with the reference's precedence rule (structure
-    errors win, else content OR value-set errors, ProfileManager.kt:158-163).
-
-    ``value_set_entries``: an ENTRY_TYPE column of vocab verdicts (from
-    operators.vocab.check_vocab) folded into the value-set section.
-    """
+def _verdict_exprs(max_content_bytes: int, value_set_entries: Column | None) -> dict:
     sc = _structure_checks()
     cc = _content_checks(max_content_bytes)
     vs = (
@@ -185,7 +147,6 @@ def validate(
         if value_set_entries is not None
         else F.array().cast(ENTRY_TYPE)
     ).cast(ENTRY_TYPE)
-
     err = F.struct(
         _count_of(sc, "Error").alias("structure"),
         _n(vs, "Error").alias("value_set"),
@@ -208,23 +169,85 @@ def validate(
         .otherwise(F.lit(VALID))
     )
     es, ec = _entries_of(sc), _entries_of(cc)
-    return (
-        df.withColumn("error_count", err)
-        .withColumn("warning_count", warn)
-        .withColumn("status", status)
-        .withColumn(
-            "report",
-            F.struct(
-                F.struct(
-                    es.alias("structure"), ec.alias("content"), vs.alias("value_set")
-                ).alias("entries"),
-                F.col("error_count").alias("error_count"),
-                F.col("warning_count").alias("warning_count"),
-                F.col("status").alias("status"),
-            ),
-        )
-        .withColumn("report_entries", F.concat(es, ec, vs))
+    report = F.struct(
+        F.struct(es.alias("structure"), ec.alias("content"), vs.alias("value_set")).alias(
+            "entries"
+        ),
+        F.col("error_count").alias("error_count"),
+        F.col("warning_count").alias("warning_count"),
+        F.col("status").alias("status"),
     )
+    return {
+        "error_count": err,
+        "warning_count": warn,
+        "status": status,
+        "report": report,
+        "report_entries": F.concat(es, ec, vs),
+    }
+
+
+# (gateway, max_content_bytes) -> (gateway, verdict exprs without value-set
+# entries); see _default_verdict_exprs
+_DEFAULT_EXPRS: dict = {}
+
+
+def _default_verdict_exprs(max_content_bytes: int) -> dict:
+    """The verdict columns without caller-supplied value-set entries, built
+    once per JVM gateway. A Column is an unresolved expression tree that
+    any frame can use, and building these costs a py4j round trip per
+    function call: about 0.5 s per epoch apply on a 4-vCPU VM, which
+    validates and rebuilds the reject entries every epoch."""
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    hit = _DEFAULT_EXPRS.get((id(gw), max_content_bytes))
+    if hit is None or hit[0] is not gw:
+        hit = (gw, _verdict_exprs(max_content_bytes, None))
+        _DEFAULT_EXPRS[(id(gw), max_content_bytes)] = hit
+    return hit[1]
+
+
+def _exprs(max_content_bytes: int, value_set_entries: Column | None) -> dict:
+    if value_set_entries is None:
+        return _default_verdict_exprs(max_content_bytes)
+    return _verdict_exprs(max_content_bytes, value_set_entries)
+
+
+def report_entries_expr(
+    max_content_bytes: int = 1_000_000,
+    value_set_entries: Column | None = None,
+) -> Column:
+    """The flat report_entries column (all three sections concatenated) as a
+    standalone expression — lets a caller that cached only status/counts
+    (e.g. the epoch apply) reconstruct entries for the few rows that need
+    them (the reject sink) without re-validating the whole slice."""
+    return _exprs(max_content_bytes, value_set_entries)["report_entries"]
+
+
+def validate(
+    df: DataFrame,
+    max_content_bytes: int = 1_000_000,
+    value_set_entries: Column | None = None,
+) -> DataFrame:
+    """Attach NistReport-shaped verdict columns.
+
+    Adds ``report`` — the full NistReport struct
+    {entries: {structure[], content[], value_set[]},
+     error_count: {structure, value_set, content},
+     warning_count: {structure, value_set, content}, status}
+    (NistReport.kt:13-55) — plus flattened conveniences: ``report_entries``
+    (all three arrays concatenated), ``error_count`` / ``warning_count``
+    structs, and ``status`` with the reference's precedence rule (structure
+    errors win, else content OR value-set errors, ProfileManager.kt:158-163).
+
+    ``value_set_entries``: an ENTRY_TYPE column of vocab verdicts (from
+    operators.vocab.check_vocab) folded into the value-set section.
+    """
+    x = _exprs(max_content_bytes, value_set_entries)
+    # one column at a time: status and report read the columns added before
+    for c in ("error_count", "warning_count", "status", "report", "report_entries"):
+        df = df.withColumn(c, x[c])
+    return df
 
 
 def branch(df: DataFrame) -> tuple[DataFrame, DataFrame]:

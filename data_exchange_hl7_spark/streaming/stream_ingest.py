@@ -77,6 +77,9 @@ def stream_apply(
     # refused here, not at the compact_every-th batch: that batch would
     # already have applied, and every restart would re-deliver it and fail
     require_consolidate_opts(compact_opts, "stream_apply")
+    # a table an older version created in copy-on-write mode refuses every
+    # merge: refuse it before the checkpoint exists, not in batch 0
+    table._require_order_col(table.current_snapshot(), "stream into")
     reader = spark.readStream
     if schema:
         reader = reader.schema(schema)

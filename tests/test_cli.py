@@ -1,28 +1,48 @@
 """The deployable CLI surface (python -m data_exchange_hl7_spark / the
 spark-submit two-liner): every verb is a thin shim over the public API, so
 this drives the full lifecycle — ingest, inspect, metrics, purge, compact,
-expire, replay — through real subprocesses and checks the printed JSON."""
+expire, replay — and checks the printed JSON and exit codes.
 
+The verbs run in-process through ``main(argv)``, which picks up the test
+session (``build_session`` is ``getOrCreate``), so each verb does not pay
+its own JVM start. ``test_cli_stream_starts_on_empty_wal_dir`` runs
+``python -m data_exchange_hl7_spark`` as a real subprocess, which keeps the
+module entry point covered."""
+
+import contextlib
+import io
 import json
 import os
 import subprocess
 import sys
 import tempfile
 
+import pytest
+
+from data_exchange_hl7_spark.__main__ import main
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+@pytest.fixture(autouse=True)
+def _cli_cpus(monkeypatch):
+    # build_session derives shuffle partitions from SPARK_GRAFT_CPUS and sets
+    # them on the shared session: pin the value the test session uses
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+
+
+def _cli_raw(*args):
+    """Run one verb in-process: (exit code, stdout, stderr)."""
+    out, err = io.StringIO(), io.StringIO()
+    with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
+        rc = main(list(args))
+    return rc, out.getvalue(), err.getvalue()
+
+
 def _cli(*args):
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    r = subprocess.run(
-        [sys.executable, "-m", "data_exchange_hl7_spark", *args],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-        env=env,
-    )
-    assert r.returncode == 0, r.stderr[-3000:]
-    return [json.loads(l) for l in r.stdout.splitlines() if l.startswith("{")]
+    rc, out, err = _cli_raw(*args)
+    assert rc == 0, err[-3000:]
+    return [json.loads(l) for l in out.splitlines() if l.startswith("{")]
 
 
 def test_cli_lifecycle(spark):
@@ -80,17 +100,6 @@ def test_cli_lifecycle(spark):
     assert _cli("vacuum", "--warehouse", wh)[-1]["orphans"] == []
 
 
-def _cli_raw(*args):
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    return subprocess.run(
-        [sys.executable, "-m", "data_exchange_hl7_spark", *args],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-        env=env,
-    )
-
-
 def test_cli_purge_refuses_typod_table_and_unregistered_deriveds(spark):
     """A typo'd --table must fail loudly (exit 2), not create an empty
     table and report a 0-row purge; a warehouse with registered deriveds
@@ -109,23 +118,23 @@ def test_cli_purge_refuses_typod_table_and_unregistered_deriveds(spark):
     eng.derived_table("minhash_index", MINHASH_INDEX_SCHEMA, minhash_index_derive)
     MicroBatchRunner(eng, epoch_size=1500).run(change_events(spark, 1500), t)
 
-    r = _cli_raw(
+    rc, _, err = _cli_raw(
         "purge", "--warehouse", wh, "--table", "repo_fiels",
         "--predicate", "repo = 'x'", "--epoch", "5",
     )
-    assert r.returncode == 2 and "no table at" in r.stderr
+    assert rc == 2 and "no table at" in err
     assert not os.path.exists(os.path.join(wh, "repo_fiels"))
 
     # vacuum on a typo'd table must likewise refuse, not report clean
-    r = _cli_raw("vacuum", "--warehouse", wh, "--table", "repo_fiels")
-    assert r.returncode == 2 and "no table at" in r.stderr
+    rc, _, err = _cli_raw("vacuum", "--warehouse", wh, "--table", "repo_fiels")
+    assert rc == 2 and "no table at" in err
     assert not os.path.exists(os.path.join(wh, "repo_fiels"))
 
-    # the CLI process holds no derive fns -> the cascade cannot run: refuse
-    r = _cli_raw(
-        "purge", "--warehouse", wh, "--predicate", "repo = 'x'", "--epoch", "5",
-    )
-    assert r.returncode != 0 and "minhash_index" in (r.stderr + r.stdout)
+    # the CLI's Engine holds no derive fns -> the cascade cannot run: refuse
+    with pytest.raises(RuntimeError, match="minhash_index"):
+        _cli_raw(
+            "purge", "--warehouse", wh, "--predicate", "repo = 'x'", "--epoch", "5",
+        )
 
     # the deliberate override sweeps the main table alone
     victim = t.snapshot().select("repo").first()["repo"]
@@ -142,10 +151,19 @@ def test_cli_stream_starts_on_empty_wal_dir(spark):
     wal = tempfile.mkdtemp(prefix="cli_wal_empty_")
     wh = tempfile.mkdtemp(prefix="cli_wh_empty_")
     ckpt = tempfile.mkdtemp(prefix="cli_ckpt_")
-    out = _cli(
-        "stream", "--warehouse", wh, "--wal", wal, "--checkpoint", ckpt,
-        "--buckets", "4",
+    r = subprocess.run(
+        [
+            sys.executable, "-m", "data_exchange_hl7_spark",
+            "stream", "--warehouse", wh, "--wal", wal, "--checkpoint", ckpt,
+            "--buckets", "4",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
     )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = [json.loads(l) for l in r.stdout.splitlines() if l.startswith("{")]
     assert out[-1]["rows"] == 0
 
 

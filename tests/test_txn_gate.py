@@ -4,6 +4,9 @@ apply, each in the epoch of its commit position; incomplete transactions
 are withheld entirely. Runner integration must stay exactly-once under
 kill-and-resume and equal a plain apply of the committed subset."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -252,6 +255,45 @@ def test_disagreeing_declared_count_withheld(spark):
     )
     gated2, _ = gate_transactions(df2)
     assert {r["lsn"] for r in gated2.collect()} == {1}
+
+
+def _legacy_cow_table(spark, wh):
+    """An empty table whose manifest is the one an older version's
+    copy-on-write mode wrote: ``mode: "cow"`` and no order_col."""
+    eng = Engine(spark, wh, n_buckets=4)
+    t = eng.snapshot_table("repo_files")
+    snap = t.current_snapshot()
+    with open(os.path.join(t.meta_dir, f"v{snap['snapshot_id']:08d}.json"), "w") as f:
+        json.dump({**snap, "mode": "cow", "order_col": None}, f)
+    return eng, t, t.current_snapshot()
+
+
+def test_runner_txn_boundaries_rejects_cow(spark, tmp_path):
+    """Gated epochs are apply_lsn-sliced, so a later epoch can carry
+    older-lsn events; only an order_col resolves them. A legacy
+    copy-on-write table has none: the gated runner must refuse it loudly
+    and leave its manifest as it was."""
+    events = change_events(spark, 100)
+    visible, _ = _with_txn_metadata(events)
+    eng, t, snap = _legacy_cow_table(spark, str(tmp_path / "cow"))
+    runner = MicroBatchRunner(eng, epoch_size=50, txn_boundaries=True)
+    with pytest.raises(ValueError, match="copy-on-write"):
+        runner.run(visible, t)
+    assert t.current_snapshot() == snap
+
+
+def test_stream_apply_txn_boundaries_rejects_cow(spark, tmp_path):
+    """stream_apply carries the same refusal: a gated stream into a legacy
+    copy-on-write table is refused before the stream starts."""
+    from data_exchange_hl7_spark.streaming.stream_ingest import stream_apply
+
+    eng, t, _ = _legacy_cow_table(spark, str(tmp_path / "cow"))
+    with pytest.raises(ValueError, match="copy-on-write"):
+        stream_apply(
+            spark, eng, str(tmp_path / "wal"), t, str(tmp_path / "ckpt"),
+            txn_boundaries=True,
+        )
+    assert not (tmp_path / "ckpt").exists()
 
 
 def test_runner_txn_boundaries_refuses_dropped_compact_opts(spark, tmp_path):
