@@ -148,7 +148,7 @@ def _build_parser() -> argparse.ArgumentParser:
         help="remove orphan data files (crashed writers' pre-commit "
         "leftovers, discarded stages) — dry-run report by default; "
         "--delete sweeps files older than --older-than-hours under the "
-        "CAS + in-flight-writer guards",
+        "CAS + in-flight-writer guards; metadata only, no Spark job",
     )
     common(sp)
     sp.add_argument("--delete", action="store_true")
@@ -185,7 +185,7 @@ def main(argv: list[str] | None = None) -> int:
 
     import os
 
-    from data_exchange_hl7_spark.engine import Engine
+    from data_exchange_hl7_spark.engine import Engine, read_sidecar
     from data_exchange_hl7_spark.lake.table import LakeTable
     from data_exchange_hl7_spark.session import build_session
     from data_exchange_hl7_spark.sources import read_wal
@@ -306,7 +306,7 @@ def main(argv: list[str] | None = None) -> int:
             r = t.remove_orphans(older_than_s=args.older_than_hours * 3600)
             print(json.dumps({"table": args.table, **r}))
         else:
-            rows = t.orphan_files().collect()  # metadata-sized
+            rows = t.orphan_files().collect()  # a local relation: no job
             print(json.dumps({
                 "table": args.table,
                 "dry_run": True,
@@ -338,13 +338,10 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"recovered": out}, default=str))
 
     elif args.cmd == "metrics":
-        # read the metrics parquet directly (Engine.metrics' path) — no
-        # Engine construction, so a typo'd warehouse fails loudly instead
-        # of makedirs-ing a junk directory
-        base = os.path.join(args.warehouse, "_metrics", args.table)
-        df = spark.read.option("basePath", base).parquet(
-            os.path.join(base, "epoch=*")
-        )
+        # Engine.metrics' reader without constructing an Engine, so a
+        # typo'd warehouse fails loudly instead of makedirs-ing a junk
+        # directory
+        df = read_sidecar(spark, args.warehouse, "_metrics", args.table)
         for row in df.collect():  # O(epochs) rows
             print(json.dumps(row.asDict(), default=str))
 

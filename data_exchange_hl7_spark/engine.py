@@ -18,6 +18,7 @@ bucket-rewrite are the only wide stages, both keyed on (repo, path).
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1705,12 +1706,12 @@ class Engine:
         pending = self._pending(table, epoch)
         main_done = str(epoch) in table.committed_epochs()
         if main_done and not pending:
-            # the quarantine sweep below is an idempotent rewrite, so it
-            # runs even on a crash-resume where every merge no-ops
+            # the sidecar sweeps below are idempotent rewrites, so they run
+            # even on a crash-resume where every merge no-ops
             return {
                 "epoch": epoch,
                 "applied": False,
-                "quarantine_swept": self._sweep_quarantine(table, predicate, set_exprs),
+                **self._sweep_sidecars(table, predicate, set_exprs),
             }
         if main_done:
             # resume after a partial multi-table commit: the purged rows are
@@ -1759,10 +1760,10 @@ class Engine:
                         f"violate CHECK constraints {broken}; nothing was "
                         "written — choose set_exprs that satisfy them"
                     )
-            # the quarantine sidecar holds FULL payloads of diverted rows, so
-            # a compliance sweep must reach it too (the same hole class as
-            # unswept derived tables)
-            n_swept = self._sweep_quarantine(table, predicate, set_exprs)
+            # the quarantine and reject sidecars hold FULL payloads of
+            # diverted rows, so a compliance sweep must reach them too (the
+            # same hole class as unswept derived tables)
+            swept = self._sweep_sidecars(table, predicate, set_exprs)
             info = dict(epoch_info or {})
             info.setdefault("op", "purge" if set_exprs is None else "redact")
             info.setdefault("predicate", predicate)
@@ -1789,7 +1790,7 @@ class Engine:
             )
             if self._derived.get(table_name(table)):
                 stats["derived_applied"] = [table_name(t) for t, *_ in pending]
-            stats["quarantine_swept"] = n_swept
+            stats.update(swept)
             return stats
         finally:
             old_rows.unpersist()
@@ -1833,27 +1834,43 @@ class Engine:
                     dchanges = dchanges.withColumn(col, F.lit(None).cast(htypes[col]))
         return dchanges.withColumn("__op", F.lit("U"))
 
-    def _sweep_quarantine(
+    def _sweep_sidecars(
         self, table: LakeTable, predicate: str, set_exprs: dict[str, str] | None
+    ) -> dict:
+        """Sweep both payload sidecars of ``table``: the CHECK quarantine
+        (``<table>/_quarantine``) and the dead-lettered WAL envelopes
+        (``<warehouse>/_rejects/<table>``), which ``reprocess_rejects``
+        would otherwise re-drive after a purge."""
+        return {
+            "quarantine_swept": self._sweep_sidecar(
+                os.path.join(table.location, "_quarantine"), predicate, set_exprs
+            ),
+            "rejects_swept": self._sweep_sidecar(
+                os.path.join(self.warehouse, "_rejects", table_name(table)),
+                predicate,
+                set_exprs,
+            ),
+        }
+
+    def _sweep_sidecar(
+        self, root: str, predicate: str, set_exprs: dict[str, str] | None
     ) -> int:
         """Purge (remove) or redact (rewrite) rows matching ``predicate``
-        in every quarantine epoch dir. Rows where the predicate is NULL are
-        kept (a sweep must never remove rows it cannot prove match).
-        Rewrites go through a tmp dir + atomic rename per epoch; the whole
-        sweep is idempotent. Returns the number of rows swept."""
-        import shutil as _sh
-
+        in every ``epoch=N`` dir under ``root``. Rows where the predicate is
+        NULL are kept (a sweep must never remove rows it cannot prove
+        match). When ``content`` is redacted, ``content_sha256`` and
+        ``size_bytes`` are recomputed where the sidecar has them. Rewrites
+        go through a tmp dir + atomic rename per epoch; the whole sweep is
+        idempotent. Returns the number of rows swept."""
         from pyspark.errors import AnalysisException
 
-        qroot = os.path.join(table.location, "_quarantine")
-        if not os.path.isdir(qroot):
+        if not os.path.isdir(root):
             return 0
-        fields = {f["name"]: f["type"] for f in table.schema_fields()}
         swept = 0
-        for d in sorted(os.listdir(qroot)):
+        for d in sorted(os.listdir(root)):
             if not d.startswith("epoch="):
                 continue
-            qdir = os.path.join(qroot, d)
+            qdir = os.path.join(root, d)
             qdf = self.spark.read.parquet(qdir)
             try:
                 n = qdf.filter(predicate).count()
@@ -1866,7 +1883,7 @@ class Engine:
             if set_exprs is None and qdf.count() == n:
                 # every row matched a purge: drop the epoch dir outright
                 # (an empty rewrite would leave a fileless dir)
-                _sh.rmtree(qdir)
+                shutil.rmtree(qdir)
                 swept += n
                 continue
             keep = qdf.filter(f"NOT coalesce(({predicate}), false)")
@@ -1884,13 +1901,13 @@ class Engine:
                     if "size_bytes" in qdf.columns and "size_bytes" not in set_exprs:
                         upd = upd.withColumn(
                             "size_bytes",
-                            F.length(body).cast(fields.get("size_bytes", "int")),
+                            F.length(body).cast(qdf.schema["size_bytes"].dataType),
                         )
                 new = keep.unionByName(upd)
             tmp = f"{qdir}.tmp-sweep"
-            _sh.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(tmp, ignore_errors=True)
             new.repartition(8).write.parquet(tmp)
-            _sh.rmtree(qdir)
+            shutil.rmtree(qdir)
             os.rename(tmp, qdir)
             swept += n
         return swept
@@ -1922,10 +1939,9 @@ class Engine:
         had the epochs landed directly.
         """
         import json
-        import shutil
 
         bo = branch.current_snapshot().get("branch_of") or {}
-        retired_path = os.path.join(branch.meta_dir, "retired.json")
+        retired_path = branch._retired_path()
         if os.path.exists(retired_path):
             with open(retired_path) as f:
                 info = json.load(f)
@@ -1964,42 +1980,22 @@ class Engine:
             if sid > 0 and (published_head is None or sid <= published_head)
         ]
 
-        # adopt the branch's report sidecars: apply_epoch wrote metrics /
-        # per-partition lineage / dead-letter rejects under the BRANCH's
-        # table name, so without this the parent's metrics() report and
-        # reprocess_rejects would have holes for the published epochs.
-        # Copy, not move — the branch stays readable history. Staged via a
-        # tmp dir + atomic rename: a crash mid-copy must not leave a partial
-        # dir the exists-skip resume would then keep forever.
-        for kind in ("_metrics", "_lineage", "_rejects"):
-            for e, _sid, _parent in introduced:
-                src = os.path.join(
-                    self.warehouse, kind, table_name(branch), f"epoch={e}"
-                )
-                dst = os.path.join(
-                    self.warehouse, kind, table_name(table), f"epoch={e}"
-                )
-                if os.path.isdir(src) and not os.path.exists(dst):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    tmp = f"{dst}.tmp-publish"
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    shutil.copytree(src, tmp)
-                    os.rename(tmp, dst)
-
-        # the CHECK-constraint quarantine sidecar lives under the TABLE
-        # location (part of the table contract, unlike the engine-level
-        # report dirs above) — adopt it per published epoch the same way,
-        # or the parent's quarantine()/reprocess_quarantine would miss the
-        # rows the audit branch diverted
+        # adopt the branch's sidecars per published epoch: apply_epoch wrote
+        # metrics / per-partition lineage / dead-letter rejects under the
+        # BRANCH's table name, and the CHECK quarantine lives under the
+        # branch's location, so without this the parent's metrics() report,
+        # quarantine() and reprocess_* would have holes for the published
+        # epochs. Copy, not move — the branch stays readable history.
         for e, _sid, _parent in introduced:
-            src = os.path.join(branch.location, "_quarantine", f"epoch={e}")
-            dst = os.path.join(table.location, "_quarantine", f"epoch={e}")
-            if os.path.isdir(src) and not os.path.exists(dst):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                tmp = f"{dst}.tmp-publish"
-                shutil.rmtree(tmp, ignore_errors=True)
-                shutil.copytree(src, tmp)
-                os.rename(tmp, dst)
+            for kind in ("_metrics", "_lineage", "_rejects"):
+                _adopt(
+                    os.path.join(self.warehouse, kind, table_name(branch), f"epoch={e}"),
+                    os.path.join(self.warehouse, kind, table_name(table), f"epoch={e}"),
+                )
+            _adopt(
+                os.path.join(branch.location, "_quarantine", f"epoch={e}"),
+                os.path.join(table.location, "_quarantine", f"epoch={e}"),
+            )
 
         key_cols = table.current_snapshot()["key_cols"]
         info = {"op": "publish", "branch": os.path.abspath(branch.location)}
@@ -2112,19 +2108,13 @@ class Engine:
 
     # ------------------------------------------------------------- reads
     def metrics(self, name: str = "repo_files") -> DataFrame:
-        return self.spark.read.option("basePath", os.path.join(self.warehouse, "_metrics", name)).parquet(
-            os.path.join(self.warehouse, "_metrics", name, "epoch=*")
-        )
+        return read_sidecar(self.spark, self.warehouse, "_metrics", name)
 
     def lineage(self, name: str = "repo_files") -> DataFrame:
-        return self.spark.read.option("basePath", os.path.join(self.warehouse, "_lineage", name)).parquet(
-            os.path.join(self.warehouse, "_lineage", name, "epoch=*")
-        )
+        return read_sidecar(self.spark, self.warehouse, "_lineage", name)
 
     def rejects(self, name: str = "repo_files") -> DataFrame:
-        return self.spark.read.option("basePath", os.path.join(self.warehouse, "_rejects", name)).parquet(
-            os.path.join(self.warehouse, "_rejects", name, "epoch=*")
-        )
+        return read_sidecar(self.spark, self.warehouse, "_rejects", name)
 
     def reprocess_rejects(
         self,
@@ -2224,3 +2214,22 @@ class Engine:
 
 def table_name(table: LakeTable) -> str:
     return os.path.basename(table.location.rstrip("/"))
+
+
+def read_sidecar(spark: SparkSession, warehouse: str, kind: str, name: str) -> DataFrame:
+    """Every ``epoch=N`` dir of one engine sidecar (``_metrics``,
+    ``_lineage`` or ``_rejects``) of table ``name``, ``epoch`` a column."""
+    base = os.path.join(warehouse, kind, name)
+    return spark.read.option("basePath", base).parquet(os.path.join(base, "epoch=*"))
+
+
+def _adopt(src: str, dst: str) -> None:
+    """Copy sidecar dir ``src`` to ``dst`` unless ``dst`` exists. Staged
+    via a tmp dir + atomic rename: a crash mid-copy must not leave a
+    partial dir the exists-skip resume would then keep forever."""
+    if os.path.isdir(src) and not os.path.exists(dst):
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        tmp = f"{dst}.tmp-publish"
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.copytree(src, tmp)
+        os.rename(tmp, dst)

@@ -31,6 +31,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import shutil
 import threading
 import time
@@ -108,6 +109,16 @@ def _commit_lock(meta_dir: str) -> threading.Lock:
         return _COMMIT_LOCKS.setdefault(key, threading.Lock())
 
 
+# The on-disk names, matched here and built by the name helpers at the top
+# of LakeTable: committed manifests ``_meta/v<sid:08d>.json``, staged ones
+# ``_meta/staged-<token>.json``, and data roots ``[sd]<sid:08d>-<hex8>``
+# under ``data/`` (``s`` base files, ``d`` delta files; ``sid`` is the
+# snapshot the write was staged for, so a root above ``current`` belongs to
+# an in-flight writer).
+_MANIFEST_RE = re.compile(r"^(?:v(\d{8})|staged-[0-9a-f]+)\.json$")
+_ROOT_RE = re.compile(r"^([sd])(\d{8})(?:-[0-9a-f]{8})?$")
+
+
 class LakeTable:
     """A bucketed, snapshot-versioned parquet table with keyed MERGE."""
 
@@ -116,6 +127,52 @@ class LakeTable:
         self.location = location
         self.meta_dir = os.path.join(location, "_meta")
         self.data_dir = os.path.join(location, "data")
+
+    # ------------------------------------------------------------ names
+    def _snapshot_path(self, sid: int) -> str:
+        return os.path.join(self.meta_dir, f"v{sid:08d}.json")
+
+    def _staged_path(self, token: str) -> str:
+        return os.path.join(self.meta_dir, f"staged-{token}.json")
+
+    def _current_sid(self) -> int:
+        with open(os.path.join(self.meta_dir, "current")) as f:
+            return int(f.read().strip())
+
+    def _retired_path(self) -> str:
+        return os.path.join(self.meta_dir, "retired.json")
+
+    def _retire(self, published_to: str, sid: int) -> None:
+        """Mark this branch published as snapshot ``sid`` of the table at
+        ``published_to``: its further commits raise."""
+        with open(self._retired_path(), "w") as f:
+            json.dump({"published_to": os.path.abspath(published_to), "snapshot_id": sid}, f)
+
+    @staticmethod
+    def _staging_rel(prefix: str, new_sid: int) -> str:
+        """Unique per-attempt data root (Iceberg writes UUID-named data
+        files for the same reason): two writers racing from the same parent
+        both derive new_sid = parent+1, and without a unique suffix their
+        DATA writes collide before the metadata CAS ever runs. The loser's
+        root becomes an orphan that the next sweep removes."""
+        return f"{prefix}{new_sid:08d}-{uuid.uuid4().hex[:8]}"
+
+    @staticmethod
+    def _parse_root(name: str) -> tuple[str, int] | None:
+        """``(kind, sid)`` of a data root name; None for any other name."""
+        m = _ROOT_RE.match(name)
+        return (m.group(1), int(m.group(2))) if m else None
+
+    def _manifest_files(self) -> dict[str, int | None]:
+        """Every manifest file in ``_meta``: path -> sid for a committed
+        manifest, None for a staged one."""
+        out = {}
+        for fname in os.listdir(self.meta_dir):
+            m = _MANIFEST_RE.match(fname)
+            if m:
+                sid = m.group(1)
+                out[os.path.join(self.meta_dir, fname)] = None if sid is None else int(sid)
+        return out
 
     # ------------------------------------------------------------ create
     @classmethod
@@ -205,9 +262,7 @@ class LakeTable:
 
     # ------------------------------------------------------------ metadata
     def current_snapshot(self) -> dict[str, Any]:
-        with open(os.path.join(self.meta_dir, "current")) as f:
-            v = int(f.read().strip())
-        with open(os.path.join(self.meta_dir, f"v{v:08d}.json")) as f:
+        with open(self._snapshot_path(self._current_sid())) as f:
             return json.load(f)
 
     def _load_snapshot(self, snapshot_id: int | None = None) -> dict[str, Any]:
@@ -216,7 +271,7 @@ class LakeTable:
         time travel past the retention window."""
         if snapshot_id is None:
             return self.current_snapshot()
-        path = os.path.join(self.meta_dir, f"v{snapshot_id:08d}.json")
+        path = self._snapshot_path(snapshot_id)
         if not os.path.exists(path):
             raise ValueError(
                 f"snapshot {snapshot_id} not found (never committed or expired)"
@@ -230,13 +285,9 @@ class LakeTable:
         s = snap
         while True:
             yield s
-            if s["parent"] is None:
+            if s["parent"] is None or not os.path.exists(self._snapshot_path(s["parent"])):
                 return
-            parent_path = os.path.join(self.meta_dir, f"v{s['parent']:08d}.json")
-            if not os.path.exists(parent_path):
-                return
-            with open(parent_path) as f:
-                s = json.load(f)
+            s = self._load_snapshot(s["parent"])
 
     def history(self) -> list[dict[str, Any]]:
         """Snapshot lineage, newest first — the Iceberg ``table.history()``
@@ -374,7 +425,7 @@ class LakeTable:
             # retired check INSIDE the lock: a merge that blocked behind a
             # publishing fast_forward must see the retire marker the publish
             # wrote while holding this lock, not a pre-block stale read
-            if os.path.exists(os.path.join(self.meta_dir, "retired.json")):
+            if os.path.exists(self._retired_path()):
                 raise ConcurrentCommitError(
                     "this branch was published via fast_forward and is "
                     "retired; fork a new branch from the target table to "
@@ -382,14 +433,13 @@ class LakeTable:
                 )
             cur_path = os.path.join(self.meta_dir, "current")
             if os.path.exists(cur_path):
-                with open(cur_path) as f:
-                    actual = int(f.read().strip())
+                actual = self._current_sid()
                 if expected_parent is None or actual != expected_parent:
                     raise ConcurrentCommitError(
                         f"current={actual}, expected parent={expected_parent}"
                     )
             sid = snap["snapshot_id"]
-            vpath = os.path.join(self.meta_dir, f"v{sid:08d}.json")
+            vpath = self._snapshot_path(sid)
             try:
                 fd = os.open(vpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
             except FileExistsError:
@@ -446,7 +496,7 @@ class LakeTable:
             self._write_snapshot(child, expected_parent=snap["snapshot_id"])
             return {"snapshot_id": sid}
         token = uuid.uuid4().hex[:12]
-        with open(os.path.join(self.meta_dir, f"staged-{token}.json"), "w") as f:
+        with open(self._staged_path(token), "w") as f:
             json.dump(child, f)
         return {"snapshot_id": sid, "staged": token}
 
@@ -463,11 +513,8 @@ class LakeTable:
     def _commit_summary(self, snap: dict) -> dict:
         parent_id = snap.get("parent")
         pfiles: set[str] = set()
-        if parent_id is not None:
-            ppath = os.path.join(self.meta_dir, f"v{parent_id:08d}.json")
-            if os.path.exists(ppath):
-                with open(ppath) as f:
-                    pfiles = self._referenced_files(json.load(f))
+        if parent_id is not None and os.path.exists(self._snapshot_path(parent_id)):
+            pfiles = self._referenced_files(self._load_snapshot(parent_id))
         nfiles = self._referenced_files(snap)
         added = nfiles - pfiles
         stats_all: dict = {}
@@ -772,16 +819,7 @@ class LakeTable:
                         and ffo["branch"] == os.path.abspath(branch.location)
                         and ffo["branch_head"] == bsnap["snapshot_id"]
                     ):
-                        with open(
-                            os.path.join(branch.meta_dir, "retired.json"), "w"
-                        ) as f:
-                            json.dump(
-                                {
-                                    "published_to": os.path.abspath(self.location),
-                                    "snapshot_id": s["snapshot_id"],
-                                },
-                                f,
-                            )
+                        branch._retire(self.location, s["snapshot_id"])
                         self.drop_tag(f"__branch_{bo['name']}")
                         return {
                             "fast_forwarded": False,
@@ -813,23 +851,21 @@ class LakeTable:
             return os.path.commonpath([src, br_data]) == br_data
 
         # branch-local refs are published under this table's NEXT snapshot
-        # id's directory namespace (the expire_snapshots staging contract:
-        # in-flight files must live under dirs numbered > the expirer's
-        # entry sid); inherited refs resolve from this table's data dir
-        import hashlib
-        import re as _re
-
-        # per-ATTEMPT nonce: two concurrent publishes of the same branch
-        # must never share staged paths — with deterministic names, racer B
-        # skips files racer A already linked, and the CAS loser's cleanup
-        # would then delete files the winner's committed manifest references
-        attempt = uuid.uuid4().hex
+        # id's directory namespace (the sweep's staging contract: in-flight
+        # files must live under roots numbered > the sweeper's entry sid);
+        # inherited refs resolve from this table's data dir. Each branch
+        # root gets a fresh root name per ATTEMPT: two concurrent publishes
+        # of the same branch must never share staged paths — with shared
+        # names, racer B skips files racer A already linked, and the CAS
+        # loser's cleanup would then delete files the winner's committed
+        # manifest references
+        staged_roots: dict[str, str] = {}
 
         def _staged_dir(head: str) -> str:
-            m = _re.match(r"^([sd])\d{8}", head)
-            kind = m.group(1) if m else "d"
-            suffix = hashlib.sha1(f"{attempt}:{head}".encode()).hexdigest()[:8]
-            return f"{kind}{new_sid:08d}-{suffix}"
+            if head not in staged_roots:
+                kind = (self._parse_root(head) or ("d",))[0]
+                staged_roots[head] = self._staging_rel(kind, new_sid)
+            return staged_roots[head]
 
         def _pub_rel(rel: str) -> str:
             if not _is_branch_local(rel):
@@ -905,9 +941,7 @@ class LakeTable:
                         "publish its new head"
                     )
                 self._write_snapshot(snap, expected_parent=cur["snapshot_id"])
-                with open(os.path.join(branch.meta_dir, "retired.json"), "w") as f:
-                    json.dump({"published_to": os.path.abspath(self.location),
-                               "snapshot_id": new_sid}, f)
+                branch._retire(self.location, new_sid)
         except BaseException:
             for p in linked:  # loser/crash cleanup; leftovers are expiry-swept
                 try:
@@ -925,7 +959,7 @@ class LakeTable:
 
     # ------------------------------------------------ write-audit-publish
     def _load_staged(self, token: str) -> dict[str, Any]:
-        path = os.path.join(self.meta_dir, f"staged-{token}.json")
+        path = self._staged_path(token)
         if not os.path.exists(path):
             raise ValueError(f"no staged snapshot {token!r}")
         with open(path) as f:
@@ -939,46 +973,30 @@ class LakeTable:
         new current instead)."""
         snap = self._load_staged(token)
         self._write_snapshot(snap, expected_parent=snap["parent"])
-        os.remove(os.path.join(self.meta_dir, f"staged-{token}.json"))
+        os.remove(self._staged_path(token))
         return {"published": True, "snapshot_id": snap["snapshot_id"]}
 
     def discard_staged(self, token: str) -> None:
         """Drop a staged snapshot that failed its audit AND reclaim its data
-        directories immediately. The staged write landed under per-attempt
-        ``s<sid>-<uuid>`` roots private to this token, and expire_snapshots
-        only sweeps roots with sid <= the current snapshot id — so on a
-        table with no further commits an orphaned stage would otherwise
-        never be reclaimed. Roots still referenced by any committed snapshot
-        on disk or by another staged token are left alone."""
+        roots immediately. The staged write landed under per-attempt
+        ``s<sid>-<uuid>`` roots private to this token, and the sweep only
+        reaches roots with sid <= the current snapshot id — so on a table
+        with no further commits an orphaned stage would otherwise never be
+        reclaimed. Roots still referenced by any other manifest on disk
+        (``_manifests``) are left alone."""
         snap = self._load_staged(token)
 
         def roots(s: dict) -> set[str]:
             return {f.split("/", 1)[0] for f in self._referenced_files(s)}
 
-        mine = roots(snap)
-        live: set[str] = set()
+        path = self._staged_path(token)
         # under the commit lock: an in-process committer mid-_write_snapshot
-        # must not be observed half-written. (A malformed file from a crashed
-        # CROSS-process writer is skipped — its staging roots are
-        # uuid-unique, so they can never collide with this token's.)
+        # must not be observed half-written
         with _commit_lock(self.meta_dir):
-            for fname in os.listdir(self.meta_dir):
-                is_committed = fname.startswith("v") and fname.endswith(".json")
-                is_other_stage = (
-                    fname.startswith("staged-")
-                    and fname.endswith(".json")
-                    and fname != f"staged-{token}.json"
-                )
-                if not (is_committed or is_other_stage):
-                    continue
-                try:
-                    with open(os.path.join(self.meta_dir, fname)) as f:
-                        live |= roots(json.load(f))
-                except (json.JSONDecodeError, OSError):
-                    continue
-            for root in mine - live:
+            live = set().union(*map(roots, self._manifests(skip=(path,))))
+            for root in roots(snap) - live:
                 shutil.rmtree(os.path.join(self.data_dir, root), ignore_errors=True)
-            os.remove(os.path.join(self.meta_dir, f"staged-{token}.json"))
+            os.remove(path)
 
     def schema_fields(self, snap: dict | None = None) -> list[dict]:
         snap = snap or self.current_snapshot()
@@ -1565,15 +1583,6 @@ class LakeTable:
         return _union(parts)
 
     # ------------------------------------------------------------ merge
-    @staticmethod
-    def _staging_rel(prefix: str, new_sid: int) -> str:
-        """Unique per-attempt staging directory (Iceberg writes UUID-named
-        data files for the same reason): two writers racing from the same
-        parent both derive new_sid = parent+1, and without a unique suffix
-        their DATA writes collide before the metadata CAS ever runs. The
-        loser's directory becomes an orphan that expire_snapshots removes."""
-        return f"{prefix}{new_sid:08d}-{uuid.uuid4().hex[:8]}"
-
     def _bucket_expr(self, snap: dict):
         keys = [F.col(c) for c in snap["key_cols"]]
         return F.pmod(F.xxhash64(*keys), F.lit(snap["n_buckets"])).cast("int")
@@ -2633,103 +2642,89 @@ class LakeTable:
         self._evolve(mutate)
 
     # ------------------------------------------------- maintenance
-    def orphan_files(self) -> DataFrame:
-        """Disk-vs-manifest reconciliation, DRY-RUN (the report half of
-        Iceberg's ``remove_orphan_files``): every parquet file under the
-        data dir referenced by NO retained snapshot manifest — a crashed
-        writer's pre-commit leftovers, a discarded staged attempt — with
-        its size. Report only; ``remove_orphans`` is the deletion half
-        (age, in-flight-writer and CAS guards). Metadata-bounded: one
-        manifest walk + one directory listing, no data pages read."""
-        import re as _re
+    # The live set is what the manifests on disk reference (``_manifests``),
+    # the Delta VACUUM design: one reachability scan, no data read.
+    # ``expire_snapshots`` and ``remove_orphans`` delete through ``_sweep``;
+    # ``discard_staged`` deletes only roots no other manifest names.
 
-        referenced: set[str] = set()
-        for f in os.listdir(self.meta_dir):
-            # staged (write-audit-publish) manifests are live references too:
-            # a pending stage's files are not orphans — they are awaiting
-            # publish_staged / discard_staged
-            if not _re.match(r"^(v\d{8}|staged-[0-9a-f]+)\.json$", f):
+    def _manifests(self, skip=()) -> list[dict]:
+        """Every readable committed and staged manifest on disk whose path
+        is not in ``skip``. Staged manifests count: a pending stage's files
+        await ``publish_staged`` / ``discard_staged``. A file that does not
+        parse is a crashed writer's partial write; the roots it would name
+        are private to that attempt."""
+        out = []
+        for path in self._manifest_files():
+            if path in skip:
                 continue
             try:
-                with open(os.path.join(self.meta_dir, f)) as fh:
-                    ks = json.load(fh)
+                with open(path) as f:
+                    out.append(json.load(f))
             except (json.JSONDecodeError, OSError):
-                continue  # crashed mid-stage write; roots are uuid-private
-            referenced |= self._referenced_files(ks)
-        rows = []
-        for root, _dirs, files in os.walk(self.data_dir):
-            for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
-                abs_p = os.path.join(root, fname)
-                rel = os.path.relpath(abs_p, self.data_dir)
-                if rel not in referenced:
-                    try:
-                        size = os.path.getsize(abs_p)
-                    except OSError:
-                        size = None
-                    rows.append((rel, size))
-        return self.spark.createDataFrame(
-            sorted(rows) or [], "file string, size_bytes long"
+                continue
+        return out
+
+    def _data_roots(self, max_sid: int | None = None) -> list[str]:
+        """Names of the data roots, capped at snapshot id ``max_sid``."""
+        return sorted(
+            name
+            for name in os.listdir(self.data_dir)
+            if (root := self._parse_root(name))
+            and (max_sid is None or root[1] <= max_sid)
         )
 
-    def remove_orphans(self, older_than_s: float = 259_200.0) -> dict:
-        """Deletion half of Iceberg's ``remove_orphan_files`` — sweep the
-        files ``orphan_files`` reports, under three guards:
+    def _unreferenced(self, max_sid: int | None = None, skip=()) -> list[str]:
+        """Parquet files under the data roots (capped at ``max_sid`` when
+        given), relative to the data dir and sorted, that no manifest of
+        ``_manifests(skip)`` references."""
+        referenced = set().union(*map(self._referenced_files, self._manifests(skip)))
+        out = []
+        for root in self._data_roots(max_sid):
+            for d, _dirs, files in os.walk(os.path.join(self.data_dir, root)):
+                for fname in files:
+                    rel = os.path.relpath(os.path.join(d, fname), self.data_dir)
+                    if fname.endswith(".parquet") and rel not in referenced:
+                        out.append(rel)
+        return sorted(out)
 
-          - only files under snapshot roots s/dNNN with NNN <= the snapshot
-            id read at entry (an in-flight writer stages its data under the
-            NEXT snapshot id, so its pre-commit files are never candidates —
-            the same guard ``expire_snapshots`` carries);
-          - only files whose mtime is older than ``older_than_s`` (default
-            3 days, Iceberg's default for exactly this race): a slow writer
-            that wrote data but has not yet committed its staged manifest
-            looks orphaned to the scan — age is the only signal that
-            distinguishes abandonment from in-flight;
-          - the ``current`` pointer is re-read immediately before deleting;
-            if another committer moved it during the scan the call raises
-            ``ConcurrentCommitError`` and deletes nothing.
+    def _sweep(self, entry_sid: int, older_than_s: float, expired=()) -> dict:
+        """Delete what no manifest but the ``expired`` ones references:
 
-        The age guard is the protection that matters. The CAS re-read is
-        best effort: it runs once, before the delete loop, so a commit that
-        lands mid-sweep goes unseen (Iceberg's model too). Safety on a live
-        table therefore rests on the age guard plus the staging convention
-        that new writers use snapshot ids above the entry id.
+          1. plan: the unreferenced parquet files under roots numbered
+             <= ``entry_sid`` (an in-flight writer stages under the NEXT
+             snapshot id, so its files are never candidates), minus those
+             modified within the last ``older_than_s`` seconds;
+          2. re-read ``current`` once; if a committer moved it off
+             ``entry_sid`` raise ``ConcurrentCommitError``, nothing deleted;
+          3. delete the ``expired`` manifest files;
+          4. delete the planned files, then every directory of the swept
+             roots left without parquet (``_remove_if_no_data``).
 
-        Metadata-bounded (one manifest walk + one directory listing — no
-        data pages read). Returns ``{"removed_files": n, "removed_bytes":
-        m, "skipped_recent": k}``. Use ``orphan_files()`` first as the
-        dry-run audit; pass ``older_than_s=0`` only on a quiesced table
-        (tests / decommission)."""
-        import re as _re
-
-        entry_sid = self.current_snapshot()["snapshot_id"]
+        Manifests go before their files: a crash between steps 3 and 4
+        leaves orphans that the next sweep reclaims, never a manifest that
+        still loads but whose files are gone."""
         cutoff = time.time() - older_than_s
-        orphans = {r["file"] for r in self.orphan_files().collect()}
-
-        removed_files = 0
-        removed_bytes = 0
-        skipped_recent = 0
         doomed: list[str] = []
-        for rel in sorted(orphans):
-            m = _re.match(r"^[sd](\d{8})(?:-[0-9a-f]{8})?/", rel)
-            if not m or int(m.group(1)) > entry_sid:
-                continue  # potential in-flight writer root: never touch
+        skipped_recent = 0
+        for rel in self._unreferenced(entry_sid, skip=expired):
             abs_p = os.path.join(self.data_dir, rel)
             try:
-                if os.path.getmtime(abs_p) >= cutoff:
+                if older_than_s > 0 and os.path.getmtime(abs_p) >= cutoff:
                     skipped_recent += 1
                     continue
             except OSError:
                 continue  # raced with another cleaner: nothing to do
             doomed.append(abs_p)
-
-        # plan first, CAS-check the pointer, then delete (expire contract)
-        with open(os.path.join(self.meta_dir, "current")) as f:
-            if int(f.read().strip()) != entry_sid:
-                raise ConcurrentCommitError(
-                    f"current moved past {entry_sid} during orphan scan"
-                )
+        if self._current_sid() != entry_sid:
+            raise ConcurrentCommitError(f"current moved past {entry_sid} during the sweep")
+        removed_snapshots = 0
+        for path in expired:
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                continue  # a concurrent sweep got there first
+            removed_snapshots += 1
+        removed_files = removed_bytes = 0
         for abs_p in doomed:
             try:
                 size = os.path.getsize(abs_p)
@@ -2738,15 +2733,66 @@ class LakeTable:
                 continue
             removed_files += 1
             removed_bytes += size
-            try:
-                self._remove_if_no_data(os.path.dirname(abs_p))
-            except OSError:
-                pass  # directory raced away; harmless
+        for root in self._data_roots(entry_sid):
+            for d, _dirs, _files in os.walk(os.path.join(self.data_dir, root), topdown=False):
+                try:
+                    self._remove_if_no_data(d)
+                except OSError:
+                    pass  # directory raced away; harmless
         return {
+            "removed_snapshots": removed_snapshots,
             "removed_files": removed_files,
             "removed_bytes": removed_bytes,
             "skipped_recent": skipped_recent,
         }
+
+    def orphan_files(self) -> DataFrame:
+        """Disk-vs-manifest reconciliation, DRY-RUN (the report half of
+        Iceberg's ``remove_orphan_files``): every parquet file under the
+        data roots referenced by no manifest on disk (``_unreferenced``) —
+        a crashed writer's pre-commit leftovers, a discarded staged attempt
+        — with its size. Roots above ``current`` are listed too, though
+        ``_sweep`` never deletes an in-flight writer's files. Report only;
+        ``remove_orphans`` is the deletion half. Metadata-bounded and
+        job-free: one manifest walk + one directory listing, no data pages
+        read, and the frame is a local relation."""
+        import pyarrow as pa
+
+        files = self._unreferenced()
+        sizes = []
+        for rel in files:
+            try:
+                sizes.append(os.path.getsize(os.path.join(self.data_dir, rel)))
+            except OSError:
+                sizes.append(None)
+        table = pa.table(
+            {"file": pa.array(files, pa.string()), "size_bytes": pa.array(sizes, pa.int64())}
+        )
+        return self.spark.createDataFrame(table, "file string, size_bytes long")
+
+    def remove_orphans(self, older_than_s: float = 259_200.0) -> dict:
+        """Deletion half of Iceberg's ``remove_orphan_files``: delete the
+        files ``orphan_files`` reports with ``_sweep(current,
+        older_than_s)``, under its in-flight-root and CAS guards plus the
+        age guard: only files whose mtime is older than ``older_than_s``
+        (default 3 days, Iceberg's default for exactly this race). A slow
+        writer that wrote data but has not yet committed its staged
+        manifest looks orphaned to the scan — age is the only signal that
+        distinguishes abandonment from in-flight.
+
+        The age guard is the protection that matters. The CAS re-read is
+        best effort: it runs once, before the deletes, so a commit that
+        lands mid-sweep goes unseen (Iceberg's model too). Safety on a live
+        table therefore rests on the age guard plus the staging convention
+        that new writers use snapshot ids above the entry id.
+
+        Metadata-bounded and job-free (one manifest walk + one directory
+        listing). Returns ``{"removed_files": n, "removed_bytes": m,
+        "skipped_recent": k}``. Use ``orphan_files()`` first as the
+        dry-run audit; pass ``older_than_s=0`` only on a quiesced table
+        (tests / decommission)."""
+        r = self._sweep(self._current_sid(), older_than_s)
+        return {k: r[k] for k in ("removed_files", "removed_bytes", "skipped_recent")}
 
     def expire_snapshots(
         self, keep_last: int = 1, older_than_s: float | None = None
@@ -2755,11 +2801,13 @@ class LakeTable:
         the Iceberg ``expire_snapshots`` + ``remove_orphan_files`` analogue.
 
         Keeps the current snapshot plus ``keep_last - 1`` ancestors (time
-        travel window); every data file not referenced by a kept snapshot is
-        deleted, as is the metadata of expired snapshots. At 10^10 events a
-        MoR table accretes one delta layer per epoch and one rewrite per
-        compaction; without expiry, storage is unbounded even though the
-        live state is not. Run after ``compact()``.
+        travel window) and every tagged snapshot; the other committed
+        manifests up to the current snapshot id expire, and
+        ``_sweep(current, 0, expired)`` deletes them and then every data
+        file no remaining manifest (kept, newer or staged) references. At
+        10^10 events a MoR table accretes one delta layer per epoch and one
+        rewrite per compaction; without expiry, storage is unbounded even
+        though the live state is not. Run after ``compact()``.
 
         ``older_than_s`` adds Iceberg's age-based retention
         (``expire_snapshots(older_than => ...)``): ancestors committed
@@ -2771,97 +2819,37 @@ class LakeTable:
 
         Readers of the CURRENT snapshot are unaffected (its files are all
         kept); concurrent time-travel readers of expired snapshots would
-        break — same contract as Iceberg's maintenance action.
-
-        Concurrent-writer safety (two guards, round-1 ADVICE):
-          - only files under snapshot directories s/dNNN with NNN <= the
-            snapshot id read at entry are candidates — an in-flight writer
-            stages its data under the NEXT snapshot id before committing, so
-            its pre-commit files (and a just-committed newer snapshot's
-            files/metadata) are never touched;
-          - immediately before deleting anything, the ``current`` pointer is
-            re-read; if another committer moved it during the scan the call
-            raises ConcurrentCommitError and deletes nothing.
+        break — same contract as Iceberg's maintenance action. The sweep's
+        guards hold: roots above the entry snapshot id are never touched,
+        and a pointer move during the scan raises ConcurrentCommitError
+        before anything is deleted. Expired manifests are deleted before
+        their files, so a crash in between leaves only orphans.
         """
-        import re as _re
-
         snap = self.current_snapshot()
         entry_sid = snap["snapshot_id"]
         cutoff = time.time() - older_than_s if older_than_s is not None else None
-        kept_ids = []
+        kept = set()
         for s in self._ancestors(snap):
             # ancestors are newest -> oldest, so the first one outside BOTH
             # the count window and the age window ends the walk (the current
             # snapshot is always kept: the count window holds at least one)
-            if len(kept_ids) >= max(keep_last, 1) and not (
+            if len(kept) >= max(keep_last, 1) and not (
                 cutoff is not None and s.get("committed_at", 0) >= cutoff
             ):
                 break
-            kept_ids.append(s["snapshot_id"])
-
+            kept.add(s["snapshot_id"])
         # tags pin their snapshots: metadata and files survive until dropped
-        for sid in self.tags().values():
-            if sid not in kept_ids and os.path.exists(
-                os.path.join(self.meta_dir, f"v{sid:08d}.json")
-            ):
-                kept_ids.append(sid)
-
-        referenced: set[str] = set()
-        manifests: list[dict] = []
-        for sid in kept_ids:
-            with open(os.path.join(self.meta_dir, f"v{sid:08d}.json")) as f:
-                manifests.append(json.load(f))
-        # pending write-audit-publish stages reference files under roots that
-        # can fall at or below entry_sid once ANOTHER commit advances current
-        # past the staged sid — without this, expiry deletes a stage's data
-        # out from under a concurrent snapshot(staged=token) audit, breaking
-        # the protection discard_staged promises other tokens
-        for fname in os.listdir(self.meta_dir):
-            if fname.startswith("staged-") and fname.endswith(".json"):
-                try:
-                    with open(os.path.join(self.meta_dir, fname)) as f:
-                        manifests.append(json.load(f))
-                except (json.JSONDecodeError, OSError):
-                    continue  # crashed mid-stage write; roots are uuid-private
-        for ks in manifests:
-            referenced |= self._referenced_files(ks)
-
-        # plan deletions first, then CAS-check the pointer, then delete
-        expired_roots = []
-        for d in sorted(os.listdir(self.data_dir)):
-            m = _re.match(r"^[sd](\d{8})(?:-[0-9a-f]{8})?$", d)
-            if m and int(m.group(1)) <= entry_sid:
-                expired_roots.append(os.path.join(self.data_dir, d))
-
-        with open(os.path.join(self.meta_dir, "current")) as f:
-            if int(f.read().strip()) != entry_sid:
-                raise ConcurrentCommitError(
-                    f"current moved past {entry_sid} during expire scan"
-                )
-
-        removed_files = 0
-        for top in expired_roots:
-            for root, _dirs, files in os.walk(top, topdown=False):
-                for fname in files:
-                    abs_p = os.path.join(root, fname)
-                    rel = os.path.relpath(abs_p, self.data_dir)
-                    if fname.endswith(".parquet") and rel not in referenced:
-                        os.remove(abs_p)
-                        removed_files += 1
-                self._remove_if_no_data(root)
-
-        removed_snaps = 0
-        kept = set(kept_ids)
-        for fname in os.listdir(self.meta_dir):
-            if fname.startswith("v") and fname.endswith(".json"):
-                sid = int(fname[1:-5])
-                if sid not in kept and sid <= entry_sid:
-                    os.remove(os.path.join(self.meta_dir, fname))
-                    removed_snaps += 1
+        kept |= {sid for sid in self.tags().values() if os.path.exists(self._snapshot_path(sid))}
+        expired = [
+            path
+            for path, sid in self._manifest_files().items()
+            if sid is not None and sid <= entry_sid and sid not in kept
+        ]
+        r = self._sweep(entry_sid, 0, expired)
         return {
             "kept_snapshots": sorted(kept),
-            "removed_snapshots": removed_snaps,
-            "removed_files": removed_files,
+            "removed_snapshots": r["removed_snapshots"],
+            "removed_files": r["removed_files"],
         }
 
     @staticmethod

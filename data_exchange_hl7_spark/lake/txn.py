@@ -13,16 +13,19 @@ file-level pieces the table already has:
   2. DECIDE:  one O_EXCL manifest write (``txn-<id>.json``) is the commit
               point — the transaction is durable the instant it exists.
   3. PUBLISH: each staged snapshot is CAS-published in manifest order.
-  4. DONE:    a ``txn-<id>.done`` marker retires the manifest.
+  4. DONE:    a ``txn-<id>.done`` marker retires the manifest, and the
+              done manifests decided before the newest published one are
+              deleted with their markers, so ``txn_dir`` stays bounded.
 
 Crash/conflict matrix (tested in tests/test_txn.py):
 
-  - crash before DECIDE: no manifest -> nothing publishes; staged snapshots
-    are reclaimed by ``discard_staged`` / staged-snapshot expiry. The
-    transaction never happened.
+  - crash before DECIDE: no manifest -> nothing publishes. The staged
+    snapshots stay on disk, and their files stay live for every sweep
+    (``expire_snapshots`` / ``remove_orphans`` protect pending stages), so
+    ``discard_staged`` is the only reclaim. The transaction never happened.
   - crash between DECIDE and DONE: ``recover()`` rolls FORWARD — publishes
     the remaining staged entries (an entry whose staged file is gone but
-    whose snapshot landed is detected by the committed ``v<sid>.json`` and
+    whose snapshot landed is detected by its committed manifest and
     skipped: publish is idempotent at the recovery level).
   - concurrent foreign commit on one table between STAGE and PUBLISH: the
     CAS raises ``ConcurrentCommitError``. If no table has published yet the
@@ -195,8 +198,11 @@ class MultiTableTransaction:
             txn_id = fname[4:-5]
             if os.path.exists(os.path.join(txn_dir, f"txn-{txn_id}.done")):
                 continue
-            with open(os.path.join(txn_dir, fname)) as f:
-                manifest = json.load(f)
+            try:
+                with open(os.path.join(txn_dir, fname)) as f:
+                    manifest = json.load(f)
+            except FileNotFoundError:
+                continue  # done, and pruned by a roll-forward of this loop
             try:
                 published = _roll_forward(spark, manifest, txn_dir)
             except ConcurrentCommitError:
@@ -213,32 +219,41 @@ def consistent_snapshot_ids(txn_dir: str) -> dict[str, int]:
     the atomic outcome even while a newer transaction is mid-publish
     (the window the module docstring's isolation caveat describes).
     Tables never written by any done transaction are absent; read those at
-    current. Metadata-only: two small JSON reads, no Spark jobs."""
-    if not os.path.isdir(txn_dir):
+    current. Metadata-only: small JSON reads, no Spark jobs."""
+    published = [m for _at, _id, status, m in _done(txn_dir) if status != "aborted"]
+    if not published:
         return {}
-    best: tuple[float, dict] | None = None
+    return {e["location"]: e["sid"] for e in published[-1]["entries"] if e.get("staged")}
+
+
+def _done(txn_dir: str) -> list[tuple[float, str, str, dict]]:
+    """``(decided_at, txn_id, status, manifest)`` of every transaction in
+    ``txn_dir`` that carries a ``.done`` marker, oldest first."""
+    out = []
+    if not os.path.isdir(txn_dir):
+        return out
     for fname in os.listdir(txn_dir):
         if not (fname.startswith("txn-") and fname.endswith(".json")):
             continue
         txn_id = fname[4:-5]
-        done_path = os.path.join(txn_dir, f"txn-{txn_id}.done")
-        if not os.path.exists(done_path):
-            continue
-        with open(done_path) as f:
-            if f.read().strip() == "aborted":
-                continue
-        with open(os.path.join(txn_dir, fname)) as f:
-            manifest = json.load(f)
-        if best is None or manifest["decided_at"] > best[0]:
-            best = (manifest["decided_at"], manifest)
-    if best is None:
-        return {}
-    return {
-        e["location"]: e["sid"] for e in best[1]["entries"] if e.get("staged")
-    }
+        try:
+            with open(os.path.join(txn_dir, f"txn-{txn_id}.done")) as f:
+                status = f.read().strip()
+            with open(os.path.join(txn_dir, fname)) as f:
+                manifest = json.load(f)
+        except FileNotFoundError:
+            continue  # not done yet, or pruned by a concurrent _mark_done
+        out.append((manifest["decided_at"], txn_id, status, manifest))
+    return sorted(out, key=lambda d: d[:2])
 
 
 def _mark_done(txn_dir: str, txn_id: str, status: str = "done") -> None:
+    """Retire a manifest with its ``.done`` marker, then bound ``txn_dir``:
+    delete the done manifests, and then their markers, decided before the
+    newest done non-aborted one (the one ``consistent_snapshot_ids``
+    reads). A manifest without a marker is never deleted — ``recover``
+    still has to finish it — so the manifest goes first: a crash between
+    the two deletes leaves only a marker, which ``recover`` ignores."""
     path = os.path.join(txn_dir, f"txn-{txn_id}.done")
     try:
         fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -246,21 +261,26 @@ def _mark_done(txn_dir: str, txn_id: str, status: str = "done") -> None:
             f.write(status)
     except FileExistsError:
         pass
+    done = _done(txn_dir)
+    published = [at for at, _id, st, _m in done if st != "aborted"]
+    for at, old_id, _st, _m in done:
+        if published and at < published[-1]:
+            for ext in ("json", "done"):
+                try:
+                    os.remove(os.path.join(txn_dir, f"txn-{old_id}.{ext}"))
+                except FileNotFoundError:
+                    pass
 
 
-def _entry_published(spark: SparkSession, e: dict) -> bool:
+def _entry_published(t: LakeTable, e: dict) -> bool:
     """True when the entry's OWN snapshot is already committed on the table:
-    v<sid>.json exists AND carries the staged snapshot's fingerprint — bare
-    existence is not enough (a foreign commit can land at the same sid, and
-    the staged file being gone alone is ambiguous: discard removes it
-    too)."""
-    path = os.path.join(e["location"], "_meta", f"v{e['sid']:08d}.json")
-    if not os.path.exists(path):
-        return False
+    snapshot ``sid`` exists AND carries the staged snapshot's fingerprint —
+    bare existence is not enough (a foreign commit can land at the same
+    sid, and the staged file being gone alone is ambiguous: discard removes
+    it too)."""
     try:
-        with open(path) as f:
-            committed = json.load(f)
-    except (json.JSONDecodeError, OSError):
+        committed = t._load_snapshot(e["sid"])
+    except (ValueError, OSError):  # not committed, or unreadable
         return False
     return committed.get("committed_at") == e.get("fingerprint")
 
@@ -274,7 +294,7 @@ def _roll_forward(spark: SparkSession, manifest: dict, txn_dir: str) -> list[dic
     done_so_far: list[dict] = []
     for e in entries:
         t = LakeTable(spark, e["location"])
-        if _entry_published(spark, e):
+        if _entry_published(t, e):
             outcomes.append({"location": e["location"], "snapshot_id": e["sid"]})
             done_so_far.append(e)
             continue

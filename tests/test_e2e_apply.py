@@ -771,7 +771,7 @@ def test_engine_purge_tombstones_whole_lineage(spark, tmp_path):
         assert got[row["repo"]] == (row["n_files"], row["total_bytes"]), row["repo"]
     # idempotent replay of the purge epoch
     assert eng.purge_where(table, f"repo = '{victim}'", epoch=9000) == {
-        "epoch": 9000, "applied": False, "quarantine_swept": 0,
+        "epoch": 9000, "applied": False, "quarantine_swept": 0, "rejects_swept": 0,
     }
 
 
@@ -817,7 +817,7 @@ def test_engine_purge_resumes_after_partial_commit(spark, tmp_path):
     assert r["derived_applied"] == ["file_stats"]
     assert stats_t.snapshot().filter(F.col("repo") == victim).count() == 0
     assert eng.purge_where(table, f"repo = '{victim}'", epoch=9000) == {
-        "epoch": 9000, "applied": False, "quarantine_swept": 0,
+        "epoch": 9000, "applied": False, "quarantine_swept": 0, "rejects_swept": 0,
     }
 
 
@@ -1497,6 +1497,44 @@ def test_purge_and_redact_sweep_quarantine_sidecar(spark, tmp_path):
     assert {g["content"] for g in got} == {"<REDACTED>"}
     import hashlib
 
+    assert {g["content_sha256"] for g in got} == {
+        hashlib.sha256(b"<REDACTED>").hexdigest()
+    }
+
+
+def test_purge_and_redact_sweep_rejects_sidecar(spark, tmp_path):
+    """Compliance reaches the dead-letter sidecar: rejected events keep
+    their full WAL envelope (content included) under _rejects, so a purge
+    must remove a repo's rejected events and a redact must rewrite them,
+    with content_sha256 recomputed — otherwise reprocess_rejects would
+    re-drive the purged payloads."""
+    import hashlib
+
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
+    table = eng.snapshot_table("repo_files")
+    eng.apply_epoch(change_events(spark, 4000), table, epoch=0)
+    per_repo = [
+        (r["repo"], r["count"])
+        for r in eng.rejects().filter(F.col("repo").isNotNull())
+        .groupBy("repo").count().orderBy(F.desc("count"), "repo").limit(2).collect()
+    ]
+    assert len(per_repo) == 2, "the generator must reject events of two repos"
+    (purged, n_purged), (redacted, n_redacted) = per_repo
+
+    p = eng.purge_where(table, f"repo = '{purged}'", epoch=1)
+    assert p["rejects_swept"] == n_purged
+    assert eng.rejects().filter(F.col("repo") == purged).count() == 0
+    assert table.snapshot().filter(F.col("repo") == purged).count() == 0
+    # idempotent re-run: the sweep finds nothing left
+    assert eng.purge_where(table, f"repo = '{purged}'", epoch=1)["rejects_swept"] == 0
+
+    r = eng.redact_where(
+        table, f"repo = '{redacted}'", {"content": "'<REDACTED>'"}, epoch=2
+    )
+    assert r["rejects_swept"] == n_redacted
+    got = eng.rejects().filter(F.col("repo") == redacted).collect()
+    assert len(got) == n_redacted
+    assert {g["content"] for g in got} == {"<REDACTED>"}
     assert {g["content_sha256"] for g in got} == {
         hashlib.sha256(b"<REDACTED>").hexdigest()
     }

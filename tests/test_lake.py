@@ -394,6 +394,135 @@ def test_remove_orphans_age_and_inflight_guards(spark, tmp_path):
     assert len(left) == 1 and left[0].startswith("s00000099")
 
 
+def _model_refs(manifest):
+    """The data files a manifest references: its base and delta files."""
+    refs = {f for e in manifest["buckets"].values() for f in e["files"]}
+    for d in manifest.get("deltas", []):
+        refs |= {f for fs in d["files"].values() for f in fs}
+    return refs
+
+
+def _disk_state(t):
+    """(parquet files under the data dir, relative; entries of _meta)."""
+    import os
+
+    files = {
+        os.path.relpath(os.path.join(d, f), t.data_dir)
+        for d, _dirs, fs in os.walk(t.data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    return files, set(os.listdir(t.meta_dir))
+
+
+def test_sweeps_keep_exactly_what_retained_manifests_reference(spark, tmp_path):
+    """Reachability model for every path that deletes table files. After
+    expire_snapshots, remove_orphans(0) and discard_staged, the parquet
+    files on disk are exactly the files the retained manifests reference
+    (count window, tags, the branch pin, pending stages) plus the files of
+    in-flight roots above current, and _meta holds exactly the retained
+    manifests."""
+    import os
+
+    t = _mk(spark, tmp_path, "model")
+    merge = lambda e, rows, **kw: t.merge(_changes(spark, rows), epoch=e, **kw)
+    merge(0, [("a", "1", 1, 1, "U"), ("b", "2", 2, 2, "U")])
+    merge(1, [("a", "3", 3, 3, "U"), ("c", "4", 4, 4, "U")])
+    t.create_tag("keep")
+    t.compact()
+    merge(2, [("b", None, None, 5, "D")])
+    pending = merge(3, [("d", "5", 5, 6, "U")], publish=False)["staged"]
+    doomed = merge(4, [("e", "6", 6, 7, "U")], publish=False)["staged"]
+    b = t.branch(str(tmp_path / "br"), name="audit")  # pins current
+    merge(5, [("a", "7", 7, 8, "U")])
+    t.compact()
+    merge(6, [("f", "8", 8, 9, "U")])
+    cur = t.current_snapshot()["snapshot_id"]
+
+    def plant(root):
+        d = os.path.join(t.data_dir, root, "__bucket=0")
+        os.makedirs(d, exist_ok=True)
+        spark.createDataFrame([(1,)], "x int").toPandas().to_parquet(
+            os.path.join(d, "part-crashed.parquet")
+        )
+        return os.path.join(root, "__bucket=0", "part-crashed.parquet")
+
+    plant("s00000001-0badcafe")  # a crashed writer below current
+    inflight = {plant(f"d{cur + 3:08d}-0badcafe")}  # and one in flight
+
+    committed = {s: t._load_snapshot(s) for s in range(cur + 1)}
+    stages = {tok: t._load_staged(tok) for tok in (pending, doomed)}
+
+    def check(kept, staged):
+        files, meta = _disk_state(t)
+        want = set(inflight)
+        for m in [committed[s] for s in kept] + [stages[k] for k in staged]:
+            want |= _model_refs(m)
+        assert files == want
+        assert meta == {"current", "tags.json"} | {f"v{s:08d}.json" for s in kept} | {
+            f"staged-{k}.json" for k in staged
+        }
+
+    ancestors = [h["snapshot_id"] for h in t.history()]
+    kept = set(ancestors[:2]) | set(t.tags().values())
+    assert len(kept) == 4  # current, its parent, the tag, the branch pin
+    t.expire_snapshots(keep_last=2)
+    check(kept, {pending, doomed})
+
+    plant(f"d{cur:08d}-0badcafe")  # a loser of the last commit's race
+    assert t.remove_orphans(older_than_s=0)["removed_files"] == 1
+    check(kept, {pending, doomed})
+
+    t.discard_staged(doomed)
+    check(kept, {pending})
+
+    # every retained state still reads
+    assert {r["k"] for r in t.snapshot(as_of="keep").collect()} == {"a", "b", "c"}
+    assert {r["k"] for r in t.snapshot(staged=pending).collect()} == {"a", "c", "d"}
+    assert {r["k"] for r in b.snapshot().collect()} == {"a", "c"}
+    assert {r["k"]: r["v"] for r in t.snapshot().collect()} == {"a": "7", "c": "4", "f": "8"}
+
+
+@pytest.mark.parametrize("reclaim", ["expire_snapshots", "remove_orphans"])
+def test_expire_crash_after_manifests_leaves_only_orphans(spark, tmp_path, monkeypatch, reclaim):
+    """The sweep deletes expired manifests before their files. A crash in
+    the file-deletion step therefore leaves a readable table whose leftover
+    files are plain orphans, and the next sweep reclaims every one."""
+    import os
+
+    t = _mk(spark, tmp_path, "crash")
+    for e in range(3):
+        t.merge(_changes(spark, [("a", str(e), e, e, "U"), (f"k{e}", "x", e, e, "U")]), epoch=e)
+    t.compact()
+    before = sorted(tuple(r) for r in t.snapshot().collect())
+    cur = t.current_snapshot()["snapshot_id"]
+
+    real_remove = os.remove
+
+    def crash(path, *a, **kw):
+        if str(path).endswith(".parquet"):
+            raise RuntimeError("simulated crash while deleting files")
+        return real_remove(path, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "remove", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            t.expire_snapshots(keep_last=1)
+    # the expired manifests are gone, the current one still reads
+    assert {f for f in os.listdir(t.meta_dir) if f.endswith(".json")} == {f"v{cur:08d}.json"}
+    fresh = LakeTable(spark, t.location)
+    assert sorted(tuple(r) for r in fresh.snapshot().collect()) == before
+    assert t.orphan_files().count() > 0
+
+    if reclaim == "expire_snapshots":
+        t.expire_snapshots(keep_last=1)
+    else:
+        t.remove_orphans(older_than_s=0)
+    assert t.orphan_files().count() == 0
+    assert _disk_state(t)[0] == _model_refs(t.current_snapshot())
+    assert sorted(tuple(r) for r in t.snapshot().collect()) == before
+
+
 def test_zorder_compaction_prunes_on_every_clustered_column(spark, tmp_path):
     """compact(zorder_cols=...) must yield files whose raw min/max stats
     prune on EVERY clustered column — linear sort only ever helps the

@@ -237,6 +237,49 @@ def _jobs_in_group(sc, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_vacuum_paths_run_no_jobs(spark, tmp_path, monkeypatch):
+    """The vacuum paths are metadata sweeps: remove_orphans,
+    expire_snapshots and the CLI vacuum dry run launch no Spark job."""
+    import contextlib
+    import io
+    import json
+    import os
+
+    from data_exchange_hl7_spark.__main__ import main
+    from data_exchange_hl7_spark.lake.table import LakeTable
+
+    sc = spark.sparkContext
+    wh = str(tmp_path / "wh")
+    t = LakeTable.create(
+        spark, os.path.join(wh, "t"), [("k", "string"), ("v", "string"), ("lsn", "bigint")],
+        ["k"], n_buckets=4, order_col="lsn",
+    )
+    cols = "k string, v string, lsn long, __op string"
+    for e in range(2):
+        t.merge(spark.createDataFrame([(f"k{i}", str(e), e, "U") for i in range(8)], cols), epoch=e)
+    t.compact()
+    d = os.path.join(t.data_dir, "s00000001-deadbeef", "__bucket=0")
+    os.makedirs(d)
+    with open(os.path.join(d, "part-orphan.parquet"), "wb") as f:
+        f.write(b"PAR1 not a real file PAR1")
+
+    # the CLI's build_session reads SPARK_GRAFT_CPUS; pin the test session's
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        rc, n = _jobs_in_group(
+            sc, "vacuum_dry_run", lambda: main(["vacuum", "--warehouse", wh, "--table", "t"])
+        )
+    report = json.loads(out.getvalue().splitlines()[-1])
+    assert rc == 0 and len(report["orphans"]) == 1
+    assert n == 0, f"vacuum dry run launched {n} jobs"
+
+    r, n = _jobs_in_group(sc, "remove_orphans", lambda: t.remove_orphans(older_than_s=0))
+    assert r["removed_files"] == 1 and n == 0, f"remove_orphans launched {n} jobs"
+    r, n = _jobs_in_group(sc, "expire", lambda: t.expire_snapshots(keep_last=1))
+    assert r["removed_files"] > 0 and n == 0, f"expire_snapshots launched {n} jobs"
+
+
 def test_table_reads_plan_without_jobs(spark, tmp_path):
     """Table reads take their schema from the manifest, so building a MoR
     snapshot or lookup frame (base + one delta layer) launches no job. The

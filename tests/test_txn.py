@@ -359,3 +359,48 @@ def test_publish_adopts_branch_quarantine(spark, tmp_path):
     assert {0, 1} <= after
     n_e1 = table.quarantine().filter(SF.col("epoch") == 1).count()
     assert n_e1 == r["quarantined"]
+
+
+def test_atomic_epochs_keep_txn_dir_bounded(spark, tmp_path):
+    """Every atomic epoch decides one manifest; once a newer transaction is
+    done, the older done manifests and their markers are deleted, so the
+    per-epoch recover scan stays O(1). The survivor is the one
+    consistent_snapshot_ids reads."""
+    import os
+
+    from data_exchange_hl7_spark.lake.txn import consistent_snapshot_ids
+
+    eng, table, stats_t, events = _engine_pair(spark, tmp_path)
+    for e in range(5):
+        part = events.filter((F.col("lsn") >= 600 * e) & (F.col("lsn") < 600 * (e + 1)))
+        assert eng.apply_epoch(part, table, epoch=e, collect_metrics=False, atomic=True)["applied"]
+    txn_dir = str(tmp_path / "wh" / "_txn")
+    names = sorted(os.listdir(txn_dir))
+    assert len(names) == 2 and names[0][:-5] == names[1][:-5], names
+    assert MultiTableTransaction.recover(spark, txn_dir) == []
+    assert consistent_snapshot_ids(txn_dir) == {
+        table.location: table.current_snapshot()["snapshot_id"],
+        stats_t.location: stats_t.current_snapshot()["snapshot_id"],
+    }
+
+
+def test_txn_prune_never_deletes_an_unfinished_manifest(spark, tmp_path):
+    """A decided manifest without a .done marker survives every prune: it
+    is what recover still has to finish."""
+    import os
+
+    a, b = _pair(spark, tmp_path)
+    txn_dir = str(tmp_path / "_txn")
+    stuck = MultiTableTransaction(spark, txn_dir)
+    stuck.stage(a, _ch(spark, [("k2", "a1", 2, "U")]), epoch=1)
+    stuck._decide()  # crash right after the commit point
+    for e in (1, 2):
+        txn = MultiTableTransaction(spark, txn_dir)
+        txn.stage(b, _ch(spark, [("k1", f"b{e}", 1 + e, "U")]), epoch=e)
+        txn.commit()
+    names = set(os.listdir(txn_dir))
+    assert f"txn-{stuck.txn_id}.json" in names and len(names) == 3, names
+    out = MultiTableTransaction.recover(spark, txn_dir)
+    assert [o["txn_id"] for o in out] == [stuck.txn_id] and out[0]["published"]
+    assert {r["k"] for r in a.snapshot().collect()} == {"k1", "k2"}
+    assert len(os.listdir(txn_dir)) == 2
