@@ -17,14 +17,17 @@ bucket-rewrite are the only wide stages, both keyed on (repo, path).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_exchange_hl7_spark.lake.table import LakeTable
+from data_exchange_hl7_spark.lake.table import _WIDEN_OK, LakeTable
 from data_exchange_hl7_spark.operators import dedup as dedup_ops
 from data_exchange_hl7_spark.operators import validate as validate_ops
 from data_exchange_hl7_spark.operators.normalize import clean_content
@@ -1595,7 +1598,9 @@ class Engine:
 
         Raises ``ValueError`` naming the violated CHECK constraints, before
         any write, when a rewritten row breaks one (Delta's ``UPDATE``
-        rule): quarantining it would keep the unredacted row live."""
+        rule): quarantining it would keep the unredacted row live. Also
+        raises ``ValueError``, before any write, when ``set_exprs`` names a
+        column the table lacks: the merge would drop it silently."""
         return self._purge_or_redact(
             table, predicate, epoch, set_exprs, epoch_info, main_only=main_only
         )
@@ -1703,6 +1708,9 @@ class Engine:
     ) -> dict:
         if not main_only:
             self._require_registered(table_name(table), "purge/redact")
+        if set_exprs is not None:
+            # before the resume shortcut too: its sidecar sweep writes
+            table.require_columns(set_exprs, "redact_where")
         pending = self._pending(table, epoch)
         main_done = str(epoch) in table.committed_epochs()
         if main_done and not pending:
@@ -1729,19 +1737,7 @@ class Engine:
             if set_exprs is None:
                 changes = old_rows.withColumn("__op", F.lit("D"))
             else:
-                changes = old_rows
-                for col, expr in set_exprs.items():
-                    changes = changes.withColumn(col, F.expr(expr))
-                if "content" in set_exprs:
-                    fields = {f["name"]: f["type"] for f in table.schema_fields()}
-                    body = F.coalesce(F.col("content"), F.lit(""))
-                    if "content_sha256" in fields and "content_sha256" not in set_exprs:
-                        changes = changes.withColumn("content_sha256", F.sha2(body, 256))
-                    if "size_bytes" in fields and "size_bytes" not in set_exprs:
-                        changes = changes.withColumn(
-                            "size_bytes", F.length(body).cast(fields["size_bytes"])
-                        )
-                changes = changes.withColumn("__op", F.lit("U"))
+                changes = _rewrite(old_rows, set_exprs).withColumn("__op", F.lit("U"))
                 # Delta's rule for UPDATE: a rewrite that breaks a CHECK
                 # constraint raises BEFORE any write. Quarantining it would
                 # leave the UNREDACTED row live in the main table while the
@@ -1856,60 +1852,73 @@ class Engine:
         self, root: str, predicate: str, set_exprs: dict[str, str] | None
     ) -> int:
         """Purge (remove) or redact (rewrite) rows matching ``predicate``
-        in every ``epoch=N`` dir under ``root``. Rows where the predicate is
+        in the ``epoch=N`` dirs under ``root``. Rows where the predicate is
         NULL are kept (a sweep must never remove rows it cannot prove
-        match). When ``content`` is redacted, ``content_sha256`` and
-        ``size_bytes`` are recomputed where the sidecar has them. Rewrites
-        go through a tmp dir + atomic rename per epoch; the whole sweep is
-        idempotent. Returns the number of rows swept."""
+        match); a column an epoch lacks reads as NULL there, as it does in
+        the table. One read of every dir and one aggregate of each epoch's
+        matching and total rows decide the sweep, so its job count does not
+        grow with the number of epochs; only matching epochs are rewritten,
+        each keeping its own columns and types, through a tmp dir + atomic
+        rename. The whole sweep is idempotent. Returns the rows swept."""
+        import pyarrow.parquet as pq
         from pyspark.errors import AnalysisException
+        from pyspark.sql.types import StructType
 
-        if not os.path.isdir(root):
+        dirs, schemas = {}, {}
+        for d in os.listdir(root) if os.path.isdir(root) else []:
+            m = re.fullmatch(r"epoch=(-?\d+)", d)
+            files = sorted(glob.glob(os.path.join(root, d, "*.parquet"))) if m else []
+            if files:
+                # one write per dir, so one footer holds the dir's Spark
+                # schema: read locally, with no schema-inference job
+                meta = pq.read_schema(files[0]).metadata[_SPARK_SCHEMA_KEY]
+                dirs[int(m[1])] = os.path.join(root, d)
+                schemas[int(m[1])] = StructType.fromJson(json.loads(meta))
+        if not dirs:
+            return 0
+        # the union of the dirs' columns, an evolved column at its widened
+        # type (Spark's mergeSchema refuses int + bigint)
+        fields = {}
+        for f in (f for s in schemas.values() for f in s.fields):
+            prev = fields.get(f.name)
+            if prev is None or (
+                prev.dataType.simpleString(), f.dataType.simpleString()
+            ) in _WIDEN_OK:
+                fields[f.name] = f
+        sdf = (
+            self.spark.read.schema(StructType(list(fields.values())))
+            .option("basePath", root)
+            .parquet(*dirs.values())
+        )
+        hit = F.coalesce(F.expr(predicate), F.lit(False))
+        try:
+            counts = (
+                sdf.groupBy("epoch")
+                .agg(F.count(F.lit(1)).alias("n"), F.count(F.when(hit, 1)).alias("hit"))
+                .collect()
+            )
+        except AnalysisException:
+            # predicate over columns no epoch has: nothing it can match
             return 0
         swept = 0
-        for d in sorted(os.listdir(root)):
-            if not d.startswith("epoch="):
-                continue
-            qdir = os.path.join(root, d)
-            qdf = self.spark.read.parquet(qdir)
-            try:
-                n = qdf.filter(predicate).count()
-            except AnalysisException:
-                # predicate over columns the sidecar lacks (evolved away):
-                # nothing it can match there
-                continue
-            if n == 0:
-                continue
-            if set_exprs is None and qdf.count() == n:
+        for r in (r for r in counts if r["hit"]):
+            qdir = dirs[r["epoch"]]
+            swept += r["hit"]
+            if set_exprs is None and r["hit"] == r["n"]:
                 # every row matched a purge: drop the epoch dir outright
                 # (an empty rewrite would leave a fileless dir)
                 shutil.rmtree(qdir)
-                swept += n
                 continue
-            keep = qdf.filter(f"NOT coalesce(({predicate}), false)")
-            if set_exprs is None:
-                new = keep
-            else:
-                upd = qdf.filter(predicate)
-                for col, expr in set_exprs.items():
-                    if col in qdf.columns:
-                        upd = upd.withColumn(col, F.expr(expr))
-                if "content" in set_exprs:
-                    body = F.coalesce(F.col("content"), F.lit(""))
-                    if "content_sha256" in qdf.columns and "content_sha256" not in set_exprs:
-                        upd = upd.withColumn("content_sha256", F.sha2(body, 256))
-                    if "size_bytes" in qdf.columns and "size_bytes" not in set_exprs:
-                        upd = upd.withColumn(
-                            "size_bytes",
-                            F.length(body).cast(qdf.schema["size_bytes"].dataType),
-                        )
-                new = keep.unionByName(upd)
+            rows = sdf.filter(F.col("epoch") == r["epoch"])
+            new = rows.filter(~hit)
+            if set_exprs is not None:
+                new = new.unionByName(_rewrite(rows.filter(hit), set_exprs))
+            own = [F.col(f.name).cast(f.dataType) for f in schemas[r["epoch"]].fields]
             tmp = f"{qdir}.tmp-sweep"
             shutil.rmtree(tmp, ignore_errors=True)
-            new.repartition(8).write.parquet(tmp)
+            new.select(*own).repartition(8).write.parquet(tmp)
             shutil.rmtree(qdir)
             os.rename(tmp, qdir)
-            swept += n
         return swept
 
     # ------------------------------------------------- branch publish
@@ -2210,6 +2219,30 @@ class Engine:
             ),
         )
         return self.apply_epoch(events, table, epoch=epoch)
+
+
+# the footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _rewrite(df: DataFrame, set_exprs: dict[str, str]) -> DataFrame:
+    """``df`` with ``set_exprs`` applied to the columns it has. When
+    ``content`` is rewritten, ``content_sha256`` and ``size_bytes`` are
+    recomputed where ``df`` has them (typed from its own schema) unless
+    set explicitly, so the table invariant holds in the redacted rows of
+    the main table and of its sidecars alike."""
+    for col, expr in set_exprs.items():
+        if col in df.columns:
+            df = df.withColumn(col, F.expr(expr))
+    if "content" in set_exprs and "content" in df.columns:
+        body = F.coalesce(F.col("content"), F.lit(""))
+        if "content_sha256" in df.columns and "content_sha256" not in set_exprs:
+            df = df.withColumn("content_sha256", F.sha2(body, 256))
+        if "size_bytes" in df.columns and "size_bytes" not in set_exprs:
+            df = df.withColumn(
+                "size_bytes", F.length(body).cast(df.schema["size_bytes"].dataType)
+            )
+    return df
 
 
 def table_name(table: LakeTable) -> str:

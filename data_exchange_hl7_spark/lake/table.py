@@ -1002,6 +1002,14 @@ class LakeTable:
         snap = snap or self.current_snapshot()
         return snap["schemas"][str(snap["schema_version"])]
 
+    def require_columns(self, cols, op: str) -> None:
+        """Raise ``ValueError`` naming the ``cols`` the current schema
+        lacks. A merge keeps only schema columns, so a write that sets an
+        unknown (say, misspelt) column would otherwise drop it silently."""
+        unknown = sorted(set(cols) - {f["name"] for f in self.schema_fields()})
+        if unknown:
+            raise ValueError(f"{op}: no column(s) {unknown} in the schema of {self.location}")
+
     def committed_epochs(self, snap: dict | None = None) -> dict[str, dict]:
         snap = snap or self.current_snapshot()
         return snap["properties"]["epochs"]
@@ -2128,8 +2136,10 @@ class LakeTable:
         redact rather than remove (e.g. scrub secrets from content while
         keeping the file row). Same compliance posture: logical until
         ``compact()`` + ``expire_snapshots()``. Like ``delete_where``,
-        refused on additive tables (see its docstring)."""
+        refused on additive tables (see its docstring). ``set_exprs`` naming
+        a column the schema lacks raises ``ValueError`` before any write."""
         self._reject_additive_row_ops("update_where")
+        self.require_columns(set_exprs, "update_where")
         rows = self.snapshot().filter(predicate)
         for col, expr in set_exprs.items():
             rows = rows.withColumn(col, F.expr(expr))

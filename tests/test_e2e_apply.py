@@ -8,6 +8,8 @@ sha256 + evolved-column equality — and re-running committed epochs must be a
 no-op (exactly-once).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1458,35 +1460,61 @@ def test_reprocess_quarantine_redrive(spark, tmp_path):
 def test_purge_and_redact_sweep_quarantine_sidecar(spark, tmp_path):
     """Compliance reaches the quarantine sidecar: a purge removes matching
     diverted payloads; a redact rewrites them (content invariants
-    recomputed); the sweep is idempotent on re-run."""
+    recomputed); the sweep is idempotent on re-run. Quarantine dirs written
+    before and after add_column / widen_column are swept alike, and each
+    keeps its own columns and types."""
     from data_exchange_hl7_spark.engine import Engine
 
     eng = Engine(spark, str(tmp_path / "wh"), n_buckets=8)
     table = eng.snapshot_table("repo_files")
     table.add_check_constraint("size_mod3", "size_bytes % 3 <> 0")
-    events = change_events(spark, 2000)
-    r = eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
+    events = change_events(spark, 4000)
+    r = eng.apply_epoch(events.filter("lsn < 2000"), table, epoch=0, collect_metrics=False)
     assert r["quarantined"] > 0
-    victim = table.quarantine().select("repo").first()["repo"]
+    # evolve through the engine's DDL path, as the WAL's SCHEMA_* events do
+    eng._apply_schema_events(
+        table,
+        [
+            {"op": "SCHEMA_ADD", "schema_field": "note", "lsn": 1999},
+            {"op": "SCHEMA_WIDEN", "schema_field": "size_bytes", "lsn": 1999},
+        ],
+    )
+    r = eng.apply_epoch(events.filter("lsn >= 2000"), table, epoch=1, collect_metrics=False)
+    assert r["quarantined"] > 0
+    qroot = os.path.join(table.location, "_quarantine")
+
+    def dir_types(e):
+        schema = spark.read.parquet(f"{qroot}/epoch={e}").schema
+        return {f.name: f.dataType.simpleString() for f in schema}
+
+    assert "note" not in dir_types(0) and dir_types(1)["note"] == "string"
+    assert (dir_types(0)["size_bytes"], dir_types(1)["size_bytes"]) == ("int", "bigint")
+    q_repos = [
+        {x["repo"] for x in spark.read.parquet(f"{qroot}/epoch={e}").select("repo").collect()}
+        for e in (0, 1)
+    ]
+    victim = sorted(q_repos[0] & q_repos[1])[0]
     n_victim_q = table.quarantine().filter(F.col("repo") == victim).count()
     assert n_victim_q > 0
 
-    p = eng.purge_where(table, f"repo = '{victim}'", epoch=1)
+    p = eng.purge_where(table, f"repo = '{victim}'", epoch=2)
     assert p["quarantine_swept"] == n_victim_q
     assert table.quarantine().filter(F.col("repo") == victim).count() == 0
     # idempotent re-run (epoch committed): merges no-op, sweep finds nothing
-    p2 = eng.purge_where(table, f"repo = '{victim}'", epoch=1)
+    p2 = eng.purge_where(table, f"repo = '{victim}'", epoch=2)
     assert not p2["applied"] and p2["quarantine_swept"] == 0
+    assert "note" not in dir_types(0) and dir_types(1)["note"] == "string"
+    assert (dir_types(0)["size_bytes"], dir_types(1)["size_bytes"]) == ("int", "bigint")
 
     # redact: rewrite content in the sidecar, sha/size recomputed (the
     # replacement's 10 bytes satisfy size_mod3: a rewrite that breaks a
     # constraint is refused before any write)
-    q0 = table.quarantine()
-    target = q0.select("repo").distinct().orderBy("repo").first()["repo"]
+    target = sorted((q_repos[0] & q_repos[1]) - {victim})[0]
     rr = eng.redact_where(
-        table, f"repo = '{target}'", {"content": "'<REDACTED>'"}, epoch=2
+        table, f"repo = '{target}'", {"content": "'<REDACTED>'"}, epoch=3
     )
     assert rr["quarantine_swept"] > 0
+    assert (dir_types(0)["size_bytes"], dir_types(1)["size_bytes"]) == ("int", "bigint")
     got = (
         table.quarantine()
         .filter(F.col("repo") == target)
@@ -1527,6 +1555,16 @@ def test_purge_and_redact_sweep_rejects_sidecar(spark, tmp_path):
     assert table.snapshot().filter(F.col("repo") == purged).count() == 0
     # idempotent re-run: the sweep finds nothing left
     assert eng.purge_where(table, f"repo = '{purged}'", epoch=1)["rejects_swept"] == 0
+
+    # a misspelt column is refused before any write, on the resume path of
+    # a committed epoch too (its sidecar sweep would rewrite reject rows)
+    sid = table.current_snapshot()["snapshot_id"]
+    for epoch in (2, 1):
+        with pytest.raises(ValueError, match="contnet"):
+            eng.redact_where(
+                table, f"repo = '{redacted}'", {"contnet": "'<REDACTED>'"}, epoch=epoch
+            )
+    assert table.current_snapshot()["snapshot_id"] == sid
 
     r = eng.redact_where(
         table, f"repo = '{redacted}'", {"content": "'<REDACTED>'"}, epoch=2

@@ -1156,6 +1156,11 @@ def test_update_where_redacts_in_place(spark, tmp_path):
     assert rows == {"a": "<REDACTED>", "b": "ok"}
     assert not t.update_where("v = 'secret'", {"v": "'<REDACTED>'"}, epoch=1)["applied"]
     assert {x["k"]: x["v"] for x in t.snapshot(as_of=pre_sid).collect()}["a"] == "secret"
+    # a misspelt column would vanish in the merge: refused before any write
+    sid = t.current_snapshot()["snapshot_id"]
+    with pytest.raises(ValueError, match="'vv'"):
+        t.update_where("v = 'ok'", {"vv": "'x'"}, epoch=2)
+    assert t.current_snapshot()["snapshot_id"] == sid
 
 
 def test_lookup_point_read_prunes_and_stays_correct(spark, tmp_path):

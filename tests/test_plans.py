@@ -280,6 +280,30 @@ def test_vacuum_paths_run_no_jobs(spark, tmp_path, monkeypatch):
     assert r["removed_files"] > 0 and n == 0, f"expire_snapshots launched {n} jobs"
 
 
+def test_sidecar_sweep_jobs_do_not_grow_with_epochs(spark, tmp_path):
+    """A purge/redact sweep reads a sidecar's epoch dirs in one frame and
+    decides from one aggregate, so a sweep that matches nothing runs the
+    same number of Spark jobs over 2 and over 6 epoch dirs."""
+    from data_exchange_hl7_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
+    jobs = []
+    for n_dirs in (2, 6):
+        root = tmp_path / f"sidecar{n_dirs}"
+        for e in range(n_dirs):
+            spark.createDataFrame(
+                [(f"r{e}", "x", e)], "repo string, content string, lsn bigint"
+            ).write.parquet(str(root / f"epoch={e}"))
+        swept, n = _jobs_in_group(
+            spark.sparkContext,
+            f"sweep{n_dirs}",
+            lambda: eng._sweep_sidecar(str(root), "repo = 'none'", None),  # noqa: B023
+        )
+        assert swept == 0
+        jobs.append(n)
+    assert jobs[0] == jobs[1], f"jobs at 2 and 6 epoch dirs: {jobs}"
+
+
 def test_table_reads_plan_without_jobs(spark, tmp_path):
     """Table reads take their schema from the manifest, so building a MoR
     snapshot or lookup frame (base + one delta layer) launches no job. The
