@@ -27,7 +27,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_exchange_hl7_spark.lake.table import _WIDEN_OK, LakeTable
+from data_exchange_hl7_spark.lake.table import _WIDEN_OK, LakeTable, _spark_type
 from data_exchange_hl7_spark.operators import dedup as dedup_ops
 from data_exchange_hl7_spark.operators import validate as validate_ops
 from data_exchange_hl7_spark.operators.normalize import clean_content
@@ -43,6 +43,8 @@ SNAPSHOT_SCHEMA = [
     ("last_lsn", "bigint"),
     ("last_ts", "timestamp"),
 ]
+# the snapshot columns the apply fills from the event envelope
+_ENVELOPE_COLS = {name for name, _ in SNAPSHOT_SCHEMA}
 KEY_COLS = ["repo", "path"]
 SCHEMA_OPS = ("SCHEMA_ADD", "SCHEMA_RENAME", "SCHEMA_WIDEN")
 
@@ -1365,14 +1367,16 @@ class Engine:
         # envelope rides along (a dead-letter queue is useless without the
         # payload — reprocess_rejects re-drives these after a fix); rejects
         # are ~1% of rows, so the duplicated content bytes stay negligible.
-        # repartition, NOT coalesce: this job is the one that materializes
+        # rebalance, NOT coalesce: this job is the one that materializes
         # the persisted validate output, and coalesce(8) would collapse that
         # whole upstream build to 8 tasks (measured 9s -> 34s per 1M-event
-        # epoch); the exchange only moves the ~1% rejected rows.
+        # epoch); the exchange only moves the ~1% rejected rows. AQE sizes
+        # it from those rows, so a small epoch writes its rejects in one
+        # task.
         if collect_metrics:
             rejected.withColumn(
                 "report_entries", validate_ops.report_entries_expr()
-            ).drop("error_count", "warning_count").repartition(8).write.mode(
+            ).drop("error_count", "warning_count").hint("rebalance").write.mode(
                 "overwrite"
             ).parquet(
                 os.path.join(self.warehouse, "_rejects", table_name(table), f"epoch={epoch}")
@@ -1423,9 +1427,7 @@ class Engine:
         # aligned with the storage layout
         snap = table.current_snapshot()
         flat = flat.withColumn("__bucket", table.bucket_expr())
-        latest = dedup_ops.latest_by_key_bucketed(
-            flat, KEY_COLS, order_cols, n_buckets=snap["n_buckets"]
-        )
+        latest = dedup_ops.latest_by_key_bucketed(flat, KEY_COLS, order_cols)
 
         # populate evolved extra columns from supporting_metadata
         schema_meta = snap["properties"].get("schema_meta", {})
@@ -1437,6 +1439,15 @@ class Engine:
                     F.try_element_at(F.col("supporting_metadata"), F.lit(m["src"])),
                 ).alias(fld)
             )
+        # a current-schema column with neither an envelope nor a schema_meta
+        # source (one added through LakeTable.add_column) reads NULL in the
+        # new rows: the merge selects every current-schema column
+        fields = table.schema_fields(snap)
+        extra_cols += [
+            F.lit(None).cast(_spark_type(f["type"])).alias(f["name"])
+            for f in fields
+            if f["name"] not in _ENVELOPE_COLS and f["name"] not in schema_meta
+        ]
 
         cleaned = F.coalesce(F.col("content"), F.lit(""))
         changes = latest.select(
@@ -1448,9 +1459,7 @@ class Engine:
             F.col("content"),
             F.sha2(cleaned, 256).alias("content_sha256"),
             F.length(cleaned).cast(
-                dict((f["name"], f["type"]) for f in table.schema_fields()).get(
-                    "size_bytes", "int"
-                )
+                dict((f["name"], f["type"]) for f in fields).get("size_bytes", "int")
             ).alias("size_bytes"),
             F.col("lsn").alias("last_lsn"),
             F.col("ts").alias("last_ts"),
@@ -1916,7 +1925,8 @@ class Engine:
             own = [F.col(f.name).cast(f.dataType) for f in schemas[r["epoch"]].fields]
             tmp = f"{qdir}.tmp-sweep"
             shutil.rmtree(tmp, ignore_errors=True)
-            new.select(*own).repartition(8).write.parquet(tmp)
+            # rebalance: AQE sizes the rewrite from the epoch's rows
+            new.select(*own).hint("rebalance").write.parquet(tmp)
             shutil.rmtree(qdir)
             os.rename(tmp, qdir)
         return swept

@@ -1041,6 +1041,8 @@ class LakeTable:
         df = self.spark.read.schema(T.StructType(read)).parquet(
             *[os.path.join(self.data_dir, p) for p in files]
         )
+        if file_sv == snap["schema_version"]:
+            return df  # the projection below would be the identity
         cols = []
         for f in cur:
             o = old.get(f["id"])
@@ -1603,11 +1605,17 @@ class LakeTable:
 
         Columns of the current schema are cast to their manifest types:
         ``_read_files`` reads every file with its schema version's manifest
-        schema, so a file's physical types must be the declared ones."""
+        schema, so a file's physical types must be the declared ones. Only
+        the columns whose type differs are cast; a frame that already has
+        the manifest types is written as it is."""
         types = {f["name"]: _spark_type(f["type"]) for f in self.schema_fields(snap)}
-        df = df.select(
-            *[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in df.columns]
-        )
+        recast = {
+            f.name: F.col(f.name).cast(types[f.name])
+            for f in df.schema.fields
+            if f.name in types and types[f.name] != f.dataType
+        }
+        if recast:
+            df = df.withColumns(recast)
         w = df.write
         for c in snap["key_cols"]:
             w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
@@ -2021,10 +2029,10 @@ class LakeTable:
         n_bad = bad.count()
         if n_bad:
             qkey = epoch if epoch is not None else -(snap["snapshot_id"] + 1)
-            # repartition, not coalesce: quarantined rows are usually a thin
+            # rebalance, not coalesce: quarantined rows are usually a thin
             # slice, but the exchange keeps the (already-persisted) upstream
-            # parallel and caps the sidecar at 8 files per epoch
-            bad.select(*qcols).repartition(8).write.mode("overwrite").parquet(
+            # parallel, and AQE sizes it from the quarantined rows
+            bad.select(*qcols).hint("rebalance").write.mode("overwrite").parquet(
                 os.path.join(self.location, "_quarantine", f"epoch={qkey}")
             )
         good = tagged.filter(F.size("__violated") == 0).drop("__violated")
@@ -2042,15 +2050,18 @@ class LakeTable:
         # repartition on the bucket key first: without it every upstream task
         # writes a sliver into every bucket dir (tasks x buckets tiny files);
         # with it each bucket lands in exactly one task -> one file per
-        # bucket. If the caller pre-partitioned on __bucket (the engine's
-        # bucketed dedup does), the write is shuffle-free.
+        # bucket. The exchange has no fixed count: AQE sizes it from the
+        # epoch's bytes (one task for a small epoch), and hash partitioning
+        # keeps a bucket whole in one task at any partition count. If the
+        # caller pre-partitioned on __bucket (the engine's bucketed dedup
+        # does), the write is shuffle-free.
         if "__bucket" in changes.columns:
             to_write = changes.select(*cur_names, "__op", "__bucket")
         else:
             to_write = (
                 changes.withColumn("__bucket", self._bucket_expr(snap))
                 .select(*cur_names, "__op", "__bucket")
-                .repartition(snap["n_buckets"], "__bucket")
+                .repartition("__bucket")
             )
         self._bucketed_writer(to_write, snap).parquet(
             os.path.join(self.data_dir, out_rel)
@@ -2301,7 +2312,9 @@ class LakeTable:
                     .drop("__z")
                 )
             else:
-                staged = staged.repartition(max(len(dirty), 1), "__bucket")
+                # AQE-sized: one file per bucket needs each bucket whole in
+                # one task, not one task per bucket
+                staged = staged.repartition("__bucket")
             self._bucketed_writer(staged, snap).parquet(
                 os.path.join(self.data_dir, out_rel)
             )
@@ -2374,7 +2387,7 @@ class LakeTable:
         resolved = self._resolve(df, snap, with_tombstones=True)  # keep D rows
         out_rel = self._staging_rel("d", snap["snapshot_id"] + 1)
         to_write = resolved.withColumn("__bucket", self._bucket_expr(snap)).repartition(
-            max(len(dirty), 1), "__bucket"
+            "__bucket"
         )
         self._bucketed_writer(to_write, snap).parquet(
             os.path.join(self.data_dir, out_rel)
@@ -2426,7 +2439,7 @@ class LakeTable:
                 *sort_cols,
             ).sortWithinPartitions("__bucket", *sort_cols)
         else:
-            staged = staged.repartition(new_n_buckets, "__bucket")
+            staged = staged.repartition("__bucket")
         self._bucketed_writer(staged, snap).parquet(
             os.path.join(self.data_dir, out_rel)
         )

@@ -71,6 +71,12 @@ def latest_by_key_bucketed(
 
     Halves the wide-stage bytes of every epoch; same total order semantics
     as latest_by_key (tested equivalent).
+
+    The exchange has no fixed count: AQE sizes it from the shuffle
+    statistics, so a small epoch runs one task rather than one per bucket,
+    and hash partitioning on ``bucket_col`` keeps each bucket whole in one
+    task at any partition count. ``n_buckets`` no longer sizes anything;
+    it is accepted and ignored.
     """
     order_cols = order_cols or DEFAULT_ORDER
     key_sig = F.concat_ws("\x1f", *[F.col(c) for c in key_cols])
@@ -78,7 +84,7 @@ def latest_by_key_bucketed(
         *[F.col(c) for c in key_cols], *_order_desc(order_cols)
     )
     out = (
-        df.repartition(n_buckets, bucket_col)
+        df.repartition(bucket_col)
         .withColumn("__prev_key", F.lag(key_sig).over(w))
         .filter(F.col("__prev_key").isNull() | (F.col("__prev_key") != key_sig))
         .drop("__prev_key")

@@ -46,6 +46,14 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the final stage of a cached plan too. The apply
+        # persists its deduped change frame, and without this Spark keeps
+        # a cached plan at spark.sql.shuffle.partitions partitions, so the
+        # merge write runs that many tasks for any epoch size, each paying
+        # ~30 ms of task set-up for a few hundred rows or none. Nothing
+        # here relies on a cache's partitioning: the bucketed writes sort
+        # by __bucket within each task and need no exchange after it.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for every pandas UDF / toPandas hop (input_hint: vectorized
         # pandas/Arrow UDFs only, no per-row Python).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1785,18 +1785,44 @@ def test_redact_refuses_constraint_violating_rewrite(spark, tmp_path):
     assert {x["content_sha256"] for x in derived} == {want}
 
 
+@pytest.mark.parametrize("n_buckets", [8, 32])
 def test_mor_apply_writes_one_delta_file_per_bucket(
-    spark, tmp_path, events, oracle_state
+    spark, tmp_path, events, oracle_state, n_buckets
 ):
     """The apply's dedup exchange leaves its frame partitioned by storage
-    bucket and hands the MoR merge a __bucket column saying so: at most one
-    file per bucket per delta layer, and the apply reaches the oracle state."""
-    n_buckets = 8
+    bucket and hands the MoR merge a __bucket column saying so: exactly one
+    file in each bucket directory of the delta layer, and the apply reaches
+    the oracle state. The exchange is AQE-sized, so at 32 buckets (more
+    than the session's shuffle partitions) a task writes several buckets,
+    each still whole."""
     eng = Engine(spark, str(tmp_path / "wh"), n_buckets=n_buckets)
     table = eng.snapshot_table("repo_files")
     r = eng.apply_epoch(events, table, epoch=0, collect_metrics=False)
     assert 0 < r["delta_files"] <= n_buckets
+    layer = table.current_snapshot()["deltas"][-1]["files"]
+    assert len(layer) == r["delta_files"]
+    for b, fs in layer.items():
+        d = os.path.join(table.data_dir, os.path.dirname(fs[0]))
+        assert os.path.basename(d) == f"__bucket={b}"
+        assert [f for f in os.listdir(d) if f.endswith(".parquet")] == [
+            os.path.basename(fs[0])
+        ]
     _assert_matches_oracle(table, oracle_state)
+
+
+def test_apply_fills_a_column_added_by_add_column_with_null(spark, tmp_path, events):
+    """A column added through LakeTable.add_column has no source in the
+    event envelope: later epochs still ingest, and their rows read it as
+    NULL."""
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=4)
+    table = eng.snapshot_table("repo_files")
+    eng.apply_epoch(events.filter(F.col("lsn") < 2000), table, epoch=0)
+    table.add_column("note", "string")
+    r = eng.apply_epoch(events.filter(F.col("lsn") >= 2000), table, epoch=1)
+    assert r["applied"]
+    snap = table.snapshot()
+    assert snap.filter(F.col("last_lsn") >= 2000).count() > 0
+    assert snap.filter(F.col("note").isNotNull()).count() == 0
 
 
 def test_engine_merge_into_writes_one_delta_file_per_bucket(spark, tmp_path, events):

@@ -109,7 +109,7 @@ def test_bucketed_equals_plain(spark):
     )
     bucketed = sorted(
         tuple(r)
-        for r in DD.latest_by_key_bucketed(df, ["k"], n_buckets=4)
+        for r in DD.latest_by_key_bucketed(df, ["k"])
         .select("k", "event_id")
         .collect()
     )

@@ -237,6 +237,53 @@ def _jobs_in_group(sc, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _final_stage_tasks(sc, group: str, fn):
+    """Run ``fn`` under a job group; return (result, tasks in the final
+    stage of the last job it launched). For a write that stage is the
+    write itself: AQE runs each shuffle's map side as a job of its own, and
+    a job's result stage has the highest id among its stages."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    st = sc.statusTracker()
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return out, st.getStageInfo(max(job.stageIds)).numTasks
+
+
+def test_bucketed_writes_are_sized_by_the_data(spark, tmp_path, monkeypatch):
+    """The exchanges in front of the bucketed writes have no fixed count, so
+    AQE sizes them from the data: a 1,000-event epoch at 16 buckets (the
+    test session has 8 shuffle partitions) writes its delta layer in one
+    task, although the apply persists the deduped frame before the write,
+    and the compaction that follows writes with fewer tasks than buckets.
+    Each bucket still lands in one file."""
+    from data_exchange_hl7_spark.datagen import change_events
+    from data_exchange_hl7_spark.engine import Engine
+    from data_exchange_hl7_spark.lake.table import LakeTable
+
+    sc = spark.sparkContext
+    eng = Engine(spark, str(tmp_path / "wh"), n_buckets=16)
+    t = eng.snapshot_table("repo_files")
+    merge_mor, tasks = LakeTable._merge_mor, []
+
+    def merge_in_group(self, *args, **kwargs):
+        out, n = _final_stage_tasks(sc, "apply_merge", lambda: merge_mor(self, *args, **kwargs))
+        tasks.append(n)
+        return out
+
+    monkeypatch.setattr(LakeTable, "_merge_mor", merge_in_group)
+    r = eng.apply_epoch(change_events(spark, 1000), t, epoch=0)
+    assert tasks == [1], f"the delta write ran {tasks} tasks"
+    assert r["delta_files"] == len(t.current_snapshot()["deltas"][0]["files"])
+
+    c, n = _final_stage_tasks(sc, "compact", t.compact)
+    assert c["compacted"] and n < 16, f"the compaction write ran {n} tasks"
+    assert all(len(e["files"]) == 1 for e in t.current_snapshot()["buckets"].values())
+
+
 def test_vacuum_paths_run_no_jobs(spark, tmp_path, monkeypatch):
     """The vacuum paths are metadata sweeps: remove_orphans,
     expire_snapshots and the CLI vacuum dry run launch no Spark job."""

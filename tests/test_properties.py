@@ -67,7 +67,6 @@ def test_latest_by_key_variants_match_python_oracle(spark, raw):
         df.withColumn("__bucket", F.pmod(F.xxhash64("k"), F.lit(3)).cast("int")),
         ["k"],
         ["lsn", "ts", "event_id"],
-        n_buckets=3,
     )
     got_b = sorted(
         tuple(r) for r in bucketed.select("k", "lsn", "ts", "event_id").collect()
